@@ -12,14 +12,22 @@ object Bench {
     // noop sink forces full evaluation of every output column —
     // count() would let Catalyst prune the projections under test
     // label jobs per query (guide §1.5) so event-log/UI time attributes
-    // to the query being timed; thread-local, cleared after each run
+    // to the query being timed; thread-local, cleared after each run.
+    // A failure is loud: its exception class and message go to stderr
+    // and into the record (first failure per query)
+    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     def run(name: String,
             fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Boolean =
       try {
         spark.sparkContext.setJobDescription(name)
         fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true
       }
-      catch { case _: Throwable => false }
+      catch { case e: Throwable =>
+        val what = s"${e.getClass.getName}: ${e.getMessage}"
+        System.err.println(s"[bench] $name failed: $what")
+        errors.getOrElseUpdate(name, what)
+        false
+      }
       finally spark.sparkContext.setJobDescription(null)
     // steady-state: one untimed warmup pass (JIT, codegen, parquet
     // footers), then timed passes in stable sorted order. Single-pass
@@ -53,7 +61,9 @@ object Bench {
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
+    val errs = org.json4s.jackson.JsonMethods.compact(org.json4s.jackson.JsonMethods.render(
+      org.json4s.JObject(errors.toList.map { case (k, v) => k -> org.json4s.JString(v) })))
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"sf":"$sfDir"}"""
     println(line)
     // the driver keeps only the LAST ~2000 chars of stdout; a 200+-query
     // map (~9 KB) can never fit, so the full line above arrives
@@ -77,7 +87,8 @@ object Bench {
       if (v < 0) "-1.0" else BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     val budget = 1600 // chars for the whole compact line (tail is ~2000 incl. sbt's epilogue)
     val head = s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":{"""
-    val tailPart = s"""},"sf":"$sfDir","n_queries":${results.size},"full":"$stamped"}"""
+    val tailPart = s"""},"sf":"$sfDir","n_queries":${results.size},""" +
+      s""""n_failed":${errors.size},"full":"$stamped"}"""
     val entries = results.sortBy(-_._2).iterator
       .map { case (k, v) => s"\"$k\":${ms(v)}" }
       .scanLeft(("", 0)) { case ((_, len), e) => (e, len + e.length + 1) }

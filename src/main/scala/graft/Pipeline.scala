@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{CdcMerge, Reconcile}
 import graft.sources.{FileLog, PricePaidCsv, Sinks}
@@ -57,36 +57,57 @@ object Pipeline {
   /** Durable data-decision: compare against the last ingested hash
     * read from the persisted file log (so the decision survives
     * process restarts, like the reference's Postgres file-log tables)
-    * and record this file's decision back. Returns the decision and
-    * the computed hash. */
+    * and record this file's decision back. One read of the log serves
+    * both the comparison and the append's first sequence-number guess.
+    * Returns the decision and the computed hash. */
   def decideAndLog(spark: SparkSession, logDir: String, fileName: String,
                    df: DataFrame): (String, String) = {
     val h = contentHash(df)
+    val log = FileLog.entries(spark, logDir)
     val decision =
-      if (shouldIngest(h, FileLog.latestIngestedHash(spark, logDir))) "archive"
+      if (shouldIngest(h, FileLog.latestIngestedHash(log))) "archive"
       else "garbage_collect"
-    FileLog.append(spark, logDir, fileName, h, decision)
+    FileLog.append(spark, logDir, fileName, h, decision, FileLog.nextSeq(log))
     (decision, h)
   }
 
+  /** How long [[applyMonthly]] waits for its observed statistics once
+    * the publish has returned. They are delivered by a listener right
+    * after the write job, so this bound is only ever reached when they
+    * never come. */
+  private val statsWait = scala.concurrent.duration.Duration(60, "s")
+
   /** Apply one monthly update file to the snapshot at tablePath;
     * returns the operation statistics (the reference's operation-log
-    * row) after rewriting the snapshot. */
+    * row: outcome → rows, zero-count outcomes left out) after
+    * rewriting the snapshot.
+    *
+    * One pass: the merge is not cached and has no second consumer. The
+    * per-outcome counts are an `Observation` on the merged frame,
+    * placed above the [[CdcMerge.applied]] filter so the two dropped
+    * outcomes are counted too, and they are computed by the snapshot
+    * write itself. Statistics that do not arrive within `statsWait` of
+    * the publish fail the call, naming the table. */
   def applyMonthly(spark: SparkSession, updateCsv: String, tablePath: String): Map[String, Long] = {
     val base = Sinks.readSnapshot(spark, tablePath).drop("txn_month")
     val changes = PricePaidCsv.normalized(spark, updateCsv)
+    val observed = Observation()
+    val counts = CdcMerge.outcomes.map(o => count_if(col("outcome") === o).as(o))
     // broadcast path: the monthly update is tiny next to the snapshot,
     // so the merge never shuffles the base (CdcMerge.mergeBroadcast)
     val merged = CdcMerge.mergeBroadcast(base, changes, "transaction_unique_id", compareCols)
-      .cache() // two consumers: stats + snapshot rewrite
-    val stats = CdcMerge.stats(merged).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val next = CdcMerge.applied(merged).drop("outcome")
+      .observe(observed, counts.head, counts.tail: _*)
     // versioned publish: the new version is written beside the one the
     // plan is still reading; readers switch at the atomic manifest move
-    Sinks.publishSnapshot(next, "transaction_date", tablePath)
-    merged.unpersist()
-    stats
+    Sinks.publishSnapshot(CdcMerge.applied(merged).drop("outcome"),
+      "transaction_date", tablePath)
+    val row = try scala.concurrent.Await.result(observed.future, statsWait)
+      catch { case e: java.util.concurrent.TimeoutException =>
+        throw new IllegalStateException(s"applyMonthly of $updateCsv into $tablePath: " +
+          s"the snapshot was published but its merge statistics did not arrive " +
+          s"within $statsWait", e)
+      }
+    CdcMerge.outcomes.map(o => o -> row.getAs[Long](o)).filter(_._2 > 0).toMap
   }
 
   /** Analyst read path: the live (non-deleted) rows of the manifest's

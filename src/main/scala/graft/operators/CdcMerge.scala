@@ -19,6 +19,17 @@ import org.apache.spark.sql.functions._
   * backfill. Row identity ("identical") compares `compareCols`.
   */
 object CdcMerge {
+  /** Every outcome [[merge]] and [[mergeBroadcast]] can emit: the
+    * reference's InputFileStatistics counter names, plus the two
+    * malformed-op ones. */
+  val outcomes: Seq[String] = Seq(
+    "add_and_added", "change_but_missing_and_added", "delete_but_missing_and_ignored",
+    "invalid_op_missing_and_ignored", "unchanged_deleted", "unchanged",
+    "add_but_deleted_and_changed", "change_but_deleted_and_ignored",
+    "delete_but_deleted_and_ignored", "add_but_already_identical_and_ignored",
+    "add_but_changed", "change_but_already_identical_and_ignored", "change_and_changed",
+    "delete_and_deleted", "delete_but_not_identical_and_changed_and_deleted",
+    "invalid_op_ignored")
   /** Outcomes that take the change row's values. */
   private val takesNew = Seq(
     "add_and_added", "change_but_missing_and_added", "add_but_deleted_and_changed",
@@ -27,6 +38,68 @@ object CdcMerge {
   /** Outcomes that end deleted. */
   private val endsDeleted = Seq(
     "delete_and_deleted", "delete_but_not_identical_and_changed_and_deleted")
+  /** Outcomes [[applied]] drops: the change named a key that never existed. */
+  private val neverExisted = Seq(
+    "delete_but_missing_and_ignored", "invalid_op_missing_and_ignored")
+
+  private val op = col("record_op")
+  private val wasDeleted = col("is_deleted") === "T"
+  private def baseCol(x: String) = s"__base_$x"
+  private def newCol(x: String) = s"__new_$x"
+
+  /** The two sides renamed apart in ONE projection each: key and flag
+    * (base) or op (changes), then the compare columns prefixed. Only
+    * these columns reach the output, so nothing else is carried. */
+  private def baseSide(base: DataFrame, key: String, compareCols: Seq[String]): DataFrame =
+    base.select(col(key) +: col("is_deleted") +: compareCols.map(x => col(x).as(baseCol(x))): _*)
+  private def changeSide(changes: DataFrame, key: String, compareCols: Seq[String]): DataFrame =
+    changes.select(col(key) +: op +: compareCols.map(x => col(x).as(newCol(x))): _*)
+
+  /** Each compare column's base and new value, side by side. */
+  private def pairs(compareCols: Seq[String]): Seq[Column] =
+    compareCols.flatMap(x => Seq(col(baseCol(x)), col(newCol(x))))
+
+  /** Outcome of a change row whose key is not in the base. */
+  private val missingOutcome: Column =
+    when(op === "A", "add_and_added")
+      .when(op === "C", "change_but_missing_and_added")
+      .when(op === "D", "delete_but_missing_and_ignored")
+      .otherwise("invalid_op_missing_and_ignored")
+
+  /** Outcome of a base row, with or without a change row. Null-safe
+    * equality: two null fields (empty CSV cells) count as identical, as
+    * in the reference's row comparison. Any other op marker is
+    * malformed input: the base row stays untouched and the row is
+    * surfaced in stats instead of being soft-deleted by a catch-all. */
+  private def inBaseOutcome(compareCols: Seq[String]): Column = {
+    val identical = compareCols.map(x => col(newCol(x)) <=> col(baseCol(x))).reduce(_ && _)
+    when(op.isNull && wasDeleted, "unchanged_deleted")
+      .when(op.isNull, "unchanged")
+      .when(wasDeleted && op === "A", "add_but_deleted_and_changed")
+      .when(wasDeleted && op === "C", "change_but_deleted_and_ignored")
+      .when(wasDeleted && op === "D", "delete_but_deleted_and_ignored")
+      .when(op === "A" && identical, "add_but_already_identical_and_ignored")
+      .when(op === "A", "add_but_changed")
+      .when(op === "C" && identical, "change_but_already_identical_and_ignored")
+      .when(op === "C", "change_and_changed")
+      .when(op === "D" && identical, "delete_and_deleted")
+      .when(op === "D", "delete_but_not_identical_and_changed_and_deleted")
+      .otherwise("invalid_op_ignored")
+  }
+
+  /** The output projection over (key, outcome, is_deleted, prefixed
+    * pairs): key, the applied compare values, the new soft-delete flag
+    * and the outcome. */
+  private def finalCols(key: String, compareCols: Seq[String]): Seq[Column] = {
+    val outcome = col("outcome")
+    val takes = outcome.isin(takesNew: _*)
+    col(key) +: compareCols.map(x =>
+      when(takes, col(newCol(x))).otherwise(col(baseCol(x))).as(x)) :+
+      when(outcome.isin(endsDeleted: _*), "T")
+        .when(outcome === "add_but_deleted_and_changed", "F")
+        .when(wasDeleted, "T").otherwise("F").as("is_deleted") :+
+      outcome
+  }
 
   /** @param base        current table: key, compareCols, `is_deleted` ('T'/'F')
     * @param changes     change file: key, `record_op`, compareCols (new values)
@@ -35,57 +108,21 @@ object CdcMerge {
     */
   def merge(base: DataFrame, changes: DataFrame, key: String,
             compareCols: Seq[String]): DataFrame = {
-    val b = compareCols.foldLeft(base)((df, c) => df.withColumnRenamed(c, s"__base_$c"))
-      .withColumn("__in_base", lit(1))
-    val c = compareCols.foldLeft(changes)((df, x) => df.withColumnRenamed(x, s"__new_$x"))
-    val op = col("record_op")
     // explicit presence marker — compare columns may legitimately be
     // null (empty CSV cells), so their nullness can't signal absence
-    val inBase = col("__in_base").isNotNull
-    val wasDeleted = col("is_deleted") === "T"
-    // null-safe equality: two null fields (empty CSV cells) count as
-    // identical, as in the reference's row comparison
-    val identical = compareCols
-      .map(x => col(s"__new_$x") <=> col(s"__base_$x"))
-      .reduce(_ && _)
-    val merged = b.join(c, Seq(key), "full_outer")
-      .withColumn("outcome",
-        when(!inBase && op === "A", "add_and_added")
-        .when(!inBase && op === "C", "change_but_missing_and_added")
-        .when(!inBase && op === "D", "delete_but_missing_and_ignored")
-        .when(!inBase, "invalid_op_missing_and_ignored")
-        .when(inBase && op.isNull && wasDeleted, "unchanged_deleted")
-        .when(inBase && op.isNull, "unchanged")
-        .when(wasDeleted && op === "A", "add_but_deleted_and_changed")
-        .when(wasDeleted && op === "C", "change_but_deleted_and_ignored")
-        .when(wasDeleted && op === "D", "delete_but_deleted_and_ignored")
-        .when(op === "A" && identical, "add_but_already_identical_and_ignored")
-        .when(op === "A", "add_but_changed")
-        .when(op === "C" && identical, "change_but_already_identical_and_ignored")
-        .when(op === "C", "change_and_changed")
-        .when(op === "D" && identical, "delete_and_deleted")
-        .when(op === "D", "delete_but_not_identical_and_changed_and_deleted")
-        // any other op marker is malformed input: keep the base row
-        // untouched and surface the row in stats instead of silently
-        // soft-deleting it via the catch-all
-        .otherwise("invalid_op_ignored"))
-    val takes = col("outcome").isin(takesNew: _*)
-    val withFinal = compareCols.foldLeft(merged)((df, x) =>
-      df.withColumn(x, when(takes, col(s"__new_$x")).otherwise(col(s"__base_$x"))))
-      .withColumn("final_deleted",
-        when(col("outcome").isin(endsDeleted: _*), "T")
-        .when(col("outcome") === "add_but_deleted_and_changed", "F")
-        .when(wasDeleted, "T").otherwise("F"))
-    withFinal.select(col(key) +: compareCols.map(col) :+
-      col("final_deleted") :+ col("outcome"): _*)
-      .withColumnRenamed("final_deleted", "is_deleted")
+    val b = baseSide(base, key, compareCols).withColumn("__in_base", lit(1))
+    val outcome = when(col("__in_base").isNull, missingOutcome)
+      .otherwise(inBaseOutcome(compareCols))
+    b.join(changeSide(changes, key, compareCols), Seq(key), "full_outer")
+      .select(col(key) +: outcome.as("outcome") +: col("is_deleted") +:
+        pairs(compareCols): _*)
+      .select(finalCols(key, compareCols): _*)
   }
 
   /** Post-update table: drop the never-existed keys (D or malformed
     * op on a missing key). */
   def applied(merged: DataFrame): DataFrame =
-    merged.filter(!col("outcome").isin(
-      "delete_but_missing_and_ignored", "invalid_op_missing_and_ignored"))
+    merged.filter(!col("outcome").isin(neverExisted: _*))
 
   /** The reference's operation-log statistics. */
   def stats(merged: DataFrame): DataFrame =
@@ -105,62 +142,30 @@ object CdcMerge {
     * or re-partitioned. Scan cost: one full-row pass (step 1) plus one
     * column-pruned key-only pass (step 2) — vs the full shuffle of
     * every base byte in the full-outer plan. Outcome semantics are
-    * identical to merge() (spec-pinned). */
+    * identical to merge() (spec-pinned).
+    *
+    * The plan is built from flat projections — one prefixing `select`
+    * per side, one per branch, one final: every `withColumn` or rename
+    * checks the whole growing plan below it again, so a per-column
+    * chain of them costs driver time before the first job starts. */
   def mergeBroadcast(base: DataFrame, changes: DataFrame, key: String,
                      compareCols: Seq[String]): DataFrame = {
-    val b = compareCols.foldLeft(base)((df, c) => df.withColumnRenamed(c, s"__base_$c"))
-    val c = compareCols.foldLeft(changes)((df, x) => df.withColumnRenamed(x, s"__new_$x"))
-    val op = col("record_op")
-    val wasDeleted = col("is_deleted") === "T"
-    val identical = compareCols
-      .map(x => col(s"__new_$x") <=> col(s"__base_$x"))
-      .reduce(_ && _)
-
+    val b = baseSide(base, key, compareCols)
+    val c = changeSide(changes, key, compareCols)
     // 1: in-base rows (change present or not) — base never shuffles
-    val inBaseMerged = b.join(broadcast(c), Seq(key), "left")
-      .withColumn("outcome",
-        when(op.isNull && wasDeleted, "unchanged_deleted")
-        .when(op.isNull, "unchanged")
-        .when(wasDeleted && op === "A", "add_but_deleted_and_changed")
-        .when(wasDeleted && op === "C", "change_but_deleted_and_ignored")
-        .when(wasDeleted && op === "D", "delete_but_deleted_and_ignored")
-        .when(op === "A" && identical, "add_but_already_identical_and_ignored")
-        .when(op === "A", "add_but_changed")
-        .when(op === "C" && identical, "change_but_already_identical_and_ignored")
-        .when(op === "C", "change_and_changed")
-        .when(op === "D" && identical, "delete_and_deleted")
-        .when(op === "D", "delete_but_not_identical_and_changed_and_deleted")
-        .otherwise("invalid_op_ignored"))
+    val inBase = b.join(broadcast(c), Seq(key), "left")
+      .select(col(key) +: inBaseOutcome(compareCols).as("outcome") +:
+        col("is_deleted") +: pairs(compareCols): _*)
     // 2: matched change keys — output bounded by |changes|
     val matched = b.select(col(key))
       .join(broadcast(c.select(col(key))), Seq(key), "left_semi")
     // 3: change rows whose key is NOT in base
     val missing = c.join(broadcast(matched), Seq(key), "left_anti")
-      .withColumn("outcome",
-        when(op === "A", "add_and_added")
-        .when(op === "C", "change_but_missing_and_added")
-        .when(op === "D", "delete_but_missing_and_ignored")
-        .otherwise("invalid_op_missing_and_ignored"))
-      .withColumn("is_deleted", lit(null).cast("string"))
-    val missingAligned = compareCols.foldLeft(missing)((df, x) =>
-      df.withColumn(s"__base_$x", lit(null).cast(df.schema(s"__new_$x").dataType)))
-
-    val takes = col("outcome").isin(takesNew: _*)
-    val all = inBaseMerged.select(
-      (col(key) +: col("outcome") +: col("is_deleted") +:
-        compareCols.flatMap(x => Seq(col(s"__base_$x"), col(s"__new_$x")))): _*)
-      .unionByName(missingAligned.select(
-        (col(key) +: col("outcome") +: col("is_deleted") +:
-          compareCols.flatMap(x => Seq(col(s"__base_$x"), col(s"__new_$x")))): _*))
-    val withFinal = compareCols.foldLeft(all)((df, x) =>
-      df.withColumn(x, when(takes, col(s"__new_$x")).otherwise(col(s"__base_$x"))))
-      .withColumn("final_deleted",
-        when(col("outcome").isin(endsDeleted: _*), "T")
-        .when(col("outcome") === "add_but_deleted_and_changed", "F")
-        .when(col("is_deleted") === "T", "T").otherwise("F"))
-    withFinal.select(col(key) +: compareCols.map(col) :+
-      col("final_deleted") :+ col("outcome"): _*)
-      .withColumnRenamed("final_deleted", "is_deleted")
+      .select(col(key) +: missingOutcome.as("outcome") +:
+        lit(null).cast("string").as("is_deleted") +:
+        compareCols.flatMap(x => Seq(
+          lit(null).cast(c.schema(newCol(x)).dataType).as(baseCol(x)), col(newCol(x)))): _*)
+    inBase.unionByName(missing).select(finalCols(key, compareCols): _*)
   }
 
   /** Fold a sequence of monthly update files over a base snapshot in

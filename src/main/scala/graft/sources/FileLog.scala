@@ -54,23 +54,48 @@ object FileLog {
       case _                => None
     }).maxOption.getOrElse(-1L)
 
-  /** The full log, empty-schema-safe when nothing was ever appended.
-    * Existence is checked through the Hadoop FS (a `java.io.File`
-    * probe would silently read any non-local log as empty and reset
-    * the sequence); `_`-prefixed coordination dirs are invisible to
-    * the parquet scan, so a claimed-but-unwritten append can't break
-    * schema inference. Duplicate seqs (the compaction window /
-    * crash-debris case — identical rows) collapse here, so every
-    * consumer sees each committed row exactly once. */
-  def read(spark: SparkSession, logDir: String): DataFrame = {
-    import spark.implicits._
+  /** The fixed row schema: reads name it instead of inferring it from
+    * a footer, which would cost a Spark job per read. */
+  private val entrySchema = org.apache.spark.sql.Encoders.product[Entry].schema
+
+  /** The raw scan of every log file (duplicate seqs included), or None
+    * when nothing was ever appended. Existence is checked through the
+    * Hadoop FS (a `java.io.File` probe would silently read any
+    * non-local log as empty and reset the sequence); `_`-prefixed
+    * coordination dirs are invisible to the parquet scan, so a
+    * claimed-but-unwritten append is never read. */
+  private def scan(spark: SparkSession, logDir: String): Option[DataFrame] = {
     val root = new org.apache.hadoop.fs.Path(logDir)
     val fs = fsOf(spark, root)
     val hasData = fs.exists(root) &&
       fs.listStatus(root).exists(s => !s.getPath.getName.startsWith("_"))
-    if (hasData) spark.read.parquet(logDir).dropDuplicates("seq")
-    else Seq.empty[Entry].toDF()
+    if (hasData) Some(spark.read.schema(entrySchema).parquet(logDir)) else None
   }
+
+  /** The full log, empty-schema-safe when nothing was ever appended.
+    * Duplicate seqs (the compaction window / crash-debris case —
+    * identical rows) collapse here, so every consumer sees each
+    * committed row exactly once. */
+  def read(spark: SparkSession, logDir: String): DataFrame = {
+    import spark.implicits._
+    scan(spark, logDir).map(_.dropDuplicates("seq")).getOrElse(Seq.empty[Entry].toDF())
+  }
+
+  /** The decision columns of one committed row. */
+  private[graft] final case class Logged(seq: Long, sha256: String, decision: String)
+
+  /** Every committed row's decision columns in seq order, from ONE
+    * scan job; duplicate seqs collapse on the driver (any copy is the
+    * row). A data-decision reads this once and derives both the last
+    * ingested hash and the next seq guess from it. */
+  private[graft] def entries(spark: SparkSession, logDir: String): Seq[Logged] =
+    scan(spark, logDir).toSeq
+      .flatMap(_.select("seq", "sha256", "decision").collect()
+        .map(r => Logged(r.getLong(0), r.getString(1), r.getString(2))))
+      .distinctBy(_.seq).sortBy(_.seq)
+
+  /** The first seq an append after `log` tries to claim. */
+  private[graft] def nextSeq(log: Seq[Logged]): Long = log.lastOption.fold(0L)(_.seq + 1L)
 
   /** Append one decision row; returns the assigned sequence number.
     * Concurrent appenders both read the same max(seq), but only one
@@ -81,14 +106,18 @@ object FileLog {
     * claim file as unreachable) is abandoned and re-claimed above the
     * watermark, so a pruned number can never be committed twice. */
   def append(spark: SparkSession, logDir: String, fileName: String,
-             sha256: String, decision: String): Long = {
+             sha256: String, decision: String): Long =
+    append(spark, logDir, fileName, sha256, decision, nextSeq(entries(spark, logDir)))
+
+  /** [[append]] starting its claims at `guess`, typically [[nextSeq]]
+    * of a log the caller has just read. Any guess is safe: a taken
+    * number loses its conditional create and the claim walks on, and
+    * the watermark re-check lifts a claim above compacted seqs. */
+  private[graft] def append(spark: SparkSession, logDir: String, fileName: String,
+                            sha256: String, decision: String, guess: Long): Long = {
     import spark.implicits._
     val root = new org.apache.hadoop.fs.Path(logDir)
     val fs = fsOf(spark, root)
-    val guess = read(spark, logDir).agg(max(col("seq"))).head() match {
-      case r if r.isNullAt(0) => 0L
-      case r                  => r.getLong(0) + 1L
-    }
     var seq = Sinks.claimNumber(fs, new org.apache.hadoop.fs.Path(root, "_seq"),
       guess, "s")
     // re-check the watermark AFTER winning each claim: compactions only
@@ -141,7 +170,8 @@ object FileLog {
       .filter(s => s.isFile && !s.getPath.getName.startsWith("_"))
       .map(_.getPath)
     if (sources.size < 2) return 0L // nothing worth folding
-    val df = spark.read.parquet(sources.map(_.toString): _*).dropDuplicates("seq")
+    val df = spark.read.schema(entrySchema).parquet(sources.map(_.toString): _*)
+      .dropDuplicates("seq")
       .orderBy("seq") // one small file; ordered rows make it scannable
       .localCheckpoint() // sever lineage from the files about to be deleted
     val rows = df.count()
@@ -164,13 +194,9 @@ object FileLog {
     * `archive`) — what the reference's data-decision service compares
     * a fresh download against. Garbage-collected (duplicate) entries
     * never advance it. */
-  def latestIngestedHash(spark: SparkSession, logDir: String): Option[String] = {
-    val top = read(spark, logDir)
-      .filter(col("decision") === "archive")
-      .orderBy(col("seq").desc)
-      .select("sha256")
-      .limit(1)
-      .collect()
-    top.headOption.map(_.getString(0))
-  }
+  private[graft] def latestIngestedHash(log: Seq[Logged]): Option[String] =
+    log.reverseIterator.collectFirst { case Logged(_, sha, "archive") => sha }
+
+  def latestIngestedHash(spark: SparkSession, logDir: String): Option[String] =
+    latestIngestedHash(entries(spark, logDir))
 }

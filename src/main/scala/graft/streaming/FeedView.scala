@@ -108,7 +108,6 @@ object FeedView {
           val lastApplied = applied.map(_._1).getOrElse(0L)
           if (v > lastApplied) { // re-delivered batches fold nothing twice
             val of = b.filter(col("_commit_version") === v)
-            val snap = of.filter(col("_change_type") === "snapshot")
             val snapAggs = Seq(count(lit(1)).as("n_live"),
                 count(col(priceCol)).as("cnt_price"),
                 sum(priceCol).cast("decimal(18,2)").as("sum_price")) ++
@@ -117,8 +116,9 @@ object FeedView {
                    max(priceCol).cast("decimal(18,2)").as("max_price"))
                else Nil)
             val next =
-              if (!snap.isEmpty) // full replace: re-key from the baseline
-                snap.groupBy(monthOf(col(dateCol)).as("month"))
+              if (hasSnap) // full replace: re-key from the baseline
+                of.filter(col("_change_type") === "snapshot")
+                  .groupBy(monthOf(col(dateCol)).as("month"))
                   .agg(snapAggs.head, snapAggs.tail: _*)
               else {
                 val prevRaw = applied.map(a => spark.read.parquet(a._2)).getOrElse(
@@ -236,16 +236,20 @@ object FeedView {
                   // range-predicated on the date column so parquet
                   // row-group stats skip untouched months' files (the
                   // month-partitioned layout makes file min/max tight).
+                  // months arrive as java.sql.Date, or as LocalDate when
+                  // the session runs the Java 8 datetime API
                   val dirtyMonths = obsDirty.get.apply("dirty")
-                    .asInstanceOf[scala.collection.Seq[java.sql.Date]].toSeq
+                    .asInstanceOf[scala.collection.Seq[Any]].toSeq.map {
+                      case d: java.sql.Date       => d.toLocalDate
+                      case d: java.time.LocalDate => d
+                    }
                   if (dirtyMonths.isEmpty)
                     foldedC.select(col("month"), col("n_live"), col("cnt_price"),
                       col("sum_price"),
                       col("min_fold").cast("decimal(18,2)").as("min_price"),
                       col("max_fold").cast("decimal(18,2)").as("max_price"))
                   else {
-                    val ranges = dirtyMonths.map { m =>
-                      val start = m.toLocalDate
+                    val ranges = dirtyMonths.map { start =>
                       (col(dateCol) >= lit(java.sql.Date.valueOf(start))) &&
                         (col(dateCol) < lit(java.sql.Date.valueOf(start.plusMonths(1))))
                     }.reduce(_ || _)

@@ -66,21 +66,31 @@ class CdcPropertySpec extends AnyFunSuite {
   }
 
   test("mergeBroadcast produces exactly the same rows as merge on random scenarios") {
+    // three compare columns of three types, each with null cells, over
+    // small domains so identical-with-nulls rows occur often
     val rnd = new scala.util.Random(7)
+    def maybe[T](v: => T): Option[T] = if (rnd.nextInt(4) == 0) None else Some(v)
+    def price() = maybe(rnd.nextInt(3).toLong + 1)
+    def town() = maybe(Seq("LEEDS", "YORK")(rnd.nextInt(2)))
+    def day() = maybe(java.sql.Date.valueOf(s"2024-01-0${rnd.nextInt(2) + 1}"))
+    val compareCols = Seq("price", "town", "d")
     for (round <- 1 to 3) {
-      val keys = (1L to 50L).toSeq
+      val keys = (1L to 80L).toSeq
       val base = keys.filter(_ => rnd.nextBoolean())
-        .map(k => (k, rnd.nextInt(4).toLong + 1, if (rnd.nextInt(4) == 0) "T" else "F"))
+        .map(k => (k, price(), town(), day(), if (rnd.nextInt(4) == 0) "T" else "F"))
       val chg = keys.filter(_ => rnd.nextBoolean())
-        .map(k => (k, Seq("A", "C", "D", "X")(rnd.nextInt(4)), rnd.nextInt(4).toLong + 1))
-      val baseDf = base.toDF("key", "price", "is_deleted")
-      val chgDf = chg.toDF("key", "record_op", "price")
+        .map(k => (k, Seq("A", "C", "D", "X")(rnd.nextInt(4)), price(), town(), day()))
+      val baseDf = base.toDF("key", "price", "town", "d", "is_deleted")
+      val chgDf = chg.toDF("key", "record_op", "price", "town", "d")
       def rows(df: org.apache.spark.sql.DataFrame) =
-        df.collect().map(r => (r.getLong(0), Option(r.get(1)), r.getString(2), r.getString(3)))
-          .sortBy(_._1).toSeq
-      val a = rows(CdcMerge.merge(baseDf, chgDf, "key", Seq("price")))
-      val b = rows(CdcMerge.mergeBroadcast(baseDf, chgDf, "key", Seq("price")))
-      assert(a === b, s"round $round")
+        df.collect().map(r => r.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
+      val merged = CdcMerge.merge(baseDf, chgDf, "key", compareCols)
+      val broadcasted = CdcMerge.mergeBroadcast(baseDf, chgDf, "key", compareCols)
+      def typed(df: org.apache.spark.sql.DataFrame) = df.schema.map(f => (f.name, f.dataType))
+      assert(typed(merged) === typed(broadcasted), s"round $round")
+      val a = rows(merged)
+      assert(a.exists(r => (1 to 3).exists(i => r(i) == null)), "null cells reach the output")
+      assert(a === rows(broadcasted), s"round $round")
     }
   }
 

@@ -392,6 +392,35 @@ class GraftFeedSpec extends AnyFunSuite {
     } finally MatViews.unregister(tbl)
   }
 
+  test("feed view repairs dirty extremes under the Java 8 datetime API") {
+    val base = graft.util.Scratch.dir("feed_view_java8")
+    val tbl = s"$base/t"
+    val java8 = "spark.sql.datetime.java8API.enabled"
+    def rows(rs: (Long, String, String)*) = rs.toDF("k", "ds", "ps")
+      .select(col("k"), to_date(col("ds")).as("d"),
+        col("ps").cast("decimal(18,2)").as("p"))
+    def agg(): Map[String, (Long, Double, Double)] =
+      graft.streaming.FeedView.readAgg(spark, s"$base/state")
+        .select("month", "n_live", "min_price", "max_price")
+        .collect().map(r => r.get(0).toString ->
+          ((r.getLong(1), r.getDecimal(2).doubleValue(), r.getDecimal(3).doubleValue()))).toMap
+    def drainView(): Unit = graft.streaming.FeedView.runFeedAgg(
+      spark, tbl, s"$base/state", s"$base/ckpt", dateCol = "d", priceCol = "p",
+      availableNow = true).awaitTermination()
+    spark.conf.set(java8, "true")
+    try {
+      Sinks.publishSnapshot(rows((1L, "2024-01-15", "10.00"), (2L, "2024-01-20", "20.00"),
+        (3L, "2024-01-25", "5.00"), (4L, "2024-02-15", "7.00")), "d", tbl, retainVersions = 100)
+      drainView()
+      assert(agg() == Map("2024-01-01" -> ((3L, 5.0, 20.0)), "2024-02-01" -> ((1L, 7.0, 7.0))))
+      // deleting the January minimum makes January dirty: its min is
+      // recomputed from the base, with months observed as LocalDate
+      DeletionVectors.publishDeletes(spark, tbl, Seq(3L).toDF("k"), "k")
+      drainView()
+      assert(agg() == Map("2024-01-01" -> ((2L, 10.0, 20.0)), "2024-02-01" -> ((1L, 7.0, 7.0))))
+    } finally spark.conf.unset(java8)
+  }
+
   test("point-read options and empty stores are rejected up front") {
     val base = graft.util.Scratch.dir("feed_opts")
     val tbl = s"$base/t"

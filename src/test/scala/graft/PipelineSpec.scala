@@ -294,4 +294,91 @@ class PipelineSpec extends AnyFunSuite {
     assert(r.getAs[Long]("price") === 150000L)
     assert(r.getAs[String]("outcome") === "change_but_already_identical_and_ignored")
   }
+
+  test("applyMonthly: stats observed on the write equal stats(merge) over all 16 outcomes") {
+    import graft.sources.Sinks
+    val key = "transaction_unique_id"
+    val table = Files.createTempDirectory("pp_outcomes").toString + "/price_paid"
+    // live L0..L7, soon-deleted D0..D3
+    val keys = (0 to 7).map(i => s"L$i") ++ (0 to 3).map(i => s"D$i")
+    Pipeline.initialize(spark, writeFile("pp-complete.txt",
+      keys.zipWithIndex.map { case (k, i) => row(k, 1000L + i, "2024-01-15", "A") }), table)
+    // month 1 soft-deletes D0..D3 (identical rows)
+    val deletes = writeFile("pp-monthly-update.txt", (0 to 3).map(i =>
+      row(s"D$i", 1000L + 8 + i, "2024-01-15", "D")))
+    assert(Pipeline.applyMonthly(spark, deletes, table) ===
+      Map("delete_and_deleted" -> 4L, "unchanged" -> 8L),
+      "zero-count outcomes stay out of the map")
+    // month 2 hits every cell of the decision matrix
+    def live(i: Int, op: String, bump: Long = 0L) = row(s"L$i", 1000L + i + bump, "2024-01-15", op)
+    def dead(i: Int, op: String) = row(s"D$i", 5L, "2024-01-15", op)
+    def fresh(i: Int, op: String) = row(s"N$i", 7L, "2024-02-15", op)
+    val update = writeFile("pp-monthly-update.txt", Seq(
+      fresh(1, "A"), fresh(2, "C"), fresh(3, "D"), fresh(4, "X"),
+      dead(1, "A"), dead(2, "C"), dead(3, "D"),
+      live(1, "A"), live(2, "A", 1L), live(3, "C"), live(4, "C", 1L),
+      live(5, "D"), live(6, "D", 1L), live(7, "X")))
+    val base = Sinks.readSnapshot(spark, table).drop("txn_month")
+    val want = CdcMerge.stats(CdcMerge.mergeBroadcast(base, PricePaidCsv.normalized(spark, update),
+      key, Pipeline.compareCols)).as[(String, Long)].collect().toMap
+    val wantFull = CdcMerge.stats(CdcMerge.merge(base, PricePaidCsv.normalized(spark, update),
+      key, Pipeline.compareCols)).as[(String, Long)].collect().toMap
+    assert(want === wantFull)
+    assert(want.keySet === CdcMerge.outcomes.toSet, "the file must hit all 16 outcomes")
+    assert(Seq("delete_but_missing_and_ignored", "invalid_op_missing_and_ignored",
+      "invalid_op_ignored").forall(want.contains))
+    val got = Pipeline.applyMonthly(spark, update, table)
+    assert(got === want)
+    // the two dropped outcomes were counted, yet their rows never landed
+    val landed = Sinks.readSnapshot(spark, table).select(key).as[String].collect().toSet
+    assert(landed === (keys ++ Seq("N1", "N2")).map(k => s"{$k}").toSet)
+  }
+
+  test("CdcMerge.outcomes is exactly the set of outcome literals both merges can emit") {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, CaseWhen, Literal}
+    val base = Seq(("k", 1L, "F")).toDF("key", "price", "is_deleted")
+    val chg = Seq(("k", "A", 1L)).toDF("key", "record_op", "price")
+    def emitted(df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.queryExecution.analyzed.flatMap(_.expressions).flatMap(_.collect {
+        case a: Alias if a.name == "outcome" => a.child.collect {
+          case w: CaseWhen => (w.branches.map(_._2) ++ w.elseValue).collect {
+            case Literal(v, _) if v != null => v.toString
+          }
+        }.flatten
+      }.flatten).toSet
+    assert(emitted(CdcMerge.merge(base, chg, "key", Seq("price"))) === CdcMerge.outcomes.toSet)
+    assert(emitted(CdcMerge.mergeBroadcast(base, chg, "key", Seq("price"))) ===
+      CdcMerge.outcomes.toSet)
+    assert(CdcMerge.outcomes.distinct.size === 16)
+  }
+
+  test("file log decisions: empty log, re-offer, after compaction, over duplicate seqs") {
+    import graft.sources.FileLog
+    val logDir = Files.createTempDirectory("filelog_decide").toString + "/log"
+    val a = PricePaidCsv.normalized(spark, writeFile("a.txt", Seq(row("F1", 1L, "2024-01-15", "A"))))
+    val b = PricePaidCsv.normalized(spark, writeFile("b.txt", Seq(row("F2", 2L, "2024-01-15", "A"))))
+    assert(FileLog.entries(spark, logDir).isEmpty)
+    val (d0, ha) = Pipeline.decideAndLog(spark, logDir, "a.txt", a)
+    assert(d0 === "archive", "an empty log ingests")
+    val (d1, ha1) = Pipeline.decideAndLog(spark, logDir, "a.txt", a)
+    assert(d1 === "garbage_collect" && ha1 === ha, "a re-offer is garbage-collected")
+    assert(FileLog.compactLog(spark, logDir) === 2L)
+    val (d2, ha2) = Pipeline.decideAndLog(spark, logDir, "a.txt", a)
+    assert(d2 === "garbage_collect" && ha2 === ha, "the compacted log still knows the hash")
+    val (d3, hb) = Pipeline.decideAndLog(spark, logDir, "b.txt", b)
+    assert(d3 === "archive" && hb != ha)
+    // a compaction-window duplicate of seq 2 collapses on read
+    val part = new java.io.File(logDir, "part-s00000002.parquet").toPath
+    Files.copy(part, new java.io.File(logDir, "part-dup-s00000002.parquet").toPath)
+    val log = FileLog.entries(spark, logDir)
+    assert(log === Seq(FileLog.Logged(0L, ha, "archive"),
+      FileLog.Logged(1L, ha, "garbage_collect"), FileLog.Logged(2L, ha, "garbage_collect"),
+      FileLog.Logged(3L, hb, "archive")))
+    assert(FileLog.nextSeq(log) === 4L)
+    assert(FileLog.latestIngestedHash(log) === Some(hb))
+    val (d4, _) = Pipeline.decideAndLog(spark, logDir, "a.txt", a)
+    assert(d4 === "archive", "an older file offered after a newer one is ingested again")
+    assert(FileLog.read(spark, logDir).select("seq").as[Long].collect().sorted.toSeq ===
+      (0L to 4L))
+  }
 }

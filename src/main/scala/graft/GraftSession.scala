@@ -59,6 +59,14 @@ object GraftSession {
       // identifiers (MERGE INTO graft.`/path` …) resolve to GraftTable
       .config("spark.sql.catalog.graft", classOf[sources.GraftCatalog].getName)
       .config("spark.ui.enabled", "false")
+      // `file:` through graft's local filesystem (sources/LocalFs.scala),
+      // for FileSystem and FileContext (Spark's streaming checkpoints)
+      // alike. Without libhadoop, which Spark's jars do not ship, the
+      // stock classes start a `chmod` process for every file, `.crc`
+      // and directory a write creates (~1,000 per monthly_update run);
+      // these set the same bits in-process and keep the checksums.
+      .config("spark.hadoop.fs.file.impl", classOf[sources.GraftLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[sources.GraftLocalFs].getName)
 
   def getOrCreate(): SparkSession = {
     val spark = builder().getOrCreate()

@@ -42,11 +42,15 @@ object Pipeline {
     // order-insensitive fold of per-row 64-bit hashes as an exact
     // DECIMAL sum: no ANSI long-overflow (Spark 4 defaults ansi on),
     // and unlike bit_xor no cancellation — a repeated row pair xors
-    // to zero, which would make distinct files collide
-    val h = df.select(xxhash64(df.columns.map(col): _*)
+    // to zero, which would make distinct files collide. The fold is an
+    // Observation on a `noop` write: one job, where a global `agg`
+    // costs a map stage and a result stage.
+    val observed = Observation()
+    df.select(xxhash64(df.columns.map(col): _*)
         .cast(org.apache.spark.sql.types.DecimalType(38, 0)).as("h"))
-      .agg(sum(col("h")).as("s"), count(lit(1)).as("n"))
-      .head()
+      .observe(observed, sum(col("h")).as("s"), count(lit(1)).as("n"))
+      .write.format("noop").mode("overwrite").save()
+    val h = awaitObserved(observed, "contentHash")
     val s = if (h.isNullAt(0)) "0" else h.getDecimal(0).toBigInteger.toString(16)
     s"$s-${h.getLong(1)}"
   }
@@ -71,11 +75,20 @@ object Pipeline {
     (decision, h)
   }
 
-  /** How long [[applyMonthly]] waits for its observed statistics once
-    * the publish has returned. They are delivered by a listener right
-    * after the write job, so this bound is only ever reached when they
-    * never come. */
+  /** How long an `Observation` is awaited once the write that
+    * computes it has returned. Metrics are delivered by a listener
+    * right after the write job, so this bound is only ever reached
+    * when they never come. */
   private val statsWait = scala.concurrent.duration.Duration(60, "s")
+
+  /** The observed row, or an `IllegalStateException` naming `what`
+    * when it does not arrive within `statsWait`. */
+  private def awaitObserved(observed: Observation, what: => String) =
+    try scala.concurrent.Await.result(observed.future, statsWait)
+    catch { case e: java.util.concurrent.TimeoutException =>
+      throw new IllegalStateException(
+        s"$what: the write returned but its observed metrics did not arrive within $statsWait", e)
+    }
 
   /** Apply one monthly update file to the snapshot at tablePath;
     * returns the operation statistics (the reference's operation-log
@@ -101,12 +114,7 @@ object Pipeline {
     // plan is still reading; readers switch at the atomic manifest move
     Sinks.publishSnapshot(CdcMerge.applied(merged).drop("outcome"),
       "transaction_date", tablePath)
-    val row = try scala.concurrent.Await.result(observed.future, statsWait)
-      catch { case e: java.util.concurrent.TimeoutException =>
-        throw new IllegalStateException(s"applyMonthly of $updateCsv into $tablePath: " +
-          s"the snapshot was published but its merge statistics did not arrive " +
-          s"within $statsWait", e)
-      }
+    val row = awaitObserved(observed, s"applyMonthly of $updateCsv into $tablePath")
     CdcMerge.outcomes.map(o => o -> row.getAs[Long](o)).filter(_._2 > 0).toMap
   }
 

@@ -24,12 +24,13 @@ import graft.sources.Tables
   */
 object CorpusExport {
 
-  /** @param persistDir when set, the cleaned corpus (the one subplan
-    *   three downstream stages re-read) is materialized as parquet
-    *   under this path — the durable stage boundary for a real
-    *   cluster, where an executor loss must not kill the export.
-    *   When None, `localCheckpoint` materializes on executor-local
-    *   storage: cheaper, single-process only (the sandbox binding).
+  /** @param persistDir when set, every stage boundary of the export
+    *   (the cleaned corpus and the `surviving`/`kept` tail) is
+    *   materialized as parquet under this path — durable boundaries
+    *   for a real cluster, where an executor loss must not kill the
+    *   export. When None, `localCheckpoint` materializes on
+    *   executor-local storage: cheaper, single-process only (the
+    *   sandbox binding).
     * @param exactPairs forwarded to [[NearDedup.cleanCorpus]]: PPJoin
     *   exact-Jaccard pair generation instead of MinHash — same scale
     *   shape, deterministic, which is what lets the registered
@@ -38,17 +39,17 @@ object CorpusExport {
                      rates: Map[String, Int],
                      persistDir: Option[String] = None,
                      exactPairs: Boolean = false): DataFrame = {
+    def boundary(df: DataFrame, name: String): DataFrame = persistDir match {
+      case Some(dir) =>
+        val p = s"$dir/$name.parquet"
+        df.write.mode(SaveMode.Overwrite).parquet(p)
+        docs.sparkSession.read.parquet(p)
+      case None => df.localCheckpoint()
+    }
     // the cleaned corpus feeds three downstream subplans (shingling,
     // the doc_id semi-joins, packing); materialize it ONCE instead of
     // re-running the iterative cluster resolution per reference
-    val cleanPlan = NearDedup.cleanCorpus(docs, exactPairs = exactPairs)
-    val clean = persistDir match {
-      case Some(dir) =>
-        val p = s"$dir/clean_corpus.parquet"
-        cleanPlan.write.mode(SaveMode.Overwrite).parquet(p)
-        docs.sparkSession.read.parquet(p)
-      case None => cleanPlan.localCheckpoint()
-    }
+    val clean = boundary(NearDedup.cleanCorpus(docs, exactPairs = exactPairs), "clean_corpus")
     val uncontaminated = NearDedup.decontaminateOf(clean, benchmark)
       .filter(col("is_contaminated") === 0)
       .select("doc_id")
@@ -59,9 +60,9 @@ object CorpusExport {
     // once (guide §1.2; A/B'd in Profile `export2`: ~7% wall, unlike
     // the incremental-split case where the duplicated subtrees ran
     // concurrently and a checkpoint serialized them)
-    val surviving = clean.join(uncontaminated, "doc_id").localCheckpoint()
+    val surviving = boundary(clean.join(uncontaminated, "doc_id"), "surviving")
     val sampled = TextOps.stratifiedSampleOf(surviving, rates).select("doc_id")
-    val kept = surviving.join(sampled, "doc_id").localCheckpoint()
+    val kept = boundary(surviving.join(sampled, "doc_id"), "kept")
     val split = TextOps.splitAssignOf(kept).select("doc_id", "split")
     // shard count scales with the corpus (packShardsFor on the input
     // count — an upper bound of the kept set, one cheap column scan),

@@ -495,8 +495,9 @@ class DataMixSpec extends AnyFunSuite {
       TextOps.sampleRates, persistDir = Some(dir)).collect().toSeq
     val viaLocal = CorpusExport.exportCorpus(spark, sf).collect().toSeq
     assert(viaDisk === viaLocal)
-    // the cluster-safe stage boundary actually landed on disk
-    assert(new java.io.File(s"$dir/clean_corpus.parquet").exists())
+    // every cluster-safe stage boundary, the tail included, landed on disk
+    for (b <- Seq("clean_corpus", "surviving", "kept"))
+      assert(new java.io.File(s"$dir/$b.parquet/_SUCCESS").exists(), b)
   }
 
   test("quality model: degenerate docs score below normal prose, empties at zero") {

@@ -125,6 +125,36 @@ class PipelineSpec extends AnyFunSuite {
     assert(parts.count(_.startsWith("txn_month=")) === 4)
   }
 
+  test("contentHash: one job, and the same string as the global-agg formula") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.types.DecimalType
+    def aggHash(df: DataFrame): String = {
+      val h = df.select(xxhash64(df.columns.map(col): _*).cast(DecimalType(38, 0)).as("h"))
+        .agg(sum(col("h")).as("s"), count(lit(1)).as("n"))
+        .head()
+      val s = if (h.isNullAt(0)) "0" else h.getDecimal(0).toBigInteger.toString(16)
+      s"$s-${h.getLong(1)}"
+    }
+    val rnd = new scala.util.Random(19)
+    def cell[A](a: => A): Option[A] = if (rnd.nextInt(5) == 0) None else Some(a)
+    val frames = (1 to 6).map { i =>
+      val rows = Seq.fill(rnd.nextInt(60))((
+        cell(rnd.nextInt(8).toString), cell(rnd.nextLong()), cell(rnd.nextDouble()),
+        cell(java.sql.Date.valueOf(f"2024-${1 + rnd.nextInt(12)}%02d-01"))))
+      // duplicate rows: a repeated row must count twice, not cancel
+      (rows ++ rows.take(i * 3)).toDF("s", "l", "d", "dt").repartition(1 + i % 3)
+    } :+ Seq.empty[(String, Long)].toDF("s", "l")
+    for (df <- frames) assert(Pipeline.contentHash(df) === aggHash(df))
+    assert(Pipeline.contentHash(frames.last) === "0-0")
+
+    val group = s"contentHash-${java.util.UUID.randomUUID}"
+    spark.sparkContext.setJobGroup(group, "contentHash job count")
+    // a shuffle-free input: the hash itself adds exactly one job
+    try Pipeline.contentHash(spark.range(1000).selectExpr("id", "cast(id % 7 as string) s"))
+    finally spark.sparkContext.clearJobGroup()
+    assert(spark.sparkContext.statusTracker.getJobIdsForGroup(group).length === 1)
+  }
+
   test("durable file log: the ingest decision survives a restart") {
     import graft.sources.FileLog
     val logDir = Files.createTempDirectory("filelog").toString + "/log"

@@ -283,12 +283,51 @@ object NearDedup {
     ngramJaccardOf(Tables.documentsNarrow(spark, dir), threshold)
       .orderBy("id_a", "id_b")
 
+  /** Components of a small checkpointed edge set (columns `a`, `b`;
+    * `n` rows) on the driver: `(doc_id, cluster_id = component
+    * minimum)` for every endpoint, from one 1-task collect and a
+    * union-find over sorted distinct ids (the smaller root wins, so it
+    * stays the minimum), as a local relation the callers' joins
+    * broadcast. None above the broadcast threshold at 16 B an edge
+    * (64 MB ≈ 4M edges under GraftSession; ≤ 0 turns it off): the
+    * driver takes what a broadcast build side may. An empty set answers
+    * with its own checkpoint (measured, r20: an empty local relation
+    * costs clusterSplitIncrPrebuilt one more job and 0.3-1.2 s). */
+  private def componentsOnDriver(edges: DataFrame, n: Long, a: String, b: String): Option[DataFrame] = {
+    if (n == 0) return Some(edges.select(col(a).as("doc_id"), col(b).as("cluster_id")))
+    val spark = edges.sparkSession
+    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+    if (threshold <= 0 || n > threshold / 16) return None
+    val rows = edges.select(col(a).cast(LongType), col(b).cast(LongType)).coalesce(1).collect()
+    val ends = rows.flatMap(r => Array(r.getLong(0), r.getLong(1)))
+    java.util.Arrays.sort(ends)
+    var k = 0
+    ends.indices.foreach { i => if (i == 0 || ends(i) != ends(k - 1)) { ends(k) = ends(i); k += 1 } }
+    val parent = Array.range(0, k)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var y = x
+      while (parent(y) != r) { val next = parent(y); parent(y) = r; y = next }
+      r
+    }
+    rows.foreach { r =>
+      val x = find(java.util.Arrays.binarySearch(ends, 0, k, r.getLong(0)))
+      val y = find(java.util.Arrays.binarySearch(ends, 0, k, r.getLong(1)))
+      if (x < y) parent(y) = x else if (y < x) parent(x) = y
+    }
+    val t = edges.schema(a).dataType
+    Some(spark.createDataFrame((0 until k).map(i => (ends(i), ends(find(i)))))
+      .select(col("_1").cast(t).as("doc_id"), col("_2").cast(t).as("cluster_id")))
+  }
+
   /** Connected components over a duplicate-pair list → cluster label
-    * (the minimum doc_id of the component). Iterative min-label
-    * propagation: each round is one distributed join+aggregate, the
-    * driver only checks the converged-count; rounds ≤ component
-    * diameter (tiny for dup clusters). `localCheckpoint` truncates
-    * the growing lineage each round. */
+    * (the minimum doc_id of the component): on the driver up to ~4M
+    * pairs ([[componentsOnDriver]]), 2 jobs in all; above, iterative
+    * min-label propagation: each round is one distributed
+    * join+aggregate, the driver only checks the converged-count; rounds
+    * ≤ component diameter (tiny for dup clusters). `localCheckpoint`
+    * truncates the growing lineage each round. */
   def duplicateClusters(pairs: DataFrame): DataFrame = {
     // materialize the (possibly expensive — PPJoin/MinHash) pair plan
     // ONCE before mirroring it: a union of two instances of the same
@@ -299,12 +338,10 @@ object NearDedup {
     val p0 = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
       .observe(obsEdges, count(lit(1)).as("n"))
       .localCheckpoint(true)
-    // duplicate-free input (the COMMON case for a clean streaming
-    // batch): no edges means no clusters — skip the symmetrize
-    // checkpoint and the whole propagation loop (each a job), and
-    // return the empty labeling directly.
-    if (obsEdges.get.apply("n").asInstanceOf[Long] == 0L)
-      return p0.select(col("src").as("doc_id"), col("dst").as("cluster_id"))
+    // a duplicate-free input (the COMMON case for a clean streaming
+    // batch) and any graph up to the bound take no further job here
+    val onDriver = componentsOnDriver(p0, obsEdges.get.apply("n").asInstanceOf[Long], "src", "dst")
+    if (onDriver.isDefined) return onDriver.get
     // PARTITIONING IS THE LOOP INVARIANT (guide §2.4 exchange reuse):
     // edges hash-partitioned on dst ONCE, labels kept hash-partitioned
     // on id across rounds (localCheckpoint records the physical
@@ -354,8 +391,10 @@ object NearDedup {
 
   /** Connected components by alternating large-star / small-star
     * contraction (Kiveris et al., "Connected Components in MapReduce
-    * and Beyond", SoCC'14): converges in O(log²) rounds REGARDLESS of
-    * component diameter, where min-label propagation
+    * and Beyond", SoCC'14). Up to ~4M canonical edges (the bound of
+    * [[componentsOnDriver]]) the edge checkpoint is resolved on the
+    * driver. Above it, the contraction converges in O(log²) rounds
+    * REGARDLESS of component diameter, where min-label propagation
     * ([[duplicateClusters]]) needs diameter rounds — the difference
     * between ~5 jobs and ~200 on an adversarial 200-link chain (mirror
     * farms, quote cascades re-quoting each other). Per round: two
@@ -363,11 +402,10 @@ object NearDedup {
     * shuffles on node ids (AQE-skew-safe; the large-star step is
     * exactly what caps hot-node neighborhoods). Same output contract
     * as [[duplicateClusters]] — (doc_id, cluster_id = component
-    * minimum) — spec-pinned equal on random graphs, and the chain spec
-    * pins the round count at the logarithmic bound. The swap-in for
-    * corpora whose duplicate graph is adversarial; the default
-    * pipeline keeps min-label propagation (duplicate clusters are
-    * near-cliques, diameter ≤ ~3, where it is strictly cheaper). */
+    * minimum) — spec-pinned equal on random graphs and a 64-link chain.
+    * Above the bound, the swap-in for adversarial duplicate graphs; the
+    * default pipeline keeps min-label propagation (duplicate clusters
+    * are near-cliques, diameter ≤ ~3, where it is strictly cheaper). */
   def duplicateClustersStar(pairs: DataFrame): DataFrame = {
     def canon(e: DataFrame): DataFrame =
       e.filter(col("u") =!= col("v"))
@@ -402,9 +440,8 @@ object NearDedup {
     }
     val (edges0, n0) = ckptCounted(
       canon(pairs.select(col("id_a").as("u"), col("id_b").as("v"))))
-    // empty edge set: nothing to contract (see duplicateClusters)
-    if (n0 == 0L)
-      return edges0.select(col("u").as("doc_id"), col("v").as("cluster_id"))
+    val onDriver = componentsOnDriver(edges0, n0, "u", "v")
+    if (onDriver.isDefined) return onDriver.get
     val nodes = symmetric(edges0)
       .select("u").distinct().localCheckpoint(true)
     var edges = edges0

@@ -334,44 +334,6 @@ object Profile {
         time("rank_ckpt_per_iter")(rankCkptPerIter(3).orderBy("node"))
         time("rank_unrolled_again")(graft.operators.GraphRank.pageRankOf(edges, 3).orderBy("node"))
         time("rank_ckpt_again")(rankCkptPerIter(3).orderBy("node"))
-      case "cc" =>
-        val docs = Tables.documents(spark, sfDir)
-        val quality = TextOps.qualityScoreOf(docs)
-          .filter(col("n_tokens") >= 5 && col("alpha_ratio") >= 0.5)
-          .select("doc_id")
-        val qualified = docs.join(quality, "doc_id")
-        val pairs = NearDedup.ngramJaccardOf(qualified, 0.5).select("id_a", "id_b")
-        def t[A](name: String)(f: => A): A = {
-          val t0 = System.nanoTime(); val r = f
-          println(f"STEP $name%-28s ${(System.nanoTime() - t0) / 1e9}%7.3f"); r
-        }
-        (1 to 3).foreach { pass =>
-          println(s"--- pass $pass ---")
-          val p0 = t("pairs_ckpt") {
-            pairs.select(col("id_a").as("src"), col("id_b").as("dst")).localCheckpoint(true)
-          }
-          t("isEmpty")(p0.isEmpty)
-          val edges = t("edges_ckpt") {
-            p0.union(p0.select(col("dst").as("src"), col("src").as("dst")))
-              .repartition(col("dst")).localCheckpoint(true)
-          }
-          var labels = t("labels_ckpt") {
-            edges.select(col("src").as("id")).distinct()
-              .withColumn("label", col("id")).localCheckpoint(true)
-          }
-          var changed = 1L
-          var round = 0
-          while (changed > 0) {
-            round += 1
-            val prop = edges.join(labels, edges("dst") === labels("id"))
-              .select(col("src").as("id"), col("label"))
-              .union(labels)
-              .groupBy("id").agg(min(col("label")).as("new_label"))
-            val joined = t(s"round$round joined_ckpt")(labels.join(prop, "id").localCheckpoint(true))
-            changed = t(s"round$round count")(joined.filter(col("new_label") < col("label")).count())
-            labels = joined.select(col("id"), col("new_label").as("label"))
-          }
-        }
       case other =>
         System.err.println(s"unknown section $other")
     }

@@ -106,30 +106,6 @@ class ConstraintSpec extends AnyFunSuite {
     intercept[ConstraintViolation] { Constraints.validate(spark, t) }
   }
 
-  /** Spark jobs triggered by `body`, via a listener (polled until the
-    * count stops moving — listener delivery is async). */
-  private def jobsDuring(body: => Unit): Int = {
-    val counter = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        counter.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      var last = -1
-      var stable = 0
-      while (stable < 3) { // three quiet polls = the bus has drained
-        Thread.sleep(100)
-        val now = counter.get()
-        if (now == last) stable += 1 else { stable = 0; last = now }
-      }
-      counter.get()
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
-
   test("enforcement is in-flight: 3 constraints add zero Spark jobs to a publish") {
     // two stores, identical shape and data; one carries 3 constraints
     val plain = freshStore()

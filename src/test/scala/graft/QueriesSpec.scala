@@ -11,6 +11,30 @@ object TestSpark {
     s
   }
   val sf = "/root/testdata/sf0.001"
+
+  /** Spark jobs triggered by `body`, via a listener (polled until the
+    * count stops moving — listener delivery is async). */
+  def jobsDuring(body: => Unit): Int = {
+    val counter = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        counter.incrementAndGet(); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      var last = -1
+      var stable = 0
+      while (stable < 3) { // three quiet polls = the bus has drained
+        Thread.sleep(100)
+        val now = counter.get()
+        if (now == last) stable += 1 else { stable = 0; last = now }
+      }
+      counter.get()
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
 }
 
 /** Every declared query runs, is non-degenerate, and each oracle key

@@ -35,7 +35,6 @@ object GraftSession {
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
         sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCED_PARTITION", "128k"))
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // also bounds the duplicate graphs NearDedup resolves on the driver
       .config("spark.sql.autoBroadcastJoinThreshold", (64 * 1024 * 1024).toString)
       .config("spark.sql.parquet.filterPushdown", "true")
       // Partition discovery above this many paths becomes a distributed

@@ -283,26 +283,39 @@ object NearDedup {
     ngramJaccardOf(Tables.documentsNarrow(spark, dir), threshold)
       .orderBy("id_a", "id_b")
 
-  /** Components of a small checkpointed edge set (columns `a`, `b`;
-    * `n` rows) on the driver: `(doc_id, cluster_id = component
-    * minimum)` for every endpoint, from one 1-task collect and a
-    * union-find over sorted distinct ids (the smaller root wins, so it
-    * stays the minimum), as a local relation the callers' joins
-    * broadcast. None above the broadcast threshold at 16 B an edge
-    * (64 MB ≈ 4M edges under GraftSession; ≤ 0 turns it off): the
-    * driver takes what a broadcast build side may. An empty set answers
-    * with its own checkpoint (measured, r20: an empty local relation
-    * costs clusterSplitIncrPrebuilt one more job and 0.3-1.2 s). */
-  private def componentsOnDriver(edges: DataFrame, n: Long, a: String, b: String): Option[DataFrame] = {
-    if (n == 0) return Some(edges.select(col(a).as("doc_id"), col(b).as("cluster_id")))
-    val spark = edges.sparkSession
-    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
-    if (threshold <= 0 || n > threshold / 16) return None
-    val rows = edges.select(col(a).cast(LongType), col(b).cast(LongType)).coalesce(1).collect()
-    val ends = rows.flatMap(r => Array(r.getLong(0), r.getLong(1)))
-    java.util.Arrays.sort(ends)
+  /** Largest duplicate graph, in edges, that [[duplicateClusters]] and
+    * [[duplicateClustersStar]] resolve on the driver; the distributed
+    * loops serve only graphs above it. Measured by Profile's
+    * `components` section on generated graphs, 4 cores
+    * (plans/r20/components.md): against min-label propagation the
+    * driver path took 64 % less time at 10^4 edges, 24 % less at this
+    * bound, and about as long at 10^6 and 2·10^6; star contraction took
+    * 1.3-7.6× as long as it throughout. At this bound the result holds at
+    * most 2^20 rows, a 93 MB local relation that Spark sizes at 24 B a
+    * row: 24 MB, under GraftSession's 64 MB broadcast threshold, so the
+    * callers' joins broadcast it. */
+  private val DriverEdges = 1L << 19
+
+  /** Components of a checkpointed edge set (columns `a`, `b`; `n` rows,
+    * at most [[DriverEdges]]) on the driver: `(doc_id, cluster_id =
+    * component minimum)` for every endpoint, as a local relation. The
+    * endpoints stream from one 1-task job into a primitive array (16 B
+    * an edge, and as much again for its sorted distinct copy); a
+    * union-find over the distinct ids links to the smaller root, so
+    * every root is its component's minimum. An empty set answers with
+    * its own checkpoint (measured, r20: an empty local relation costs
+    * clusterSplitIncrPrebuilt one more job and 0.3-1.2 s). */
+  private def componentsOnDriver(edges: DataFrame, n: Long, a: String, b: String): DataFrame = {
+    if (n == 0) return edges.select(col(a).as("doc_id"), col(b).as("cluster_id"))
+    val ends = new scala.collection.mutable.ArrayBuilder.ofLong
+    ends.sizeHint((2 * n).toInt)
+    edges.select(col(a).cast(LongType), col(b).cast(LongType)).coalesce(1).toLocalIterator()
+      .forEachRemaining { r => ends += r.getLong(0); ends += r.getLong(1) }
+    val pairs = ends.result()
+    val ids = pairs.clone()
+    java.util.Arrays.sort(ids)
     var k = 0
-    ends.indices.foreach { i => if (i == 0 || ends(i) != ends(k - 1)) { ends(k) = ends(i); k += 1 } }
+    ids.indices.foreach { i => if (i == 0 || ids(i) != ids(k - 1)) { ids(k) = ids(i); k += 1 } }
     val parent = Array.range(0, k)
     def find(x: Int): Int = {
       var r = x
@@ -311,24 +324,29 @@ object NearDedup {
       while (parent(y) != r) { val next = parent(y); parent(y) = r; y = next }
       r
     }
-    rows.foreach { r =>
-      val x = find(java.util.Arrays.binarySearch(ends, 0, k, r.getLong(0)))
-      val y = find(java.util.Arrays.binarySearch(ends, 0, k, r.getLong(1)))
+    (0 until pairs.length by 2).foreach { i =>
+      val x = find(java.util.Arrays.binarySearch(ids, 0, k, pairs(i)))
+      val y = find(java.util.Arrays.binarySearch(ids, 0, k, pairs(i + 1)))
       if (x < y) parent(y) = x else if (y < x) parent(x) = y
     }
     val t = edges.schema(a).dataType
-    Some(spark.createDataFrame((0 until k).map(i => (ends(i), ends(find(i)))))
-      .select(col("_1").cast(t).as("doc_id"), col("_2").cast(t).as("cluster_id")))
+    edges.sparkSession.createDataFrame((0 until k).map(i => (ids(i), ids(find(i)))))
+      .select(col("_1").cast(t).as("doc_id"), col("_2").cast(t).as("cluster_id"))
   }
 
   /** Connected components over a duplicate-pair list → cluster label
-    * (the minimum doc_id of the component): on the driver up to ~4M
-    * pairs ([[componentsOnDriver]]), 2 jobs in all; above, iterative
-    * min-label propagation: each round is one distributed
-    * join+aggregate, the driver only checks the converged-count; rounds
-    * ≤ component diameter (tiny for dup clusters). `localCheckpoint`
-    * truncates the growing lineage each round. */
-  def duplicateClusters(pairs: DataFrame): DataFrame = {
+    * (the minimum doc_id of the component): on the driver up to
+    * [[DriverEdges]] pairs ([[componentsOnDriver]]), 2 jobs in all;
+    * above, iterative min-label propagation: each round is one
+    * distributed join+aggregate, the driver only checks the
+    * converged-count; rounds ≤ component diameter (tiny for dup
+    * clusters). `localCheckpoint` truncates the growing lineage each
+    * round. */
+  def duplicateClusters(pairs: DataFrame): DataFrame = duplicateClusters(pairs, DriverEdges)
+
+  /** [[duplicateClusters]] with the driver bound given: 0 runs the
+    * distributed loop on every non-empty graph. */
+  private[graft] def duplicateClusters(pairs: DataFrame, driverEdges: Long): DataFrame = {
     // materialize the (possibly expensive — PPJoin/MinHash) pair plan
     // ONCE before mirroring it: a union of two instances of the same
     // subtree computes that subtree twice. The edge count rides the
@@ -340,8 +358,8 @@ object NearDedup {
       .localCheckpoint(true)
     // a duplicate-free input (the COMMON case for a clean streaming
     // batch) and any graph up to the bound take no further job here
-    val onDriver = componentsOnDriver(p0, obsEdges.get.apply("n").asInstanceOf[Long], "src", "dst")
-    if (onDriver.isDefined) return onDriver.get
+    val n = obsEdges.get.apply("n").asInstanceOf[Long]
+    if (n <= driverEdges) return componentsOnDriver(p0, n, "src", "dst")
     // PARTITIONING IS THE LOOP INVARIANT (guide §2.4 exchange reuse):
     // edges hash-partitioned on dst ONCE, labels kept hash-partitioned
     // on id across rounds (localCheckpoint records the physical
@@ -391,10 +409,10 @@ object NearDedup {
 
   /** Connected components by alternating large-star / small-star
     * contraction (Kiveris et al., "Connected Components in MapReduce
-    * and Beyond", SoCC'14). Up to ~4M canonical edges (the bound of
-    * [[componentsOnDriver]]) the edge checkpoint is resolved on the
-    * driver. Above it, the contraction converges in O(log²) rounds
-    * REGARDLESS of component diameter, where min-label propagation
+    * and Beyond", SoCC'14). Up to [[DriverEdges]] canonical edges the
+    * edge checkpoint is resolved on the driver ([[componentsOnDriver]]).
+    * Above it, the contraction converges in O(log²) rounds REGARDLESS
+    * of component diameter, where min-label propagation
     * ([[duplicateClusters]]) needs diameter rounds — the difference
     * between ~5 jobs and ~200 on an adversarial 200-link chain (mirror
     * farms, quote cascades re-quoting each other). Per round: two
@@ -406,7 +424,11 @@ object NearDedup {
     * Above the bound, the swap-in for adversarial duplicate graphs; the
     * default pipeline keeps min-label propagation (duplicate clusters
     * are near-cliques, diameter ≤ ~3, where it is strictly cheaper). */
-  def duplicateClustersStar(pairs: DataFrame): DataFrame = {
+  def duplicateClustersStar(pairs: DataFrame): DataFrame = duplicateClustersStar(pairs, DriverEdges)
+
+  /** [[duplicateClustersStar]] with the driver bound given: 0 runs the
+    * contraction on every non-empty graph. */
+  private[graft] def duplicateClustersStar(pairs: DataFrame, driverEdges: Long): DataFrame = {
     def canon(e: DataFrame): DataFrame =
       e.filter(col("u") =!= col("v"))
         .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
@@ -440,8 +462,7 @@ object NearDedup {
     }
     val (edges0, n0) = ckptCounted(
       canon(pairs.select(col("id_a").as("u"), col("id_b").as("v"))))
-    val onDriver = componentsOnDriver(edges0, n0, "u", "v")
-    if (onDriver.isDefined) return onDriver.get
+    if (n0 <= driverEdges) return componentsOnDriver(edges0, n0, "u", "v")
     val nodes = symmetric(edges0)
       .select("u").distinct().localCheckpoint(true)
     var edges = edges0
@@ -475,14 +496,12 @@ object NearDedup {
       .select(col("u").as("doc_id"), coalesce(col("lbl"), col("u")).as("cluster_id"))
   }
 
-  /** Registered `d_dup_clusters`: the large-star/small-star component
-    * resolution ([[duplicateClustersStar]]) over deterministic PPJoin
-    * pair generation, hash-matched against a DuckDB oracle whose
-    * label propagation is a recursive CTE — the adversarial-graph
-    * scale path carrying the SAME oracle discipline as the default
-    * min-label pipeline (OperatorSpec additionally pins the two
-    * algorithms equal on random graphs and the round count at the
-    * logarithmic bound on a 200-link chain). */
+  /** Registered `d_dup_clusters`: [[duplicateClustersStar]] over
+    * deterministic PPJoin pair generation, hash-matched against a
+    * DuckDB oracle whose label propagation is a recursive CTE. Below
+    * [[DriverEdges]] pairs (every registered scale) the components are
+    * resolved on the driver, not by the star contraction; ComponentsSpec
+    * pins the two equal. */
   def dupClustersStar(spark: SparkSession, dir: String): DataFrame = {
     val pairs = ngramJaccardOf(Tables.documents(spark, dir), 0.8)
     duplicateClustersStar(pairs.select("id_a", "id_b")).orderBy("doc_id")

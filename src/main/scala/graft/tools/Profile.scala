@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * contract): times named sub-plans of the expensive dedup/export
   * queries with the noop sink so optimization work can see WHICH stage
   * of a composition carries the cost. Usage:
-  *   runMain graft.tools.Profile <sfDir> <section> [passes]
+  *   runMain graft.tools.Profile <sfDir> <section> [passes] [section args]
   */
 object Profile {
   def main(args: Array[String]): Unit = {
@@ -277,63 +277,70 @@ object Profile {
           .except(pairsRepart()).count() +
           pairsRepart().except(NearDedup.ngramJaccardOf(docs, threshold)).count()
         println(s"PPJOIN3 baseline=$nb repart=$nr symmetric_diff=$diff")
-      case "export2" =>
-        // A/B the export tail: as-shipped (surviving/kept as repeated
-        // subtrees of one action) vs eager checkpoints at the
-        // surviving and kept boundaries.
-        val docs = Tables.documents(spark, sfDir)
-        val corpus = docs.filter(col("doc_id") % 20 =!= 0)
-        val benchmark = docs.filter(col("doc_id") % 20 === 0)
-        def exportCkpt(): DataFrame = {
-          val clean = NearDedup.cleanCorpus(corpus, exactPairs = true).localCheckpoint()
-          val uncontaminated = NearDedup.decontaminateOf(clean, benchmark)
-            .filter(col("is_contaminated") === 0).select("doc_id")
-          val surviving = clean.join(uncontaminated, "doc_id").localCheckpoint()
-          val sampled = TextOps.stratifiedSampleOf(surviving, TextOps.sampleRates).select("doc_id")
-          val kept = surviving.join(sampled, "doc_id").localCheckpoint()
-          val split = TextOps.splitAssignOf(kept).select("doc_id", "split")
-          TextOps.packSequencesOf(kept.join(split, "doc_id"),
-              nShards = TextOps.packShardsFor(corpus.count()), groupCols = Seq("split"))
-            .orderBy("doc_id")
-        }
-        time("export_shipped")(graft.operators.CorpusExport.exportCorpus(spark, sfDir))
-        time("export_ckpt_tail")(exportCkpt())
-        time("export_shipped_again")(graft.operators.CorpusExport.exportCorpus(spark, sfDir))
-        time("export_ckpt_again")(exportCkpt())
-      case "rank" =>
-        // A/B PageRank iteration materialization: the unrolled linear
-        // DAG (current pageRankOf) vs an eager localCheckpoint per
-        // iteration (the pre-r17 shape).
-        val edges = Tables.orders(spark, sfDir)
-          .join(Tables.lineitem(spark, sfDir),
-            col("o_orderkey") === col("l_orderkey"))
-          .select(concat(lit("c"), col("o_custkey").cast("string")).as("src"),
-            concat(lit("s"), col("l_suppkey").cast("string")).as("dst"))
-          .distinct()
-        def rankCkptPerIter(iters: Int): DataFrame = {
-          val e = edges.select(col("src"), col("dst")).localCheckpoint()
-          val nodes = e.select(col("src").as("node"))
-            .union(e.select(col("dst").as("node"))).distinct().localCheckpoint()
-          val outdeg = e.groupBy("src").agg(count(lit(1)).as("outdeg")).localCheckpoint()
-          var ranks = nodes.withColumn("rank", lit(1000000L))
-          for (_ <- 1 to iters) {
-            val contribs = e
-              .join(ranks.withColumnRenamed("node", "src"), "src")
-              .join(outdeg, "src")
-              .select(col("dst").as("node"), expr("rank div outdeg").as("c"))
-              .groupBy("node").agg(sum(col("c")).as("in_sum"))
-            ranks = nodes.join(contribs, Seq("node"), "left")
-              .select(col("node"),
-                (lit(150000L) + expr("(850000 * coalesce(in_sum, 0L)) div 1000000"))
-                  .as("rank"))
-              .localCheckpoint()
+      case "components" =>
+        // The three components paths on generated duplicate graphs:
+        // args(3) = comma-separated edge counts, args(4) = clique size
+        // (4: 6 edges a cluster; 2: disjoint pairs, 2 result rows an
+        // edge), doc ids scattered over [0, 2^40). Per path: wall ms
+        // (pass 0 is the warm-up), jobs, and the JVM heap the local
+        // driver and executors share, on the last pass: pool peaks
+        // summed (garbage included) and what stays after a GC while the
+        // result is held; for the driver path also the local relation's
+        // size and Spark's estimate of it, which broadcasting compares
+        // with spark.sql.autoBroadcastJoinThreshold.
+        import scala.jdk.CollectionConverters._
+        val sizes = args.lift(3).getOrElse("10000,100000,1000000").split(",").map(_.toLong)
+        val clique = args.lift(4).fold(4)(_.toInt)
+        val (xs, ys) = (for (x <- 0 until clique; y <- x + 1 until clique) yield (x, y)).unzip
+        def node(local: Seq[Int]) = pmod(
+          (floor(col("id") / xs.length) * clique +
+            element_at(typedLit(local), (col("id") % xs.length + 1).cast("int"))) * 2654435761L,
+          lit(1L << 40))
+        val jobs = new java.util.concurrent.atomic.AtomicInteger
+        spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+          override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+            jobs.incrementAndGet(); ()
           }
-          ranks
+        })
+        def settledJobs(): Int = {
+          var (last, now) = (-1, jobs.get())
+          while (now != last) { Thread.sleep(300); last = now; now = jobs.get() }
+          now
         }
-        time("rank_unrolled")(graft.operators.GraphRank.pageRankOf(edges, 3).orderBy("node"))
-        time("rank_ckpt_per_iter")(rankCkptPerIter(3).orderBy("node"))
-        time("rank_unrolled_again")(graft.operators.GraphRank.pageRankOf(edges, 3).orderBy("node"))
-        time("rank_ckpt_again")(rankCkptPerIter(3).orderBy("node"))
+        val pools = java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
+          .filter(_.getType == java.lang.management.MemoryType.HEAP)
+        def usedAfterGc(): Long = { System.gc(); pools.map(_.getUsage.getUsed).sum }
+        val mb = (bytes: Long) => f"${bytes / 1048576.0}%.1f"
+        val paths = Seq[(String, DataFrame => DataFrame)](
+          "driver" -> (p => NearDedup.duplicateClusters(p, Long.MaxValue)),
+          "min_label" -> (p => NearDedup.duplicateClusters(p, 0)),
+          "star" -> (p => NearDedup.duplicateClustersStar(p, 0)))
+        sizes.foreach { n =>
+          val pairs = spark.range(n).select(node(xs).as("id_a"), node(ys).as("id_b")).localCheckpoint()
+          for ((path, cc) <- paths) {
+            val runs = (0 to passes).map { _ =>
+              val base = usedAfterGc()
+              pools.foreach(_.resetPeakUsage())
+              val jobs0 = settledJobs()
+              val t0 = System.nanoTime()
+              val out = cc(pairs)
+              out.write.format("noop").mode("overwrite").save()
+              val ms = (System.nanoTime() - t0) / 1e6
+              val peak = pools.map(_.getPeakUsage.getUsed).sum - base
+              val held = usedAfterGc() - base
+              (ms, settledJobs() - jobs0, peak, held, out)
+            }
+            val (_, nJobs, peak, held, out) = runs.last
+            val local = out.queryExecution.analyzed.collectFirst {
+              case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+                s" rows=${l.data.length} local_mb=${mb(org.apache.spark.util.SizeEstimator.estimate(l.data))}" +
+                  s" estimate_mb=${mb(out.queryExecution.optimizedPlan.stats.sizeInBytes.toLong)}"
+            }.getOrElse("")
+            println(f"COMP clique=$clique edges=$n%-8d $path%-9s min_ms=${runs.tail.map(_._1).min}%9.0f " +
+              s"all_ms=${runs.map(r => f"${r._1}%.0f").mkString(",")} jobs=$nJobs " +
+              s"peak_mb=${mb(peak)} held_mb=${mb(held)}$local")
+          }
+        }
       case other =>
         System.err.println(s"unknown section $other")
     }

@@ -4,28 +4,21 @@ import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.NearDedup
 
-/** The connected-components operators resolve a duplicate graph under
-  * the session's broadcast threshold on the driver (one union-find
-  * pass) and run their distributed loops above it: min-label
-  * propagation for [[NearDedup.duplicateClusters]], large-star/
-  * small-star contraction for [[NearDedup.duplicateClustersStar]].
-  * A threshold of -1 forces the loops, so both paths stay covered and
-  * are pinned equal here — rows, column names and types. */
+/** The connected-components operators resolve a small duplicate graph
+  * on the driver (one union-find pass) and run their distributed loops
+  * above a fixed edge bound: min-label propagation for
+  * [[NearDedup.duplicateClusters]], large-star/small-star contraction
+  * for [[NearDedup.duplicateClustersStar]]. A bound of 0 runs the
+  * loops, so both paths stay covered and are pinned equal here — rows,
+  * column names and types. */
 class ComponentsSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
 
-  private val entryPoints = Seq[(String, DataFrame => DataFrame)](
-    "duplicateClusters" -> (p => NearDedup.duplicateClusters(p)),
-    "duplicateClustersStar" -> (p => NearDedup.duplicateClustersStar(p)))
-
-  /** `body` with the broadcast threshold at -1 (the distributed loops). */
-  private def distributed[A](body: => A): A = {
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val before = spark.conf.get(key)
-    spark.conf.set(key, "-1")
-    try body finally spark.conf.set(key, before)
-  }
+  /** Each entry point with its distributed loop as the reference. */
+  private val entryPoints = Seq[(String, DataFrame => DataFrame, DataFrame => DataFrame)](
+    ("duplicateClusters", NearDedup.duplicateClusters(_), NearDedup.duplicateClusters(_, 0)),
+    ("duplicateClustersStar", NearDedup.duplicateClustersStar(_), NearDedup.duplicateClustersStar(_, 0)))
 
   private val fixture = Seq((1L, 2L), (2L, 3L), (3L, 9L), (5L, 6L))
 
@@ -51,11 +44,10 @@ class ComponentsSpec extends AnyFunSuite {
       (1 to 20).map(s => s"random graph $s" -> randomGraph(s).toDF("id_a", "id_b"))
     def rows(df: DataFrame) = df.collect().map(_.toSeq).sortBy(_.mkString(",")).toSeq
     def schema(df: DataFrame) = df.schema.map(f => f.name -> f.dataType)
-    for ((graph, pairs) <- graphs; (name, cc) <- entryPoints) {
-      val onDriver = cc(pairs)
-      val (loopSchema, loopRows) = distributed { val d = cc(pairs); (schema(d), rows(d)) }
-      assert(schema(onDriver) === loopSchema, s"$name on $graph")
-      assert(rows(onDriver) === loopRows, s"$name on $graph")
+    for ((graph, pairs) <- graphs; (name, cc, loop) <- entryPoints) {
+      val (onDriver, reference) = (cc(pairs), loop(pairs))
+      assert(schema(onDriver) === schema(reference), s"$name on $graph")
+      assert(rows(onDriver) === rows(reference), s"$name on $graph")
     }
   }
 
@@ -64,10 +56,10 @@ class ComponentsSpec extends AnyFunSuite {
     // the star's checkpoint canonicalizes through a `distinct`, whose
     // shuffle adaptive execution runs as a job of its own
     val driverJobs = Map("duplicateClusters" -> 2, "duplicateClustersStar" -> 3)
-    for ((name, cc) <- entryPoints) {
+    for ((name, cc, loop) <- entryPoints) {
       assert(jobsDuring(cc(pairs).collect()) === driverJobs(name), name)
-      val loopJobs = distributed(jobsDuring(cc(pairs).collect()))
-      assert(loopJobs > driverJobs(name), s"$name ran $loopJobs jobs with the threshold at -1")
+      val loopJobs = jobsDuring(loop(pairs).collect())
+      assert(loopJobs > driverJobs(name), s"$name ran $loopJobs jobs in its loop")
     }
   }
 }

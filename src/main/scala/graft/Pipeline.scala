@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import scala.concurrent.Future
+import scala.concurrent.duration.Duration
+
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{CdcMerge, Reconcile}
 import graft.sources.{FileLog, PricePaidCsv, Sinks}
@@ -50,7 +53,7 @@ object Pipeline {
         .cast(org.apache.spark.sql.types.DecimalType(38, 0)).as("h"))
       .observe(observed, sum(col("h")).as("s"), count(lit(1)).as("n"))
       .write.format("noop").mode("overwrite").save()
-    val h = awaitObserved(observed, "contentHash")
+    val h = awaitObserved(observed.future, "contentHash")
     val s = if (h.isNullAt(0)) "0" else h.getDecimal(0).toBigInteger.toString(16)
     s"$s-${h.getLong(1)}"
   }
@@ -79,15 +82,16 @@ object Pipeline {
     * computes it has returned. Metrics are delivered by a listener
     * right after the write job, so this bound is only ever reached
     * when they never come. */
-  private val statsWait = scala.concurrent.duration.Duration(60, "s")
+  private val statsWait = Duration(60, "s")
 
   /** The observed row, or an `IllegalStateException` naming `what`
-    * when it does not arrive within `statsWait`. */
-  private def awaitObserved(observed: Observation, what: => String) =
-    try scala.concurrent.Await.result(observed.future, statsWait)
+    * when it does not arrive within `wait`. */
+  private def awaitObserved(metrics: Future[Row], what: => String,
+                            wait: Duration = statsWait): Row =
+    try scala.concurrent.Await.result(metrics, wait)
     catch { case e: java.util.concurrent.TimeoutException =>
       throw new IllegalStateException(
-        s"$what: the write returned but its observed metrics did not arrive within $statsWait", e)
+        s"$what: the write returned but its observed metrics did not arrive within $wait", e)
     }
 
   /** Apply one monthly update file to the snapshot at tablePath;
@@ -101,7 +105,15 @@ object Pipeline {
     * outcomes are counted too, and they are computed by the snapshot
     * write itself. Statistics that do not arrive within `statsWait` of
     * the publish fail the call, naming the table. */
-  def applyMonthly(spark: SparkSession, updateCsv: String, tablePath: String): Map[String, Long] = {
+  def applyMonthly(spark: SparkSession, updateCsv: String, tablePath: String): Map[String, Long] =
+    applyMonthly(spark, updateCsv, tablePath, _.future, statsWait)
+
+  /** [[applyMonthly]] with the delivery of its observed metrics and
+    * the wait for them as parameters: the seam a spec uses to withhold
+    * the metrics. */
+  private[graft] def applyMonthly(spark: SparkSession, updateCsv: String, tablePath: String,
+                                  metrics: Observation => Future[Row],
+                                  wait: Duration): Map[String, Long] = {
     val base = Sinks.readSnapshot(spark, tablePath).drop("txn_month")
     val changes = PricePaidCsv.normalized(spark, updateCsv)
     val observed = Observation()
@@ -114,7 +126,7 @@ object Pipeline {
     // plan is still reading; readers switch at the atomic manifest move
     Sinks.publishSnapshot(CdcMerge.applied(merged).drop("outcome"),
       "transaction_date", tablePath)
-    val row = awaitObserved(observed, s"applyMonthly of $updateCsv into $tablePath")
+    val row = awaitObserved(metrics(observed), s"applyMonthly of $updateCsv into $tablePath", wait)
     CdcMerge.outcomes.map(o => o -> row.getAs[Long](o)).filter(_._2 > 0).toMap
   }
 

@@ -3,6 +3,7 @@ package graft.plans
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Count, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -185,7 +186,12 @@ object MatViewRewrite extends Rule[LogicalPlan] {
                           subst: Map[ExprId, Expression],
                           filters: Seq[Expression],
                           d: MatViews.MatViewDef): Option[LogicalPlan] = {
-    val viewPlan = spark.read.parquet(d.viewPath).queryExecution.analyzed
+    // cached per view dir and mtime; fresh exprIds per occurrence
+    val viewPlan = graft.sources.Sinks.cachedParquetRead(spark, d.viewPath)
+      .queryExecution.analyzed match {
+        case r: MultiInstanceRelation => r.newInstance()
+        case p                        => p
+      }
     val viewAttr: Map[String, Attribute] =
       viewPlan.output.map(a => a.name.toLowerCase(java.util.Locale.ROOT) -> a).toMap
     // every registered column must exist in the view as stored

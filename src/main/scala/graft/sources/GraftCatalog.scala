@@ -86,8 +86,8 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
 
   override def loadTable(ident: Identifier): Table = {
     val path = pathOf(ident)
-    if (Sinks.currentVersion(spark, path).isEmpty) throw new NoSuchTableException(ident)
-    GraftTable.forCatalog(spark, path, Map.empty)
+    val v = Sinks.currentVersion(spark, path).getOrElse(throw new NoSuchTableException(ident))
+    GraftTable.forCatalog(spark, path, Map.empty, v)
   }
 
   /** `SELECT … FROM graft.`/path` VERSION AS OF n` — the SQL spelling

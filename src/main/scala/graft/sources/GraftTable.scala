@@ -476,18 +476,11 @@ object GraftTable {
     val opts = lowered(options)
     resolvePoint(spark, root, opts) match {
       case Some(v) =>
-        val base = DeletionVectors.baseDataVersion(spark, root, v)
         // chain heads: NO parquet delegate — provider-mode scans refuse
         // (refuse-don't-guess, see newScanBuilder) while WRITES remain
         // possible (an overwrite of a chained table needs no read)
-        val delegate =
-          if (base != v) None
-          else {
-            val dir = s"$root/${Sinks.versionDirName(v)}"
-            Some(ParquetTable(s"graft-table:$dir", spark, options, Seq(dir), None,
-              classOf[ParquetFileFormat]))
-          }
-        new GraftTable(spark, root, opts, monthVisible = true, Some(v), delegate)
+        new GraftTable(spark, root, opts, monthVisible = true, Some(v),
+          parquetDelegate(spark, root, v, Some(options)))
       case None =>
         if (!opts.contains("datecol"))
           throw new java.io.FileNotFoundException(
@@ -502,20 +495,37 @@ object GraftTable {
     * heads served merged. The store must have a committed version —
     * the catalog translates emptiness to NoSuchTableException. */
   def forCatalog(spark: SparkSession, root: String,
-                 opts: Map[String, String]): GraftTable = {
-    val v = resolvePoint(spark, root, opts).getOrElse(
+                 opts: Map[String, String]): GraftTable =
+    forCatalog(spark, root, opts, resolvePoint(spark, root, opts).getOrElse(
       throw new java.io.FileNotFoundException(
-        s"no published snapshot at $root (no commit marker in _manifests)"))
-    val base = DeletionVectors.baseDataVersion(spark, root, v)
-    val delegate =
-      if (base == v) {
-        val dir = s"$root/${Sinks.versionDirName(v)}"
-        Some(ParquetTable(s"graft-table:$dir", spark,
-          new CaseInsensitiveStringMap(Map("path" -> dir).asJava), Seq(dir), None,
-          classOf[ParquetFileFormat]))
-      } else None // chain head: merged V1 scan
-    new GraftTable(spark, root, opts, monthVisible = false, Some(v), delegate)
-  }
+        s"no published snapshot at $root (no commit marker in _manifests)")))
+
+  /** Catalog-mode construction at an already resolved version `v`. */
+  private[sources] def forCatalog(spark: SparkSession, root: String,
+                                  opts: Map[String, String], v: Long): GraftTable =
+    new GraftTable(spark, root, opts, monthVisible = false, Some(v),
+      parquetDelegate(spark, root, v, None))
+
+  /** Reader options that change the schema inference finds (footer
+    * merging, partition discovery): a read carrying one infers. */
+  private val inferenceOptions = Seq("mergeSchema", "recursiveFileLookup", "basePath")
+
+  /** The parquet delegate of version `v` (None for a chain head), with
+    * the cached version read's schema ([[Sinks.cachedParquetRead]]):
+    * a load infers nothing. `options`: the provider reader's, if any. */
+  private def parquetDelegate(spark: SparkSession, root: String, v: Long,
+                              options: Option[CaseInsensitiveStringMap]): Option[ParquetTable] =
+    if (DeletionVectors.baseDataVersion(spark, root, v) != v) None
+    else {
+      val dir = s"$root/${Sinks.versionDirName(v)}"
+      val opts = options.getOrElse(new CaseInsensitiveStringMap(Map("path" -> dir).asJava))
+      val schema =
+        if (inferenceOptions.exists(opts.containsKey)) None
+        // unreadable (a version with no files): infer lazily, failing as before
+        else scala.util.Try(Sinks.cachedParquetRead(spark, dir).schema).toOption
+      Some(ParquetTable(s"graft-table:$dir", spark, opts, Seq(dir), schema,
+        classOf[ParquetFileFormat]))
+    }
 
   // ——— registered surface ————————————————————————————————————————————
 

@@ -354,9 +354,9 @@ object Sinks {
   // which bumps the dir mtime and misses the cache. The mtime guard is
   // NOT sufficient for mutable paths in general — a write landing
   // inside an existing subdirectory never bumps the top-level mtime —
-  // so callers must only pass immutable committed paths; filesystems
-  // with no usable dir mtime (object stores report 0) bypass the cache
-  // entirely below. Only METADATA (file listing + schema) is reused —
+  // so callers must only pass paths that are immutable or replaced
+  // whole (see cachedParquetRead); filesystems with no usable dir
+  // mtime (object stores report 0) bypass the cache entirely below. Only METADATA (file listing + schema) is reused —
   // every query still scans the parquet data itself; a fresh JVM
   // starts empty.
   private val readCacheCap = 256
@@ -369,10 +369,18 @@ object Sinks {
       })
 
   /** `spark.read.parquet(path)` with the resolved plan cached per
-    * (session, path, mtime) — for IMMUTABLE paths (committed version
-    * dirs, the single files a link commit wrote). A missing path falls
-    * through to the plain read so the caller's error contract is
-    * untouched. */
+    * (session, path, mtime) — for paths that are never modified in
+    * place: committed version dirs, the single files a link commit
+    * wrote, and materialized-view dirs. A view dir is the one path
+    * served here that is REPLACED: `CREATE OR REPLACE MATERIALIZED
+    * VIEW` overwrites it at a fixed path, which deletes the dir and
+    * writes a fresh one whose mtime differs, so the next read misses
+    * and lists the new files (FeedView's view states are versioned
+    * dirs, immutable once renamed into place). The short reads —
+    * catalog loads, the view rewrite, skipping reads — take a version's
+    * or view's schema from here instead of inferring it. A missing
+    * path falls through to the plain read so the caller's error
+    * contract is untouched. */
   private[graft] def cachedParquetRead(spark: org.apache.spark.sql.SparkSession,
                                        path: String): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -420,7 +428,15 @@ object Sinks {
     * removes files with evidence no row can match; the residual
     * predicate does the rest). A version published without stats, or
     * whose stats don't cover a ranged column, degrades to the plain
-    * filtered read — never to silent wrong answers. */
+    * filtered read — never to silent wrong answers.
+    *
+    * Both branches start no job before the answer's: the plain read is
+    * the cached version read ([[cachedParquetRead]]), and the pruned
+    * file list is read with that read's schema. Versions published
+    * without `statsCols` carry no manifest and always take the plain
+    * read — [[graft.Pipeline.initialize]] and `applyMonthly` publish
+    * that way, because collecting stats ([[FileStats.collect]]) costs
+    * the write a job, so their stores prune no file. */
   def readSnapshotSkipping(spark: org.apache.spark.sql.SparkSession, tablePath: String,
                            ranges: Seq[FileStats.ColRange]): DataFrame = {
     require(ranges.nonEmpty, "skipping read needs at least one column range")
@@ -429,17 +445,19 @@ object Sinks {
         s"no published snapshot at $tablePath (no commit marker in _manifests)"))
     val vdir = s"$tablePath/${versionDirName(v)}"
     val residual = FileStats.rangeFilter(ranges)
+    val whole = cachedParquetRead(spark, vdir)
     versionMeta(spark, tablePath, v).get(FileStats.metaName) match {
-      case None => spark.read.parquet(vdir).filter(residual)
+      case None => whole.filter(residual)
       case Some(manifest) =>
         val kept = FileStats.prune(manifest, ranges)
         if (kept.isEmpty)
           // right schema (incl. the txn_month partition column), no data
-          spark.read.parquet(vdir).filter(lit(false))
+          whole.filter(lit(false))
         else
           // basePath keeps the txn_month partition column when scanning
-          // an explicit file list
-          spark.read.option("basePath", vdir)
+          // an explicit file list; the version's schema spares the
+          // footer-inference job
+          spark.read.option("basePath", vdir).schema(whole.schema)
             .parquet(kept.map(p => s"$vdir/$p"): _*)
             .filter(residual)
     }

@@ -364,6 +364,22 @@ class PipelineSpec extends AnyFunSuite {
     assert(landed === (keys ++ Seq("N1", "N2")).map(k => s"{$k}").toSet)
   }
 
+  test("applyMonthly: metrics that never arrive fail the call, naming the table") {
+    val table = Files.createTempDirectory("pp_withheld").toString + "/price_paid"
+    Pipeline.initialize(spark, writeFile("pp-complete.txt",
+      Seq(row("T1", 100000, "2024-01-01", "A"))), table)
+    val update = writeFile("pp-monthly-update.txt", Seq(row("T1", 150000, "2024-01-01", "C")))
+    // the seam withholds the Observation's metrics: a future that never completes
+    val e = intercept[IllegalStateException] {
+      Pipeline.applyMonthly(spark, update, table,
+        _ => scala.concurrent.Promise[org.apache.spark.sql.Row]().future,
+        scala.concurrent.duration.Duration(200, "ms"))
+    }
+    assert(e.getMessage.contains(table), e.getMessage)
+    assert(e.getMessage.contains("did not arrive within 200 milliseconds"), e.getMessage)
+    assert(e.getCause.isInstanceOf[java.util.concurrent.TimeoutException])
+  }
+
   test("CdcMerge.outcomes is exactly the set of outcome literals both merges can emit") {
     import org.apache.spark.sql.catalyst.expressions.{Alias, CaseWhen, Literal}
     val base = Seq(("k", 1L, "F")).toDF("key", "price", "is_deleted")

@@ -29,11 +29,10 @@ object GraftSession {
       // trivial queries). parallelismFirst (default true) still caps
       // the partition count at defaultParallelism, so this only splits
       // small-but-expensive shuffles, never multiplies large ones.
-      // Parameterised for deployments whose shuffles are byte-bound
-      // (export SPARK_GRAFT_MIN_COALESCED_PARTITION=1m restores the
-      // stock minimum).
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCED_PARTITION", "128k"))
+      // A runtime conf: a deployment whose shuffles are byte-bound sets
+      // it back to the stock 1m with spark.conf.set (Profile's `conf`
+      // section A/Bs it).
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "128k")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", (64 * 1024 * 1024).toString)
       .config("spark.sql.parquet.filterPushdown", "true")
@@ -42,11 +41,10 @@ object GraftSession {
       // for high-latency object stores; on local disk / HDFS a driver
       // listing of a few hundred month dirs is sub-millisecond while the
       // job costs ~0.15 s of pure scheduling — and every month-
-      // partitioned snapshot read crosses 32 dirs. Parameterised for
-      // deployments on S3-like stores where parallel listing wins
-      // (export SPARK_GRAFT_LIST_PARALLEL_THRESHOLD=32).
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        sys.env.getOrElse("SPARK_GRAFT_LIST_PARALLEL_THRESHOLD", "512"))
+      // partitioned snapshot read crosses 32 dirs. A runtime conf: a
+      // deployment on an S3-like store, where parallel listing wins,
+      // sets it back to 32 with spark.conf.set.
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "512")
       // testdata generations have shipped events.ts as parquet
       // TIMESTAMP(NANOS), which Spark's reader rejects outright; this
       // legacy conf reads nanos as LONG (a no-op for MICROS files) and

@@ -271,7 +271,7 @@ object SparkEntry {
     // large-star/small-star connected components (O(log²) rounds on
     // adversarial graphs) over deterministic PPJoin pairs — the scale
     // path's labels hash-match a recursive-CTE oracle
-    "d_dup_clusters"     -> NearDedup.dupClustersStar _,
+    "d_dup_clusters"     -> NearDedup.dupClusters _,
     // ExactSubstr census (Lee et al. 2022): repeated L-token spans
     // across documents — the tier document-level dedup cannot see
     "d_substr_dup"       -> ((s: SparkSession, dir: String) => NearDedup.substrDup(s, dir)),

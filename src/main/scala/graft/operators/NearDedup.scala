@@ -283,17 +283,17 @@ object NearDedup {
     ngramJaccardOf(Tables.documentsNarrow(spark, dir), threshold)
       .orderBy("id_a", "id_b")
 
-  /** Largest duplicate graph, in edges, that [[duplicateClusters]] and
-    * [[duplicateClustersStar]] resolve on the driver; the distributed
-    * loops serve only graphs above it. Measured by Profile's
-    * `components` section on generated graphs, 4 cores
-    * (plans/r20/components.md): against min-label propagation the
-    * driver path took 64 % less time at 10^4 edges, 24 % less at this
+  /** Largest duplicate graph, in edges, that [[duplicateClusters]]
+    * resolves on the driver; the distributed star contraction serves
+    * only graphs above it. Measured by Profile's `components` section on
+    * generated cliques, 4 cores (plans/r20/components.md): the driver
+    * path took 64 % less time than min-label propagation (the faster
+    * loop on cliques, since deleted) at 10^4 edges, 24 % less at this
     * bound, and about as long at 10^6 and 2·10^6; star contraction took
-    * 1.3-7.6× as long as it throughout. At this bound the result holds at
-    * most 2^20 rows, a 93 MB local relation that Spark sizes at 24 B a
-    * row: 24 MB, under GraftSession's 64 MB broadcast threshold, so the
-    * callers' joins broadcast it. */
+    * 1.3-7.6× as long as the driver path throughout. At this bound the
+    * result holds at most 2^20 rows, a 93 MB local relation that Spark
+    * sizes at 24 B a row: 24 MB, under GraftSession's 64 MB broadcast
+    * threshold, so the callers' joins broadcast it. */
   private val DriverEdges = 1L << 19
 
   /** Components of a checkpointed edge set (columns `a`, `b`; `n` rows,
@@ -334,101 +334,27 @@ object NearDedup {
       .select(col("_1").cast(t).as("doc_id"), col("_2").cast(t).as("cluster_id"))
   }
 
-  /** Connected components over a duplicate-pair list → cluster label
-    * (the minimum doc_id of the component): on the driver up to
-    * [[DriverEdges]] pairs ([[componentsOnDriver]]), 2 jobs in all;
-    * above, iterative min-label propagation: each round is one
-    * distributed join+aggregate, the driver only checks the
-    * converged-count; rounds ≤ component diameter (tiny for dup
-    * clusters). `localCheckpoint` truncates the growing lineage each
-    * round. */
+  /** Connected components over a duplicate-pair list → `(doc_id,
+    * cluster_id = component minimum)` for every endpoint, an endpoint
+    * reached only by a self-loop included (labelled itself). One
+    * checkpoint of the raw pairs observes their count; up to
+    * [[DriverEdges]] pairs the driver resolves them
+    * ([[componentsOnDriver]]), 2 jobs in all. Above it, alternating
+    * large-star / small-star contraction (Kiveris et al., "Connected
+    * Components in MapReduce and Beyond", SoCC'14) converges in O(log²)
+    * rounds REGARDLESS of component diameter, where min-label
+    * propagation needs one round per unit of diameter — and nothing
+    * bounds the diameter of a duplicate graph (mirror farms, quote
+    * cascades re-quoting each other). plans/r22/components.md has the
+    * measurement that kept this loop and deleted propagation. Per
+    * round: two neighborhood aggregations + keyed joins over the edge
+    * list, all shuffles on node ids (AQE-skew-safe; the large-star step
+    * is exactly what caps hot-node neighborhoods). */
   def duplicateClusters(pairs: DataFrame): DataFrame = duplicateClusters(pairs, DriverEdges)
 
   /** [[duplicateClusters]] with the driver bound given: 0 runs the
-    * distributed loop on every non-empty graph. */
-  private[graft] def duplicateClusters(pairs: DataFrame, driverEdges: Long): DataFrame = {
-    // materialize the (possibly expensive — PPJoin/MinHash) pair plan
-    // ONCE before mirroring it: a union of two instances of the same
-    // subtree computes that subtree twice. The edge count rides the
-    // SAME job as an observed metric (guide §1.2/§2.4 job thrift) —
-    // the emptiness probe must not cost a second action.
-    val obsEdges = org.apache.spark.sql.Observation()
-    val p0 = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .observe(obsEdges, count(lit(1)).as("n"))
-      .localCheckpoint(true)
-    // a duplicate-free input (the COMMON case for a clean streaming
-    // batch) and any graph up to the bound take no further job here
-    val n = obsEdges.get.apply("n").asInstanceOf[Long]
-    if (n <= driverEdges) return componentsOnDriver(p0, n, "src", "dst")
-    // PARTITIONING IS THE LOOP INVARIANT (guide §2.4 exchange reuse):
-    // edges hash-partitioned on dst ONCE, labels kept hash-partitioned
-    // on id across rounds (localCheckpoint records the physical
-    // partitioning, so Catalyst elides the exchanges) — each round's
-    // dst⋈id join and final id⋈id join then need NO redistribution and
-    // the only per-round shuffle left is the min-label aggregation.
-    val edges = p0
-      .union(p0.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(col("dst"))
-      .localCheckpoint(true)
-    // ROUND 1 FUSED INTO THE INIT: with identity labels, round 1 would
-    // compute label(x) = min(x, min N(x)) — which comes straight off
-    // the dst-partitioned symmetric edges as ONE aggregation (no
-    // exchange: dst IS the partition key), replacing the identity
-    // labeling + first propagation round (3 jobs) with one job. For
-    // the near-clique duplicate graphs this path serves, round 1 is
-    // usually also the LAST changing round, so the loop below runs
-    // once as pure confirmation.
-    var labels = edges.groupBy(col("dst"))
-      .agg(least(min(col("src")), col("dst")).as("label"))
-      .select(col("dst").as("id"), col("label"))
-      .localCheckpoint(true)
-    // edges exist, so round 1 changed at least one label (for the
-    // minimum edge (u,v), v's label dropped to ≤ u < v)
-    var changed = 1L
-    while (changed > 0) {
-      // the convergence count is OBSERVED during the checkpoint job
-      // instead of a second count() action per round — one job per
-      // round, not two
-      val obs = org.apache.spark.sql.Observation()
-      val prop = edges.join(labels, edges("dst") === labels("id"))
-        .select(col("src").as("id"), col("label"))
-        .union(labels)
-        .groupBy("id").agg(min(col("label")).as("new_label"))
-      val joined = labels.join(prop, "id")
-        .observe(obs,
-          sum(when(col("new_label") < col("label"), 1L).otherwise(0L)).as("changed"))
-        .localCheckpoint(true)
-      changed = obs.get.get("changed") match {
-        case Some(n: Long) => n
-        case _             => 0L // null sum can't happen (labels nonempty)
-      }
-      labels = joined.select(col("id"), col("new_label").as("label"))
-    }
-    labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
-  }
-
-  /** Connected components by alternating large-star / small-star
-    * contraction (Kiveris et al., "Connected Components in MapReduce
-    * and Beyond", SoCC'14). Up to [[DriverEdges]] canonical edges the
-    * edge checkpoint is resolved on the driver ([[componentsOnDriver]]).
-    * Above it, the contraction converges in O(log²) rounds REGARDLESS
-    * of component diameter, where min-label propagation
-    * ([[duplicateClusters]]) needs diameter rounds — the difference
-    * between ~5 jobs and ~200 on an adversarial 200-link chain (mirror
-    * farms, quote cascades re-quoting each other). Per round: two
-    * neighborhood aggregations + keyed joins over the edge list, all
-    * shuffles on node ids (AQE-skew-safe; the large-star step is
-    * exactly what caps hot-node neighborhoods). Same output contract
-    * as [[duplicateClusters]] — (doc_id, cluster_id = component
-    * minimum) — spec-pinned equal on random graphs and a 64-link chain.
-    * Above the bound, the swap-in for adversarial duplicate graphs; the
-    * default pipeline keeps min-label propagation (duplicate clusters
-    * are near-cliques, diameter ≤ ~3, where it is strictly cheaper). */
-  def duplicateClustersStar(pairs: DataFrame): DataFrame = duplicateClustersStar(pairs, DriverEdges)
-
-  /** [[duplicateClustersStar]] with the driver bound given: 0 runs the
     * contraction on every non-empty graph. */
-  private[graft] def duplicateClustersStar(pairs: DataFrame, driverEdges: Long): DataFrame = {
+  private[graft] def duplicateClusters(pairs: DataFrame, driverEdges: Long): DataFrame = {
     def canon(e: DataFrame): DataFrame =
       e.filter(col("u") =!= col("v"))
         .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
@@ -451,35 +377,37 @@ object NearDedup {
       canon(small.join(m, "u").select(col("v").as("u"), col("m").as("v"))
         .unionByName(m.select(col("u"), col("m").as("v"))))
     }
-    // one evaluation of the (expensive) pair plan; nodes derive from
-    // the canonicalized checkpoint, not from a second pair computation.
-    // The edge count rides the checkpoint job as an observed metric
-    // (guide §1.2/§2.4 job thrift) — no separate isEmpty/count actions.
+    // the edge count rides each checkpoint job as an observed metric
+    // (guide §1.2/§2.4 job thrift) — no separate isEmpty/count actions
     def ckptCounted(df: DataFrame): (DataFrame, Long) = {
       val obs = org.apache.spark.sql.Observation()
       val c = df.observe(obs, count(lit(1)).as("n")).localCheckpoint(true)
       (c, obs.get.apply("n").asInstanceOf[Long])
     }
-    val (edges0, n0) = ckptCounted(
-      canon(pairs.select(col("id_a").as("u"), col("id_b").as("v"))))
-    if (n0 <= driverEdges) return componentsOnDriver(edges0, n0, "u", "v")
-    val nodes = symmetric(edges0)
-      .select("u").distinct().localCheckpoint(true)
-    var edges = edges0
-    var edgeCount = n0
+    // one evaluation of the (expensive — PPJoin/MinHash) pair plan,
+    // checkpointed RAW: canonicalizing first would put a `distinct`
+    // shuffle, which adaptive execution runs as a job of its own, in
+    // front of the bound check. A duplicate-free input (the COMMON case
+    // for a clean streaming batch) and any graph up to the bound take
+    // no further job here
+    val (raw, n) = ckptCounted(pairs.select(col("id_a").as("u"), col("id_b").as("v")))
+    if (n <= driverEdges) return componentsOnDriver(raw, n, "u", "v")
+    // nodes from the raw pairs, so an endpoint reached only by a
+    // self-loop (which canon drops) still labels itself
+    val nodes = symmetric(raw).select("u").distinct().localCheckpoint(true)
+    var (edges, edgeCount) = ckptCounted(canon(raw))
     var stable = false
     while (!stable) {
       // the paper's termination criterion is BOTH steps individually at
       // a fixed point (that is what proves the result is a star
       // forest) — a composition-only check could stop on a large-star/
       // small-star 2-cycle.
-      // Job thrift (these are DISTINCT canonical sets): the counts ride
-      // each step's checkpoint job as observed metrics and unequal
-      // counts settle inequality outright, so the shuffling
-      // except-equality runs as ONE combined job, and only on rounds
-      // where all three counts already agree — a round is 2 jobs, not
-      // 2 excepts + 4 counts (equal counts + empty one-direction
-      // except ⟺ set equality).
+      // Job thrift (these are DISTINCT canonical sets): unequal counts
+      // settle inequality outright, so the shuffling except-equality
+      // runs as ONE combined job, and only on rounds where all three
+      // counts already agree — a round is 2 jobs, not 2 excepts + 4
+      // counts (equal counts + empty one-direction except ⟺ set
+      // equality).
       val (afterLarge, cL) = ckptCounted(largeStar(edges))
       val (afterSmall, cS) = ckptCounted(smallStar(afterLarge))
       stable = cL == edgeCount && cS == cL &&
@@ -496,15 +424,19 @@ object NearDedup {
       .select(col("u").as("doc_id"), coalesce(col("lbl"), col("u")).as("cluster_id"))
   }
 
-  /** Registered `d_dup_clusters`: [[duplicateClustersStar]] over
+  /** Former name of [[duplicateClusters]], kept for the benchmark's
+    * `corpus_dedup` step, which calls it by this name. */
+  def duplicateClustersStar(pairs: DataFrame): DataFrame = duplicateClusters(pairs)
+
+  /** Registered `d_dup_clusters`: [[duplicateClusters]] over
     * deterministic PPJoin pair generation, hash-matched against a
     * DuckDB oracle whose label propagation is a recursive CTE. Below
     * [[DriverEdges]] pairs (every registered scale) the components are
     * resolved on the driver, not by the star contraction; ComponentsSpec
     * pins the two equal. */
-  def dupClustersStar(spark: SparkSession, dir: String): DataFrame = {
+  def dupClusters(spark: SparkSession, dir: String): DataFrame = {
     val pairs = ngramJaccardOf(Tables.documents(spark, dir), 0.8)
-    duplicateClustersStar(pairs.select("id_a", "id_b")).orderBy("doc_id")
+    duplicateClusters(pairs.select("id_a", "id_b")).orderBy("doc_id")
   }
 
   /** Training-corpus cleaning: quality-filter documents, then drop
@@ -543,7 +475,7 @@ object NearDedup {
   /** Registered binding for `d_clean_corpus`: exact pair generation
     * plus planted near-duplicates (mirroring [[minHashDedup]]'s
     * offset-derived planting), so every stage — quality filter, pair
-    * generation, min-label connected components, canonicalization —
+    * generation, connected components, canonicalization —
     * is deterministic and the whole composition hash-matches a DuckDB
     * oracle whose label propagation is a recursive CTE. The planting
     * proves the cluster path non-vacuous: planted rows enter the
@@ -571,7 +503,7 @@ object NearDedup {
     * CLUSTER's anchor: exact 3-gram Jaccard pairs ([[ngramJaccardOf]]
     * — the deterministic PPJoin path, so the whole composition is
     * oracle-able; the MinHash+LSH candidate generator feeds the same
-    * components at 100 TB) → min-label connected components → every
+    * components at 100 TB) → connected components → every
     * member buckets by the md5 of its component-minimum document's
     * TEXT. All members of a cluster land in the same split by
     * construction; singletons reduce to the content-hash split

@@ -1194,8 +1194,9 @@ object TextOps {
     * then runs over the WORD table — vocabulary-sized, millions of
     * rows at 100 TB, not corpus-sized — as one pair-explode +
     * aggregate + a top-1 `collect` (driver gets one row per round,
-    * like [[graft.operators.NearDedup.duplicateClusters]]'s
-    * convergence count) + a native codegen
+    * like the `limit(1)` fixed-point probe of
+    * [[graft.operators.NearDedup.duplicateClusters]]' contraction
+    * rounds) + a native codegen
     * [[graft.functions.native.merge_pair]] rewrite of the symbol
     * arrays. `localCheckpoint` truncates the per-round lineage.
     * Ties break by (pair freq desc, left, right) so training is

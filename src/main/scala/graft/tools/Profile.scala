@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Stage-level timing harness (dev tool, not part of the driver
@@ -99,40 +99,27 @@ object Profile {
           .distinct()
         time("candidates")(cand)
         time("pairs_full")(NearDedup.ngramJaccardOf(docs, threshold))
-      case "aqe" =>
-        // compare queries with AQE on vs off: args(3..) = query names
-        val names = args.drop(3)
-        names.foreach { n =>
+      case "conf" =>
+        // same-JVM A/B of one SQL conf: args(3) = key, args(4) = comma
+        // list of values, args(5..) = query names. The values run in
+        // order, then reversed, so drift hits every value alike; the
+        // key's value from before the run is restored afterwards.
+        val key = args(3)
+        val values = args(4).split(",").toSeq
+        val before = spark.conf.getOption(key)
+        args.drop(5).foreach { n =>
           val fn = graft.SparkEntry.queries(n)
-          Seq("true", "false", "true", "false").zipWithIndex.foreach { case (aqe, i) =>
-            spark.conf.set("spark.sql.adaptive.enabled", aqe)
+          (values ++ values.reverse).foreach { v =>
+            spark.conf.set(key, v)
             val times = (0 until passes).map { _ =>
               val t0 = System.nanoTime()
               fn(spark, sfDir).write.format("noop").mode("overwrite").save()
               (System.nanoTime() - t0) / 1e9
             }
-            println(f"AQE $n%-24s aqe=$aqe%-5s round=$i min=${times.min}%7.3f all=${times.map(t => f"$t%.2f").mkString(",")}")
+            println(f"CONF $n%-24s $key=$v%-6s min=${times.min}%7.3f all=${times.map(t => f"$t%.2f").mkString(",")}")
           }
-          spark.conf.set("spark.sql.adaptive.enabled", "true")
         }
-      case "minpart" =>
-        // A/B spark.sql.adaptive.coalescePartitions.minPartitionSize:
-        // args(3) = size values (comma list), args(4..) = query names
-        val sizes = args(3).split(",").toSeq
-        val names = args.drop(4)
-        names.foreach { n =>
-          val fn = graft.SparkEntry.queries(n)
-          (sizes ++ sizes.reverse).foreach { sz =>
-            spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", sz)
-            val times = (0 until passes).map { _ =>
-              val t0 = System.nanoTime()
-              fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-              (System.nanoTime() - t0) / 1e9
-            }
-            println(f"MINPART $n%-24s sz=$sz%-6s min=${times.min}%7.3f all=${times.map(t => f"$t%.2f").mkString(",")}")
-          }
-          spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1m")
-        }
+        before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
       case "joblog" =>
         // detailed per-job log for ONE query: name, duration, #tasks
         val name = args(3)
@@ -179,122 +166,39 @@ object Profile {
             println(f"JOBS $n%-24s pass=$i wall=$wall%7.3f jobs=${jobs.get()}%4d tasks=${tasks.get()}%5d taskTime=${taskMs.get() / 1e3}%8.2fs")
           }
         }
-      case "ppjoin2" =>
-        val docs = Tables.documents(spark, sfDir)
-        val threshold = 0.5
-        val p = math.round(threshold * 1000000L)
-        def pairsCkpt(eager: Boolean): DataFrame = {
-          val prefixLen = expr(s"cast(nsh - ((nsh * ${p}L + 999999L) div 1000000L) + 1 as int)")
-          val sh = NearDedup.shingles(docs)
-          val freq = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
-          val sets = sh.join(freq, "shingle")
-            .groupBy("doc_id")
-            .agg(array_sort(collect_list(struct(col("df"), col("shingle")))).as("fs"))
-            .withColumn("s", transform(col("fs"), x => x.getField("shingle")))
-            .withColumn("nsh", size(col("s")).cast(org.apache.spark.sql.types.LongType))
-            .withColumn("prefix",
-              transform(slice(col("fs"), lit(1), prefixLen), x => x.getField("shingle")))
-            .drop("fs")
-            .localCheckpoint(eager)
-          val indexed = sets.select(col("doc_id"), col("nsh"), posexplode(col("prefix")))
-            .select(col("doc_id"), col("nsh"), col("pos").cast("long").as("pos"),
-              col("col").as("shingle"))
-          val cand = indexed.as("a").join(indexed.as("b"),
-              col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id") &&
-              col("a.nsh") * 1000000L >= col("b.nsh") * p &&
-              col("b.nsh") * 1000000L >= col("a.nsh") * p &&
-              expr(s"1L + least(a.nsh - 1L - a.pos, b.nsh - 1L - b.pos) >= " +
-                s"((a.nsh + b.nsh) * ${p}L + ${1000000L + p - 1L}L) div ${1000000L + p}L"))
-            .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-            .distinct()
-          cand
-            .join(sets.select(col("doc_id").as("id_a"), col("s").as("s_a"), col("nsh").as("n_a")), "id_a")
-            .join(sets.select(col("doc_id").as("id_b"), col("s").as("s_b"), col("nsh").as("n_b")), "id_b")
-            .withColumn("n_common", size(array_intersect(col("s_a"), col("s_b"))).cast(org.apache.spark.sql.types.LongType))
-            .filter(col("n_common").cast("double") /
-              (col("n_a") + col("n_b") - col("n_common")) >= threshold)
-            .select("id_a", "id_b")
-        }
-        time("pairs_baseline")(NearDedup.ngramJaccardOf(docs, threshold))
-        time("pairs_sets_ckpt_lazy")(pairsCkpt(false))
-        time("pairs_sets_ckpt_eager")(pairsCkpt(true))
-        time("pairs_baseline_again")(NearDedup.ngramJaccardOf(docs, threshold))
-      case "ppjoin3" =>
-        // A/B the shingle-chain exchange shape: baseline (distinct on
-        // (doc,shingle) → freq reshuffle → join reshuffle) vs a single
-        // up-front repartition(shingle) that the distinct, the freq
-        // aggregation, and the freq join can all ride (hash on a SUBSET
-        // of the grouping keys satisfies ClusteredDistribution).
-        val docs = Tables.documents(spark, sfDir)
-        val threshold = 0.5
-        val p = math.round(threshold * 1000000L)
-        def pairsRepart(): DataFrame = {
-          val prefixLen = expr(s"cast(nsh - ((nsh * ${p}L + 999999L) div 1000000L) + 1 as int)")
-          val words = split(
-            regexp_replace(lower(col("text")), "^\\s+|\\s+$", ""), "\\s+")
-          val raw = docs
-            .select(col("doc_id"), words.as("w"))
-            .filter(size(col("w")) >= 3)
-            .select(col("doc_id"), col("w"),
-              explode(sequence(lit(0), size(col("w")) - 3)).as("i"))
-            .select(col("doc_id"),
-              xxhash64(concat_ws(" ", slice(col("w"), col("i") + 1, lit(3)))).as("shingle"))
-          val sh = raw.repartition(col("shingle")).distinct()
-          val freq = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
-          val sets = sh.join(freq, "shingle")
-            .groupBy("doc_id")
-            .agg(array_sort(collect_list(struct(col("df"), col("shingle")))).as("fs"))
-            .withColumn("s", transform(col("fs"), x => x.getField("shingle")))
-            .withColumn("nsh", size(col("s")).cast(org.apache.spark.sql.types.LongType))
-            .withColumn("prefix",
-              transform(slice(col("fs"), lit(1), prefixLen), x => x.getField("shingle")))
-          val indexed = sets.select(col("doc_id"), col("nsh"), posexplode(col("prefix")))
-            .select(col("doc_id"), col("nsh"), col("pos").cast("long").as("pos"),
-              col("col").as("shingle"))
-          val cand = indexed.as("a").join(indexed.as("b"),
-              col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id") &&
-              col("a.nsh") * 1000000L >= col("b.nsh") * p &&
-              col("b.nsh") * 1000000L >= col("a.nsh") * p &&
-              expr(s"1L + least(a.nsh - 1L - a.pos, b.nsh - 1L - b.pos) >= " +
-                s"((a.nsh + b.nsh) * ${p}L + ${1000000L + p - 1L}L) div ${1000000L + p}L"))
-            .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-            .distinct()
-          cand
-            .join(sets.select(col("doc_id").as("id_a"), col("s").as("s_a"), col("nsh").as("n_a")), "id_a")
-            .join(sets.select(col("doc_id").as("id_b"), col("s").as("s_b"), col("nsh").as("n_b")), "id_b")
-            .withColumn("n_common", size(array_intersect(col("s_a"), col("s_b"))).cast(org.apache.spark.sql.types.LongType))
-            .filter(col("n_common").cast("double") /
-              (col("n_a") + col("n_b") - col("n_common")) >= threshold)
-            .select("id_a", "id_b")
-        }
-        time("pairs_baseline")(NearDedup.ngramJaccardOf(docs, threshold))
-        time("pairs_repart_shingle")(pairsRepart())
-        time("pairs_baseline_again")(NearDedup.ngramJaccardOf(docs, threshold))
-        time("pairs_repart_again")(pairsRepart())
-        val nb = NearDedup.ngramJaccardOf(docs, threshold).count()
-        val nr = pairsRepart().count()
-        val diff = NearDedup.ngramJaccardOf(docs, threshold)
-          .except(pairsRepart()).count() +
-          pairsRepart().except(NearDedup.ngramJaccardOf(docs, threshold)).count()
-        println(s"PPJOIN3 baseline=$nb repart=$nr symmetric_diff=$diff")
       case "components" =>
-        // The three components paths on generated duplicate graphs:
-        // args(3) = comma-separated edge counts, args(4) = clique size
-        // (4: 6 edges a cluster; 2: disjoint pairs, 2 result rows an
-        // edge), doc ids scattered over [0, 2^40). Per path: wall ms
-        // (pass 0 is the warm-up), jobs, and the JVM heap the local
-        // driver and executors share, on the last pass: pool peaks
-        // summed (garbage included) and what stays after a GC while the
-        // result is held; for the driver path also the local relation's
-        // size and Spark's estimate of it, which broadcasting compares
-        // with spark.sql.autoBroadcastJoinThreshold.
+        // Both components paths, the driver union-find and the star
+        // contraction, on generated duplicate graphs:
+        // args(3) = comma-separated edge counts, args(4) = the shape of
+        // each component, doc ids scattered over [0, 2^40):
+        //   clique=K  K-document near-duplicate clusters (4: 6 edges a
+        //             cluster; 2: disjoint pairs, 2 result rows an edge);
+        //   chain=L   paths of L links (diameter L: mirror farms, quote
+        //             cascades);
+        //   tree=T    random recursive trees of T documents, each after
+        //             the first linked to a uniformly drawn earlier one.
+        // Per path: wall ms (pass 0 is the warm-up), jobs, and the JVM
+        // heap the local driver and executors share, on the last pass:
+        // pool peaks summed (garbage included) and what stays after a GC
+        // while the result is held; for the driver path also the local
+        // relation's size and Spark's estimate of it, which broadcasting
+        // compares with spark.sql.autoBroadcastJoinThreshold.
         import scala.jdk.CollectionConverters._
         val sizes = args.lift(3).getOrElse("10000,100000,1000000").split(",").map(_.toLong)
-        val clique = args.lift(4).fold(4)(_.toInt)
-        val (xs, ys) = (for (x <- 0 until clique; y <- x + 1 until clique) yield (x, y)).unzip
-        def node(local: Seq[Int]) = pmod(
-          (floor(col("id") / xs.length) * clique +
-            element_at(typedLit(local), (col("id") % xs.length + 1).cast("int"))) * 2654435761L,
+        val shape = args.lift(4).getOrElse("clique=4")
+        val Array(kind, arg) = shape.split("=")
+        val k = arg.toInt
+        // edge j of a component links local documents a(j) and b(j)
+        val (edgesPer, docsPer, a, b) = kind match {
+          case "clique" =>
+            val (xs, ys) = (for (x <- 0 until k; y <- x + 1 until k) yield (x, y)).unzip
+            def at(local: Seq[Int])(j: Column) = element_at(typedLit(local), (j + 1).cast("int"))
+            (xs.length, k, at(xs) _, at(ys) _)
+          case "chain" => (k, k + 1, (j: Column) => j, (j: Column) => j + 1)
+          case "tree" => (k - 1, k, (j: Column) => pmod(xxhash64(col("id")), j + 1), (j: Column) => j + 1)
+        }
+        def node(local: Column => Column) = pmod(
+          (floor(col("id") / edgesPer) * docsPer + local(col("id") % edgesPer)) * 2654435761L,
           lit(1L << 40))
         val jobs = new java.util.concurrent.atomic.AtomicInteger
         spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
@@ -313,10 +217,9 @@ object Profile {
         val mb = (bytes: Long) => f"${bytes / 1048576.0}%.1f"
         val paths = Seq[(String, DataFrame => DataFrame)](
           "driver" -> (p => NearDedup.duplicateClusters(p, Long.MaxValue)),
-          "min_label" -> (p => NearDedup.duplicateClusters(p, 0)),
-          "star" -> (p => NearDedup.duplicateClustersStar(p, 0)))
+          "star" -> (p => NearDedup.duplicateClusters(p, 0)))
         sizes.foreach { n =>
-          val pairs = spark.range(n).select(node(xs).as("id_a"), node(ys).as("id_b")).localCheckpoint()
+          val pairs = spark.range(n).select(node(a).as("id_a"), node(b).as("id_b")).localCheckpoint()
           for ((path, cc) <- paths) {
             val runs = (0 to passes).map { _ =>
               val base = usedAfterGc()
@@ -336,7 +239,7 @@ object Profile {
                 s" rows=${l.data.length} local_mb=${mb(org.apache.spark.util.SizeEstimator.estimate(l.data))}" +
                   s" estimate_mb=${mb(out.queryExecution.optimizedPlan.stats.sizeInBytes.toLong)}"
             }.getOrElse("")
-            println(f"COMP clique=$clique edges=$n%-8d $path%-9s min_ms=${runs.tail.map(_._1).min}%9.0f " +
+            println(f"COMP $shape%-10s edges=$n%-8d $path%-9s min_ms=${runs.tail.map(_._1).min}%9.0f " +
               s"all_ms=${runs.map(r => f"${r._1}%.0f").mkString(",")} jobs=$nJobs " +
               s"peak_mb=${mb(peak)} held_mb=${mb(held)}$local")
           }

@@ -4,21 +4,21 @@ import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.NearDedup
 
-/** The connected-components operators resolve a small duplicate graph
-  * on the driver (one union-find pass) and run their distributed loops
-  * above a fixed edge bound: min-label propagation for
-  * [[NearDedup.duplicateClusters]], large-star/small-star contraction
-  * for [[NearDedup.duplicateClustersStar]]. A bound of 0 runs the
-  * loops, so both paths stay covered and are pinned equal here — rows,
-  * column names and types. */
+/** The connected-components operator resolves a small duplicate graph
+  * on the driver (one union-find pass) and runs large-star/small-star
+  * contraction above a fixed edge bound. A bound of 0 runs the
+  * contraction, so both paths stay covered and are pinned equal here —
+  * rows, column names and types — through the entry point and through
+  * its former name, [[NearDedup.duplicateClustersStar]]. */
 class ComponentsSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
 
-  /** Each entry point with its distributed loop as the reference. */
-  private val entryPoints = Seq[(String, DataFrame => DataFrame, DataFrame => DataFrame)](
-    ("duplicateClusters", NearDedup.duplicateClusters(_), NearDedup.duplicateClusters(_, 0)),
-    ("duplicateClustersStar", NearDedup.duplicateClustersStar(_), NearDedup.duplicateClustersStar(_, 0)))
+  private val entryPoints = Seq[(String, DataFrame => DataFrame)](
+    "duplicateClusters" -> (NearDedup.duplicateClusters(_)),
+    "duplicateClustersStar" -> (NearDedup.duplicateClustersStar(_)))
+
+  private def contraction(pairs: DataFrame): DataFrame = NearDedup.duplicateClusters(pairs, 0)
 
   private val fixture = Seq((1L, 2L), (2L, 3L), (3L, 9L), (5L, 6L))
 
@@ -34,32 +34,50 @@ class ComponentsSpec extends AnyFunSuite {
       ((nodes + 1L, nodes + 1L)))
   }
 
-  test("driver union-find equals both distributed loops, names and types included") {
+  /** A 200-link chain over shuffled ids, with self-loops on three of
+    * its nodes and on an isolated node: diameter 200. */
+  private val chain: Seq[(Long, Long)] = {
+    val ids = new scala.util.Random(7).shuffle((1L to 201L).toVector)
+    ids.zip(ids.tail) ++ Seq(ids(0), ids(100), ids(200), 1000L).map(x => (x, x))
+  }
+
+  /** A seeded random recursive tree of 300 nodes over shuffled ids:
+    * node j links to a uniformly drawn earlier node, either way round. */
+  private val tree: Seq[(Long, Long)] = {
+    val rnd = new scala.util.Random(11)
+    val ids = rnd.shuffle((1L to 300L).toVector)
+    (1 until 300).map { j =>
+      val (child, parent) = (ids(j), ids(rnd.nextInt(j)))
+      if (rnd.nextBoolean()) (child, parent) else (parent, child)
+    }
+  }
+
+  test("driver union-find equals the star contraction, names and types included") {
     val graphs: Seq[(String, DataFrame)] = Seq(
       "4-pair fixture" -> fixture.toDF("id_a", "id_b"),
       "4-pair fixture, int ids" -> fixture.map { case (a, b) => (a.toInt, b.toInt) }
         .toDF("id_a", "id_b"),
       "64-link chain" -> (1L until 64L).map(i => (i, i + 1)).toDF("id_a", "id_b"),
+      "200-link chain with self-loops" -> chain.toDF("id_a", "id_b"),
+      "300-node random tree" -> tree.toDF("id_a", "id_b"),
       "empty pair set" -> Seq.empty[(Long, Long)].toDF("id_a", "id_b")) ++
       (1 to 20).map(s => s"random graph $s" -> randomGraph(s).toDF("id_a", "id_b"))
     def rows(df: DataFrame) = df.collect().map(_.toSeq).sortBy(_.mkString(",")).toSeq
     def schema(df: DataFrame) = df.schema.map(f => f.name -> f.dataType)
-    for ((graph, pairs) <- graphs; (name, cc, loop) <- entryPoints) {
-      val (onDriver, reference) = (cc(pairs), loop(pairs))
-      assert(schema(onDriver) === schema(reference), s"$name on $graph")
-      assert(rows(onDriver) === rows(reference), s"$name on $graph")
+    for ((graph, pairs) <- graphs) {
+      val reference = contraction(pairs)
+      for ((name, cc) <- entryPoints) {
+        val onDriver = cc(pairs)
+        assert(schema(onDriver) === schema(reference), s"$name on $graph")
+        assert(rows(onDriver) === rows(reference), s"$name on $graph")
+      }
     }
   }
 
   test("driver path on the fixture: the edge checkpoint and one collect; the loops run more") {
     val pairs = fixture.toDF("id_a", "id_b")
-    // the star's checkpoint canonicalizes through a `distinct`, whose
-    // shuffle adaptive execution runs as a job of its own
-    val driverJobs = Map("duplicateClusters" -> 2, "duplicateClustersStar" -> 3)
-    for ((name, cc, loop) <- entryPoints) {
-      assert(jobsDuring(cc(pairs).collect()) === driverJobs(name), name)
-      val loopJobs = jobsDuring(loop(pairs).collect())
-      assert(loopJobs > driverJobs(name), s"$name ran $loopJobs jobs in its loop")
-    }
+    for ((name, cc) <- entryPoints) assert(jobsDuring(cc(pairs).collect()) === 2, name)
+    val loopJobs = jobsDuring(contraction(pairs).collect())
+    assert(loopJobs > 2, s"the contraction ran $loopJobs jobs")
   }
 }

@@ -466,27 +466,16 @@ class OperatorSpec extends AnyFunSuite {
     assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 9L -> 1L, 5L -> 5L, 6L -> 5L))
   }
 
-  test("star-contraction components equal min-label propagation, incl. adversarial chains") {
-    // fixture: the same transitive pairs as the propagation test
+  test("duplicate clusters: an adversarial 64-link chain collapses to its head") {
+    // fixture: the same transitive pairs as the test above
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 9L), (5L, 6L)).toDF("id_a", "id_b")
-    val star = NearDedup.duplicateClustersStar(pairs).as[(Long, Long)].collect().toMap
-    assert(star === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 9L -> 1L, 5L -> 5L, 6L -> 5L))
-    // adversarial 64-link chain (diameter 64): min-label propagation
-    // would need 64 rounds; star contraction stays logarithmic and
-    // must still label every node with the chain head
+    val got = NearDedup.duplicateClusters(pairs).as[(Long, Long)].collect().toMap
+    assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 9L -> 1L, 5L -> 5L, 6L -> 5L))
+    // diameter 64: every node must still be labelled with the chain head
     val chain = (1L until 64L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val chainLabels = NearDedup.duplicateClustersStar(chain)
+    val chainLabels = NearDedup.duplicateClusters(chain)
       .as[(Long, Long)].collect().toMap
     assert(chainLabels.size === 64 && chainLabels.values.forall(_ === 1L))
-    // deterministic pseudo-random graph: both algorithms must produce
-    // identical labelings (the output contract is shared)
-    val rand = (0L until 300L)
-      .map(i => ((i * 7919L) % 97L, (i * 104729L) % 97L))
-      .filter { case (a, b) => a != b }
-      .toDF("id_a", "id_b")
-    val viaStar = NearDedup.duplicateClustersStar(rand).as[(Long, Long)].collect().toMap
-    val viaProp = NearDedup.duplicateClusters(rand).as[(Long, Long)].collect().toMap
-    assert(viaStar === viaProp)
   }
 
   test("clean corpus drops low-quality docs and keeps one canonical per dup cluster") {

@@ -64,14 +64,7 @@ object NearDedup {
     // caller passed signatures shorter than declared)
     require(bands * rowsPerBand <= numHashes,
       s"bands*rowsPerBand (${bands * rowsPerBand}) exceeds signature length $numHashes")
-    // the runtime check feeds the slice length (coalesce of a passing
-    // assert_true is null), so Catalyst cannot prune it away
-    val banded = bandHashes(sig, bands, rowsPerBand)
-    banded.as("x").join(banded.as("y"),
-        col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
-        col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
-      .distinct()
+    bandPairs(bandHashes(sig, bands, rowsPerBand))
   }
 
   /** One (doc_id, band, band_hash) row per signature band — the LSH
@@ -91,28 +84,51 @@ object NearDedup {
       .select(col("doc_id"), col("pos").as("band"), col("col").as("bh"))
   }
 
-  /** Exact Jaccard for a set of candidate pairs: join each side's
-    * collected shingle set onto the pair and intersect the arrays.
-    * Work is proportional to |candidates| (the LSH output), NOT to the
-    * inverted-index blowup of a shingle self-join — the property that
-    * keeps the verify stage cheap at 100 TB. Per-doc shingle sets are
-    * bounded by document length. */
+  /** The LSH self-join of the dedup tiers: distinct `(id_a < id_b)`
+    * pairs of documents sharing a `(band, bh)` bucket. `alsoMatch` adds
+    * a predicate over the two rows (`x.*`, `y.*`) to the join
+    * condition. */
+  private def bandPairs(banded: DataFrame, alsoMatch: Column = lit(true)): DataFrame =
+    banded.as("x").join(banded.as("y"),
+        col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
+        col("x.doc_id") < col("y.doc_id") && alsoMatch)
+      .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
+      .distinct()
+
+  /** Exact Jaccard `(id_a, id_b, jaccard)` of a set of candidate pairs
+    * over `(doc_id, shingle)` rows; a row repeated in `sh` counts
+    * once. */
   def jaccard(sh: DataFrame, pairs: DataFrame): DataFrame = {
-    val sets = sh.groupBy("doc_id")
-      .agg(collect_set(col("shingle")).as("s"), count(lit(1)).as("n"))
-    pairs
-      .join(sets.select(col("doc_id").as("id_a"), col("s").as("s_a"), col("n").as("n_a")), "id_a")
-      .join(sets.select(col("doc_id").as("id_b"), col("s").as("s_b"), col("n").as("n_b")), "id_b")
-      .withColumn("n_common", size(array_intersect(col("s_a"), col("s_b"))).cast(LongType))
-      .select(col("id_a"), col("id_b"),
-        (col("n_common").cast(DoubleType) /
-          (col("n_a") + col("n_b") - col("n_common"))).as("jaccard"))
+    val sets = sh.groupBy("doc_id").agg(collect_set(col("shingle")).as("s"))
+      .withColumn("nsh", size(col("s")).cast(LongType))
+    jaccardOf(pairs, "id_a", "id_b", sets, sets)
   }
 
-  /** Per-doc distinct shingle SET (one aggregation) — the shared input
-    * for both signature computation and exact verification, so the
+  /** The verify stage of every pair generator: joins each side's set
+    * frame (`doc_id`, `s`, `nsh`) onto the candidate pairs (columns
+    * `idA`, `idB`) and intersects the arrays, giving `(idA, idB,
+    * jaccard)`. Work is proportional to |candidates| (the LSH or prefix
+    * filter output), NOT to the inverted-index blowup of a shingle
+    * self-join — the property that keeps the verify stage cheap at
+    * 100 TB. Per-doc sets are bounded by document length. */
+  private def jaccardOf(cand: DataFrame, idA: String, idB: String,
+                        setsA: DataFrame, setsB: DataFrame): DataFrame = {
+    def side(sets: DataFrame, id: String, x: String) =
+      sets.select(col("doc_id").as(id), col("s").as(s"s_$x"), col("nsh").as(s"n_$x"))
+    cand.join(side(setsA, idA, "a"), idA).join(side(setsB, idB, "b"), idB)
+      .withColumn("n_common", size(array_intersect(col("s_a"), col("s_b"))).cast(LongType))
+      .select(col(idA), col(idB), (col("n_common").cast(DoubleType) /
+        (col("n_a") + col("n_b") - col("n_common"))).as("jaccard"))
+  }
+
+  /** Per-doc distinct shingle SET `(doc_id, s, nsh = size(s))`, one
+    * aggregation — the one set builder of the near-dup tiers. It feeds
+    * the MinHash signatures, every exact verify stage, the cross tier's
+    * persistable base index ([[ngramJaccardCrossPrebuilt]]) and the
+    * streaming tier's band index (`CorpusStream.runNearDedup`), so the
     * expensive shingling+grouping subplan appears once and Catalyst
-    * reuses its exchange on the self-join. */
+    * reuses its exchange on the self-joins. The order of `s` is
+    * unspecified: a consumer that needs one sorts. */
   def shingleSets(docs: DataFrame, n: Int = 3): DataFrame =
     // dedup inside the aggregation (array_distinct ∘ collect_list)
     // instead of a standalone .distinct() — one shuffle, not two
@@ -137,38 +153,19 @@ object NearDedup {
   private[graft] def bandsFromSets(sets: DataFrame): DataFrame =
     bandHashes(signaturesFromSets(sets), defaultBands, defaultRowsPerBand)
 
-  /** [[minHashDedupOf]] split over PREBUILT per-doc sets and band rows
-    * (typically both checkpointed by the caller): band-collision
-    * candidates verified by exact Jaccard on the sets — identical
-    * output to minHashDedupOf on the same documents. */
+  /** MinHash+LSH pairs over PREBUILT per-doc sets and their band rows
+    * (the streaming tier checkpoints both): band-collision candidates
+    * verified by exact Jaccard on the sets. [[minHashDedupOf]] is this
+    * over sets it builds itself. */
   private[graft] def minHashPairsPrebuilt(sets: DataFrame, banded: DataFrame,
-                                          threshold: Double): DataFrame = {
-    val cand = banded.as("x").join(banded.as("y"),
-        col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
-        col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
-      .distinct()
-    cand
-      .join(sets.select(col("doc_id").as("id_a"), col("s").as("s_a"), col("nsh").as("n_a")), "id_a")
-      .join(sets.select(col("doc_id").as("id_b"), col("s").as("s_b"), col("nsh").as("n_b")), "id_b")
-      .withColumn("n_common", size(array_intersect(col("s_a"), col("s_b"))).cast(LongType))
-      .filter(col("n_common").cast(DoubleType) /
-        (col("n_a") + col("n_b") - col("n_common")) >= threshold)
-      .select("id_a", "id_b")
-  }
+                                          threshold: Double): DataFrame =
+    jaccardOf(bandPairs(banded), "id_a", "id_b", sets, sets)
+      .filter(col("jaccard") >= threshold).drop("jaccard")
 
   /** MinHash+LSH near-dup pairs verified by exact Jaccard. */
   def minHashDedupOf(docs: DataFrame, threshold: Double): DataFrame = {
     val sets = shingleSets(docs)
-    val cand = minHashCandidates(signaturesFromSets(sets))
-    val withSets = cand
-      .join(sets.select(col("doc_id").as("id_a"), col("s").as("s_a"), col("nsh").as("n_a")), "id_a")
-      .join(sets.select(col("doc_id").as("id_b"), col("s").as("s_b"), col("nsh").as("n_b")), "id_b")
-      .withColumn("n_common", size(array_intersect(col("s_a"), col("s_b"))).cast(LongType))
-    withSets
-      .filter(col("n_common").cast(DoubleType) /
-        (col("n_a") + col("n_b") - col("n_common")) >= threshold)
-      .select("id_a", "id_b")
+    minHashPairsPrebuilt(sets, bandsFromSets(sets), threshold)
     // no ORDER BY here: every internal consumer (cluster resolution,
     // the streaming admit path) is order-insensitive, and the global
     // sort was a whole extra exchange on the pair list; the registered
@@ -212,17 +209,7 @@ object NearDedup {
     * 100 TB — and exact verification on the full sets restores
     * precision. */
   def ngramJaccardOf(docs: DataFrame, threshold: Double): DataFrame = {
-    // prefix length n − ⌈t·n⌉ + 1 in EXACT integer arithmetic: the
-    // threshold becomes the rational p/1e6 and ⌈n·p/q⌉ = (n·p+q−1) div q.
-    // Floating point here is how false negatives sneak in — 1−0.8
-    // evaluates to 0.1999…96, and an absolute epsilon fix stops
-    // working once n·t's representation error exceeds it.
-    val p = math.round(threshold * 1000000L)
-    require(math.abs(p / 1e6 - threshold) < 1e-9,
-      s"threshold $threshold must be representable with 6 decimals")
-    // SQL `div` is integral long division — no doubles anywhere
-    val prefixLen = expr(
-      s"cast(nsh - ((nsh * ${p}L + 999999L) div 1000000L) + 1 as int)")
+    val (p, prefixLen) = prefixFilter(threshold)
     // canonical order = ascending GLOBAL FREQUENCY (rarest first,
     // hash as tiebreak): any consistent total order keeps the filter
     // lossless, but frequency order puts the rarest shingles in the
@@ -268,15 +255,24 @@ object NearDedup {
           s"((a.nsh + b.nsh) * ${p}L + ${1000000L + p - 1L}L) div ${1000000L + p}L"))
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
       .distinct()
-    cand
-      .join(sets.select(col("doc_id").as("id_a"), col("s").as("s_a"), col("nsh").as("n_a")), "id_a")
-      .join(sets.select(col("doc_id").as("id_b"), col("s").as("s_b"), col("nsh").as("n_b")), "id_b")
-      .withColumn("n_common", size(array_intersect(col("s_a"), col("s_b"))).cast(LongType))
-      .filter(col("n_common").cast(DoubleType) /
-        (col("n_a") + col("n_b") - col("n_common")) >= threshold)
-      .select("id_a", "id_b")
+    jaccardOf(cand, "id_a", "id_b", sets, sets)
+      .filter(col("jaccard") >= threshold).drop("jaccard")
     // unsorted by design (see minHashDedupOf) — the registered wrapper
     // below adds the output ordering
+  }
+
+  /** The prefix filter of a Jaccard threshold t: t as the exact
+    * rational p/10^6, and the prefix length n − ⌈t·n⌉ + 1 of a set of
+    * `nsh` elements in EXACT integer arithmetic, ⌈n·p/q⌉ = (n·p+q−1)
+    * div q (SQL `div` is integral long division — no doubles
+    * anywhere). Floating point here is how false negatives sneak in —
+    * 1−0.8 evaluates to 0.1999…96, and an absolute epsilon fix stops
+    * working once n·t's representation error exceeds it. */
+  private def prefixFilter(threshold: Double): (Long, Column) = {
+    val p = math.round(threshold * 1000000L)
+    require(math.abs(p / 1e6 - threshold) < 1e-9,
+      s"threshold $threshold must be representable with 6 decimals")
+    (p, expr(s"cast(nsh - ((nsh * ${p}L + 999999L) div 1000000L) + 1 as int)"))
   }
 
   def ngramJaccard(spark: SparkSession, dir: String, threshold: Double = 0.8): DataFrame =
@@ -554,50 +550,34 @@ object NearDedup {
     * applied at the candidate join (t·|B| ≤ |A| ≤ |B|/t), exact
     * verification on the full sets. Work is probe-prefix × posting
     * collisions — the base is indexed once and never self-joined. */
-  /** The PERSISTABLE standing state of the cross tier: one row per
-    * base doc with its sorted shingle set — build once, store beside
-    * the corpus, probe on every drop (the exact-tier analog of
-    * [[bandTableOf]]). */
-  def shingleSetsOf(docs: DataFrame): DataFrame =
-    shingles(docs).groupBy("doc_id")
-      .agg(array_sort(collect_set(col("shingle"))).as("s"))
-      .withColumn("nsh", size(col("s")).cast(LongType))
-
   def ngramJaccardCrossOf(base: DataFrame, batch: DataFrame,
                           threshold: Double): DataFrame =
-    ngramJaccardCrossPrebuilt(shingleSetsOf(base), batch, threshold)
+    ngramJaccardCrossPrebuilt(shingleSets(base), batch, threshold)
 
-  /** [[ngramJaccardCrossOf]] against an already-built base index
-    * ([[shingleSetsOf]], typically read back from storage): the
-    * per-drop cost is the batch's own shingling + the probe — the
-    * base corpus is never re-shingled. */
+  /** [[ngramJaccardCrossOf]] against an already-built base index: the
+    * PERSISTABLE standing state of the cross tier, [[shingleSets]] of
+    * the base (the exact-tier analog of [[bandTableOf]]) — build once,
+    * store beside the corpus, probe on every drop. The per-drop cost is
+    * the batch's own shingling + the probe — the base corpus is never
+    * re-shingled. The base index is exploded whole, so its array order
+    * does not matter. */
   def ngramJaccardCrossPrebuilt(baseSets: DataFrame, batch: DataFrame,
                                 threshold: Double): DataFrame = {
-    val p = math.round(threshold * 1000000L)
-    require(math.abs(p / 1e6 - threshold) < 1e-9,
-      s"threshold $threshold must be representable with 6 decimals")
-    val prefixLen = expr(
-      s"cast(nsh - ((nsh * ${p}L + 999999L) div 1000000L) + 1 as int)")
-    val b = baseSets
-      .select(col("doc_id").as("id_base"), col("s").as("s_b"), col("nsh").as("n_b"))
-    val n = shingleSetsOf(batch)
-      .withColumn("prefix", slice(col("s"), lit(1), prefixLen))
-      .select(col("doc_id").as("id_new"), col("s").as("s_n"), col("nsh").as("n_n"),
-        col("prefix"))
-    val probe = n.select(col("id_new"), col("n_n"), explode(col("prefix")).as("shingle"))
-    val baseIdx = b.select(col("id_base"), col("n_b"), explode(col("s_b")).as("shingle"))
+    val (p, prefixLen) = prefixFilter(threshold)
+    val batchSets = shingleSets(batch)
+    // any prefix is lossless; the hash-SORTED one keeps a document-order
+    // prefix from piling onto shared leading boilerplate
+    val probe = batchSets.select(col("doc_id").as("id_new"), col("nsh").as("n_n"),
+      explode(slice(array_sort(col("s")), lit(1), prefixLen)).as("shingle"))
+    val baseIdx = baseSets.select(col("doc_id").as("id_base"), col("nsh").as("n_b"),
+      explode(col("s")).as("shingle"))
     val cand = probe.join(baseIdx,
         probe("shingle") === baseIdx("shingle") &&
         col("n_b") * 1000000L >= col("n_n") * p &&
         col("n_n") * 1000000L >= col("n_b") * p)
       .select("id_base", "id_new").distinct()
-    cand
-      .join(b, "id_base")
-      .join(n.select("id_new", "s_n", "n_n"), "id_new")
-      .withColumn("n_common", size(array_intersect(col("s_b"), col("s_n"))).cast(LongType))
-      .filter(col("n_common").cast(DoubleType) /
-        (col("n_b") + col("n_n") - col("n_common")) >= threshold)
-      .select("id_base", "id_new")
+    jaccardOf(cand, "id_base", "id_new", baseSets, batchSets)
+      .filter(col("jaccard") >= threshold).drop("jaccard")
     // unsorted by design (see minHashDedupOf): the incremental-split
     // caller aggregates over these pairs, order-free
   }
@@ -620,7 +600,7 @@ object NearDedup {
   def clusterSplitIncrOf(baseDocs: DataFrame, baseAssign: DataFrame,
                          batch: DataFrame,
                          jaccardThreshold: Double = 0.5): DataFrame =
-    clusterSplitIncrPrebuilt(shingleSetsOf(baseDocs), baseAssign, batch,
+    clusterSplitIncrPrebuilt(shingleSets(baseDocs), baseAssign, batch,
       jaccardThreshold)
 
   /** [[clusterSplitIncrOf]] against the persisted base index — the
@@ -684,7 +664,7 @@ object NearDedup {
     val fixture = splitBaseFixtures.computeIfAbsent(dir, _ => {
       val p = graft.util.Scratch.dir("split_base")
       clusterSplitOf(base).write.parquet(s"$p/assign")
-      shingleSetsOf(base).write.parquet(s"$p/index")
+      shingleSets(base).write.parquet(s"$p/index")
       p
     })
     def planted(src: DataFrame, shift: Long, suffix: String) = src
@@ -710,7 +690,7 @@ object NearDedup {
       .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
       .localCheckpoint(true)
     // the index scan feeds the probe's CPU-heavy chain (full-set
-    // explode → candidate join → array_intersect verify), and broadcast
+    // explode → candidate join → exact verify), and broadcast
     // joins fuse that chain INTO the scan stage — a ~2-split file
     // layout would run it 2-wide on a 32-core session (measured: one
     // 1.45 s 2-task stage dominating the query). Same widen rationale
@@ -1083,7 +1063,7 @@ object NearDedup {
     * `CorpusStream.runNearDedup`), so a new batch probes history
     * without re-signaturing it. */
   def bandTableOf(docs: DataFrame): DataFrame =
-    bandHashes(signaturesFromSets(shingleSets(docs)), defaultBands, defaultRowsPerBand)
+    bandsFromSets(shingleSets(docs))
 
   /** Incremental near tier against a PREBUILT base band table:
     * candidates come from batch bands ⋈ base bands, and base shingle
@@ -1093,8 +1073,7 @@ object NearDedup {
   def incrementalNearPrebuilt(base: DataFrame, baseBands: DataFrame,
                               batch: DataFrame, threshold: Double): DataFrame = {
     val batchSets = shingleSets(batch)
-    incrementalNearPrebuiltBatch(base, baseBands, batchSets,
-      bandHashes(signaturesFromSets(batchSets), defaultBands, defaultRowsPerBand),
+    incrementalNearPrebuiltBatch(base, baseBands, batchSets, bandsFromSets(batchSets),
       threshold)
   }
 
@@ -1111,15 +1090,8 @@ object NearDedup {
       .distinct()
     val baseSets = shingleSets(
       base.join(cand.select(col("base_id").as("doc_id")).distinct(), "doc_id"))
-    cand
-      .join(batchSets.select(col("doc_id").as("batch_id"),
-        col("s").as("s_a"), col("nsh").as("n_a")), "batch_id")
-      .join(baseSets.select(col("doc_id").as("base_id"),
-        col("s").as("s_b"), col("nsh").as("n_b")), "base_id")
-      .withColumn("n_common", size(array_intersect(col("s_a"), col("s_b"))).cast(LongType))
-      .filter(col("n_common").cast(DoubleType) /
-        (col("n_a") + col("n_b") - col("n_common")) >= threshold)
-      .select(col("batch_id"), col("base_id"))
+    jaccardOf(cand, "batch_id", "base_id", batchSets, baseSets)
+      .filter(col("jaccard") >= threshold).drop("jaccard")
   }
 
   def incrementalNear(spark: SparkSession, dir: String,
@@ -1151,12 +1123,7 @@ object NearDedup {
       posexplode(array((0 until 4).map(b =>
         shiftrightunsigned(col("simhash"), b * 16).bitwiseAND(0xFFFFL)): _*)))
       .select(col("doc_id"), col("simhash"), col("pos").as("band"), col("col").as("bh"))
-    banded.as("x").join(banded.as("y"),
-        col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
-        col("x.doc_id") < col("y.doc_id"))
-      .filter(bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))) <= maxHamming)
-      .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
-      .distinct()
+    bandPairs(banded, bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))) <= maxHamming)
       .orderBy("id_a", "id_b")
   }
 }

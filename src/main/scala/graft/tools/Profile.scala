@@ -68,37 +68,6 @@ object Profile {
       case "splitincr" =>
         time("t_split_safe")(NearDedup.clusterSplit(spark, sfDir))
         time("t_split_safe_incr")(NearDedup.clusterSplitIncr(spark, sfDir))
-      case "ppjoin" =>
-        val docs = Tables.documents(spark, sfDir)
-        val threshold = 0.5
-        val sh = NearDedup.shingles(docs)
-        time("shingles")(sh)
-        val freq = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
-        time("freq")(freq)
-        val p = 500000L
-        val prefixLen = expr(s"cast(nsh - ((nsh * ${p}L + 999999L) div 1000000L) + 1 as int)")
-        val sets = sh.join(freq, "shingle")
-          .groupBy("doc_id")
-          .agg(array_sort(collect_list(struct(col("df"), col("shingle")))).as("fs"))
-          .withColumn("s", transform(col("fs"), x => x.getField("shingle")))
-          .withColumn("nsh", size(col("s")).cast(org.apache.spark.sql.types.LongType))
-          .withColumn("prefix",
-            transform(slice(col("fs"), lit(1), prefixLen), x => x.getField("shingle")))
-        time("sets")(sets)
-        val indexed = sets.select(col("doc_id"), col("nsh"), posexplode(col("prefix")))
-          .select(col("doc_id"), col("nsh"), col("pos").cast("long").as("pos"),
-            col("col").as("shingle"))
-        time("indexed")(indexed)
-        val cand = indexed.as("a").join(indexed.as("b"),
-            col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id") &&
-            col("a.nsh") * 1000000L >= col("b.nsh") * p &&
-            col("b.nsh") * 1000000L >= col("a.nsh") * p &&
-            expr(s"1L + least(a.nsh - 1L - a.pos, b.nsh - 1L - b.pos) >= " +
-              s"((a.nsh + b.nsh) * ${p}L + ${1000000L + p - 1L}L) div ${1000000L + p}L"))
-          .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-          .distinct()
-        time("candidates")(cand)
-        time("pairs_full")(NearDedup.ngramJaccardOf(docs, threshold))
       case "conf" =>
         // same-JVM A/B of one SQL conf: args(3) = key, args(4) = comma
         // list of values, args(5..) = query names. The values run in

@@ -436,6 +436,62 @@ class DataMixSpec extends AnyFunSuite {
     assert(cross.nonEmpty, "vacuous fixture: no cross-split near-pairs in the corpus")
   }
 
+  test("near-dup tiers against a brute-force driver-side 3-gram Jaccard oracle") {
+    val rnd = new scala.util.Random(7)
+    def words(n: Int) = Seq.fill(n)(s"w${rnd.nextInt(150)}")
+    val originals = (1L to 12L).map(_ -> words(40))
+    // copy 100+i swaps i % 6 words, 7 apart: Jaccard from 1.0 down past 0.5
+    val copies = originals.map { case (i, w) =>
+      (100 + i) -> (0 until (i % 6).toInt).foldLeft(w)((acc, k) => acc.updated(3 + 7 * k, s"edit$k"))
+    }
+    val texts = (originals ++ copies).map { case (i, w) => i -> w.mkString(" ") } ++ Seq(
+      201L -> ("\t  " + copies(2)._2.mkString(" ").toUpperCase + "  "), // case and edge whitespace
+      202L -> "too short",
+      203L -> "")
+    def shingleSet(t: String): Set[String] = {
+      val w = t.toLowerCase.trim.split("\\s+")
+      if (w.length < 3) Set.empty else w.sliding(3).map(_.mkString(" ")).toSet
+    }
+    val bfSets = texts.map { case (i, t) => i -> shingleSet(t) }.filter(_._2.nonEmpty)
+    val bf = (for ((a, sa) <- bfSets; (b, sb) <- bfSets if a < b) yield {
+      val c = (sa & sb).size
+      (a, b) -> c.toDouble / (sa.size + sb.size - c)
+    }).toMap
+    assert(bf.values.exists(j => j >= 0.8) && bf.values.exists(j => j >= 0.5 && j < 0.8) &&
+      bf.values.exists(j => j > 0.3 && j < 0.5), s"fixture does not straddle the thresholds: $bf")
+
+    val df = texts.toDF("doc_id", "text")
+    def isBatch(id: Long) = id % 3 == 0
+    val base = df.filter(col("doc_id") % 3 =!= 0)
+    val batch = df.filter(col("doc_id") % 3 === 0)
+    def pairs(d: org.apache.spark.sql.DataFrame) = d.as[(Long, Long)].collect().toSet
+    // (base, batch) orientation of the cross tier
+    def cross(ps: Set[(Long, Long)]) = ps.collect {
+      case (a, b) if isBatch(a) != isBatch(b) => if (isBatch(a)) (b, a) else (a, b)
+    }
+    val sets = NearDedup.shingleSets(df)
+    val bands = NearDedup.bandsFromSets(sets)
+    val reversedIndex = NearDedup.shingleSets(base).withColumn("s", reverse(col("s")))
+    for (t <- Seq(0.5, 0.8)) {
+      val expected = bf.keySet.filter(bf(_) >= t)
+      assert(pairs(NearDedup.ngramJaccardOf(df, t)) === expected, s"ngramJaccardOf at $t")
+      assert(cross(expected).nonEmpty)
+      assert(pairs(NearDedup.ngramJaccardCrossOf(base, batch, t)) === cross(expected),
+        s"ngramJaccardCrossOf at $t")
+      assert(pairs(NearDedup.ngramJaccardCrossPrebuilt(reversedIndex, batch, t)) === cross(expected),
+        s"ngramJaccardCrossPrebuilt over a reversed index at $t")
+      Seq(
+        "minHashDedupOf" -> pairs(NearDedup.minHashDedupOf(df, t)),
+        "minHashPairsPrebuilt" -> pairs(NearDedup.minHashPairsPrebuilt(sets, bands, t)),
+        "incrementalNearOf" -> pairs(NearDedup.incrementalNearOf(base, batch, t))
+      ).foreach { case (name, got) =>
+        assert(got.nonEmpty, s"$name at $t: vacuous")
+        val wrong = got.map { case (a, b) => (a min b, a max b) }.filterNot(p => bf.getOrElse(p, 0.0) >= t)
+        assert(wrong.isEmpty, s"$name at $t: pairs below the threshold $wrong")
+      }
+    }
+  }
+
   test("bloom decontamination is result-identical to the exact plan on real data") {
     val docs2 = graft.sources.Tables.documents(spark, sf)
     val exact = NearDedup.decontaminateOf(

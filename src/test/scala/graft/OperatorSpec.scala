@@ -116,6 +116,19 @@ class OperatorSpec extends AnyFunSuite {
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L))
   }
 
+  test("jaccard: duplicated (doc, shingle) rows score the same as the distinct rows") {
+    // doc 1 and doc 2 share 3 of their 5 shingles each: 3 / 7
+    val docs = Seq((1L, "a b c d e f g"), (2L, "a b c d e x y"), (3L, "p q r s"))
+      .toDF("doc_id", "text")
+    val sh = NearDedup.shingles(docs)
+    val pairs = Seq((1L, 2L), (1L, 3L)).toDF("id_a", "id_b")
+    def scored(rows: org.apache.spark.sql.DataFrame) =
+      NearDedup.jaccard(rows, pairs).as[(Long, Long, Double)].collect().toSet
+    val distinct = scored(sh)
+    assert(distinct === Set((1L, 2L, 3.0 / 7), (1L, 3L, 0.0)))
+    assert(scored(sh.unionAll(sh.filter(col("doc_id") === 1L))) === distinct)
+  }
+
   test("simhash: near-identical docs collide, unrelated do not") {
     val base = (1 to 60).map(i => s"token$i").mkString(" ")
     val nearDup = base.replace("token30", "tokenX")

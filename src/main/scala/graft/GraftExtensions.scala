@@ -39,6 +39,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // V1-bridge codegen seam remains (plans.GraftScanInline). Runs
     // after MatViewRewrite within each pass, so a fresh view wins.
     ext.injectOptimizerRule(_ => graft.plans.GraftScanInline)
+    // …and an aggregate over a small file scan runs as one stage on one
+    // coalesced partition (plans.SingleStageAggregate). A pre-CBO rule,
+    // so it runs LAST: once, after the operator-optimization batch the
+    // three rules above run in, so each still sees the Aggregate-over-
+    // scan shapes it matches; a view-served aggregate coalesces its
+    // view scan and a manifest-served one, a LocalRelation, declines.
+    ext.injectPreCBORule(_ => graft.plans.SingleStageAggregate)
     ext.injectFunction((FunctionIdentifier("dot_f"),
       info("dot_f", "dot_f(a, b) - double dot product of two float vectors"),
       (children: Seq[Expression]) => DotProductF(children(0), children(1))))

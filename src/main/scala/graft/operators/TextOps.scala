@@ -114,7 +114,7 @@ object TextOps {
     * corpus against a quality projection of itself (the join shape
     * cost a second corpus scan + an exchange in cleanCorpus; guide
     * §2.4 remove shuffles outright). */
-  private[operators] def qualityPass(minTokens: Long, minAlphaRatio: Double)
+  private[graft] def qualityPass(minTokens: Long, minAlphaRatio: Double)
       : Column = {
     val cc = graft.functions.native.char_class_counts(col("text"))
     val nChars = cc.getItem(0).cast(DoubleType)

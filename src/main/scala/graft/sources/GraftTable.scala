@@ -14,7 +14,7 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsRowLevelOpe
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, Transform}
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownRequiredColumns, V1Scan}
 import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
+import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory, PartitioningAwareFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.functions.col
@@ -111,6 +111,11 @@ class GraftTable private (
     * exists only merged — and write bootstraps return None. */
   private[graft] def statsReadPoint: Option[(String, Long)] =
     if (parquetDelegate.isDefined) resolvedVersion.map(v => (root, v)) else None
+
+  /** The files a plain head scans (its parquet delegate's index, listed
+    * once per table); None for chain heads and write bootstraps. */
+  private[graft] def fileIndex: Option[PartitioningAwareFileIndex] =
+    parquetDelegate.map(_.fileIndex)
 
   /** Chain-merged state, resolved lazily and once (the plan pins to
     * immutable version dirs, so caching is safe for this table's

@@ -38,11 +38,10 @@ object Profile {
         val docs = Tables.documents(spark, sfDir)
         val threshold = 0.5
         time("docs")(docs)
-        val quality = TextOps.qualityScoreOf(docs)
-          .filter(col("n_tokens") >= 5 && col("alpha_ratio") >= 0.5)
-          .select("doc_id")
-        time("quality")(quality)
-        val qualified = docs.join(quality, "doc_id")
+        // cleanCorpus's own qualified corpus: the quality gate inline
+        // in the corpus scan, at its default bounds
+        val qualified = docs.filter(TextOps.qualityPass(5, 0.5))
+        time("quality")(qualified)
         time("shingles")(NearDedup.shingles(qualified))
         time("pairs_ppjoin")(NearDedup.ngramJaccardOf(qualified, threshold))
         time("clusters")(NearDedup.duplicateClusters(

@@ -186,7 +186,7 @@ object Pipeline {
 
   // — registered end-to-end binding ——————————————————————————————————
 
-  private val e2eFixtures = new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, Long)]]()
+  private val e2eFixtures = new graft.util.Scratch.Fixture[Seq[(String, Long)]]("pipeline_q")
 
   /** Render rows as pp-schema CSV lines (all fields quoted,
     * headerless — the reference's actual file format). */
@@ -226,8 +226,7 @@ object Pipeline {
     * file-only). */
   def pipelineE2E(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val stats = e2eFixtures.computeIfAbsent(dir, _ => {
-      val tmp = graft.util.Scratch.dir("pipeline_q")
+    val stats = e2eFixtures(dir) { tmp =>
       val table = s"$tmp/table"
       val o = graft.sources.Tables.orders(spark, dir).select(
         col("o_orderkey").as("k"),
@@ -267,12 +266,11 @@ object Pipeline {
         case (k, v) => b += s"verify_$k" -> v
       }
       b.result()
-    })
+    }
     stats.toDF("stat", "value").orderBy("stat")
   }
 
-  private val zipE2eFixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, Long)]]()
+  private val zipE2eFixtures = new graft.util.Scratch.Fixture[Seq[(String, Long)]]("pipeline_zip_q")
 
   /** Registered `q_pipeline_zip_e2e`: the reference's ACTUAL monthly
     * delivery seam run end-to-end — the update lands as a ZIP ARCHIVE
@@ -290,8 +288,7 @@ object Pipeline {
     * without losing a row. */
   def pipelineZipE2E(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val stats = zipE2eFixtures.computeIfAbsent(dir, _ => {
-      val tmp = graft.util.Scratch.dir("pipeline_zip_q")
+    val stats = zipE2eFixtures(dir) { tmp =>
       val table = s"$tmp/table"
       val feed = s"$tmp/feed"
       val o = graft.sources.Tables.orders(spark, dir).select(
@@ -348,7 +345,7 @@ object Pipeline {
       b += "decision_reoffer_gc" -> (if (dec2 == "garbage_collect" && h1 == h2) 1L else 0L)
       b += "live_rows" -> current(spark, table).count()
       b.result()
-    })
+    }
     stats.toDF("stat", "value").orderBy("stat")
   }
 }

@@ -4,11 +4,6 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
-  private def deleteRec(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(deleteRec)
-    f.delete()
-  }
-
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -26,7 +21,7 @@ object Verify {
       // drop any previous dump FIRST: a query that now fails at
       // analysis time must not leave a stale (passing) result behind
       val target = new java.io.File(s"$outDir/$name")
-      if (target.exists()) deleteRec(target)
+      if (target.exists()) graft.util.Scratch.deleteRec(target)
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -294,8 +294,8 @@ object Media {
     * degrading — while healthy rows are untouched (spec-pinned; the
     * un-planted `m_media_meta` row count is unchanged). */
   def mediaQuarantine(spark: SparkSession, dir: String): DataFrame =
-    decodeMetaTagged(cachedFixture(s"media-corrupt|$dir", spark)(
-        mediaTable(spark, dir, plantCorrupt = true)))
+    decodeMetaTagged(spark.read.parquet(fixtures(s"media-corrupt|$dir")(
+        spread(mediaTable(spark, dir, plantCorrupt = true)))))
       .filter(!col("decode_ok"))
       .select(col("media_id"), col("kind"), col("n_bytes"))
       .orderBy("media_id")
@@ -305,7 +305,7 @@ object Media {
     * computed in the SAME pass as the decode (one corpus scan, no
     * join; the payload is never read twice). */
   def mediaMeta(spark: SparkSession, dir: String): DataFrame =
-    decodeWith(cachedFixture(s"media|$dir", spark)(mediaTable(spark, dir)),
+    decodeWith(spark.read.parquet(fixtures(s"media|$dir")(spread(mediaTable(spark, dir)))),
         sha2(col("payload"), 256))
       .select(col("_1.*"), col("_2").as("payload_sha"))
       .orderBy("media_id")
@@ -325,8 +325,8 @@ object Media {
     * frames sample two rows and the rest one — both branches of the
     * stride arithmetic are exercised. */
   def mediaFrames(spark: SparkSession, dir: String): DataFrame =
-    sampleFrames(decodeMeta(cachedFixture(s"media|$dir", spark)(
-        mediaTable(spark, dir)).filter(col("kind") === "video")).toDF(),
+    sampleFrames(decodeMeta(spark.read.parquet(fixtures(s"media|$dir")(
+        spread(mediaTable(spark, dir)))).filter(col("kind") === "video")).toDF(),
       everyN = 8)
       .orderBy("media_id", "frame_idx")
 
@@ -388,7 +388,7 @@ object Media {
   /** Registered resize query (rows-only): per-image target geometry +
     * payload size — scalar columns only for the driver dump. */
   def mediaResize(spark: SparkSession, dir: String): DataFrame =
-    resizeImages(cachedFixture(s"media|$dir", spark)(mediaTable(spark, dir))
+    resizeImages(spark.read.parquet(fixtures(s"media|$dir")(spread(mediaTable(spark, dir))))
       .filter(col("kind") === "image")).toDF()
       .select(col("media_id"), col("src_width"), col("src_height"),
         col("width"), col("height"), length(col("payload")).as("n_bytes"))
@@ -571,20 +571,16 @@ object Media {
     * pass. The timed path keeps everything real: payload DECODE,
     * metadata extraction, resize re-encode, fingerprinting, band
     * search. */
-  private val dedupFixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val fixtures = new graft.util.Scratch.Fixture[String]("media_fixture")
 
-  private def cachedFixture(key: String, spark: SparkSession)
-                           (build: => DataFrame): DataFrame = {
-    val path = dedupFixtures.computeIfAbsent(key, _ => {
-      val p = graft.util.Scratch.dir("media_fixture") + "/table"
-      // one file per core: the parquet read splits by file, so the
-      // downstream per-partition decode actually parallelizes
-      build.repartition(spark.sparkContext.defaultParallelism)
-        .write.parquet(p)
-      p
-    })
-    spark.read.parquet(path)
+  /** A fixture build: writes `media` under `tmp` one file per core (the
+    * parquet read splits by file, so the downstream per-partition
+    * decode actually parallelizes) and returns the table's path. */
+  private def spread(media: => DataFrame)(tmp: String): String = {
+    val df = media
+    df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+      .write.parquet(s"$tmp/table")
+    s"$tmp/table"
   }
 
   /** Registered image near-dup query (rows-only: the dHash depends on
@@ -592,8 +588,8 @@ object Media {
     * planted-pair recovery is spec-pinned instead): perceptual
     * duplicate pairs over the planted table. */
   def mediaDedup(spark: SparkSession, dir: String): DataFrame =
-    imageNearDupOf(cachedFixture(s"image|$dir", spark)(
-      imageTableWithNearDups(spark, dir)))
+    imageNearDupOf(spark.read.parquet(fixtures(s"image|$dir")(
+      spread(imageTableWithNearDups(spark, dir)))))
 
   // ——— audio perceptual dedup ————————————————————————————————————
 
@@ -755,8 +751,8 @@ object Media {
   /** Registered audio near-dup query (rows-only — the fingerprint
     * rides the PCM decode; planted-pair recovery is spec-pinned). */
   def mediaDedupAudio(spark: SparkSession, dir: String): DataFrame =
-    audioNearDupOf(cachedFixture(s"audio|$dir", spark)(
-      audioTableWithNearDups(spark, dir)))
+    audioNearDupOf(spark.read.parquet(fixtures(s"audio|$dir")(
+      spread(audioTableWithNearDups(spark, dir)))))
 
   // ——— video perceptual dedup ————————————————————————————————————
 
@@ -913,8 +909,8 @@ object Media {
   /** Registered video near-dup query (rows-only — frame dHashes ride
     * the GIF decode; planted-pair recovery is spec-pinned). */
   def mediaDedupVideo(spark: SparkSession, dir: String): DataFrame =
-    videoNearDupOf(cachedFixture(s"video|$dir", spark)(
-      videoTableWithNearDups(spark, dir)))
+    videoNearDupOf(spark.read.parquet(fixtures(s"video|$dir")(
+      spread(videoTableWithNearDups(spark, dir)))))
 
   // — SHOT SEGMENTATION (scene-cut detection) ————————————————————————
 
@@ -922,7 +918,7 @@ object Media {
     * by the scene-cut and per-shot-sampling registrations so they can
     * never drift apart. */
   private def shotClipTable(spark: SparkSession, dir: String): DataFrame =
-    cachedFixture(s"shots|$dir", spark) {
+    spark.read.parquet(fixtures(s"shots|$dir")(spread {
       import spark.implicits._
       Tables.documents(spark, dir)
         .filter(col("doc_id") % 3 === 0)
@@ -930,7 +926,7 @@ object Media {
         .as[Long]
         .mapPartitions(_.map(id => (id, "video", syntheticShotGif(id))))
         .toDF("media_id", "kind", "payload")
-    }
+    }))
 
   /** Shots per synthetic clip and frames per shot: 2-4 shots × 3
     * frames, id-derived — every clip has at least one true cut. */

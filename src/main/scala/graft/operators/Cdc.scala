@@ -172,8 +172,7 @@ object Cdc {
       .withColumn("price", col("price").cast(DoubleType))
       .orderBy("o_orderkey")
 
-  private val sqlFixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val sqlFixtures = new graft.util.Scratch.Fixture[String]("cdc_merge_sql")
 
   /** The SAME decision matrix routed through ANSI `MERGE INTO` against
     * the snapshot store — and answering the SAME DuckDB oracle as
@@ -190,8 +189,7 @@ object Cdc {
     * label is joined in from the shared classification plan.
     * Fixture once per JVM; the query times the chain-merged census. */
   def mergeResultSql(spark: SparkSession, dir: String): DataFrame = {
-    val fixture = sqlFixtures.computeIfAbsent(dir, _ => {
-      val f = graft.util.Scratch.dir("cdc_merge_sql")
+    val fixture = sqlFixtures(dir) { f =>
       val t = s"$f/t"
       graft.sources.Sinks.publishSnapshot(
         baseTable(spark, dir).withColumn("odate", lit(java.sql.Date.valueOf("2024-01-01"))),
@@ -212,7 +210,7 @@ object Cdc {
            |    VALUES (coalesce(c.o_orderkey, 0L), c.new_price, 'F', DATE'2024-01-01')
            |""".stripMargin)
       f
-    })
+    }
     val outcomes = merged(spark, dir).select(col("o_orderkey"), col("outcome"))
     spark.sql(s"SELECT o_orderkey, price, is_deleted FROM graft.`$fixture/t`")
       .withColumn("price", col("price").cast(DoubleType))

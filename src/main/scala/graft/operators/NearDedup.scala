@@ -661,12 +661,11 @@ object NearDedup {
     val docs = Tables.documents(spark, dir)
     val off = plantedOffset(docs, "doc_id")
     val base = docs.filter(col("doc_id") % 10 =!= 7)
-    val fixture = splitBaseFixtures.computeIfAbsent(dir, _ => {
-      val p = graft.util.Scratch.dir("split_base")
+    val fixture = splitBaseFixtures(dir) { p =>
       clusterSplitOf(base).write.parquet(s"$p/assign")
       shingleSets(base).write.parquet(s"$p/index")
       p
-    })
+    }
     def planted(src: DataFrame, shift: Long, suffix: String) = src
       .filter(length(col("text")) >= 200)
       .select((col("doc_id") + lit(shift)).as("doc_id"),
@@ -702,8 +701,7 @@ object NearDedup {
       spark.read.parquet(s"$fixture/assign"), batch)
   }
 
-  private val splitBaseFixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val splitBaseFixtures = new graft.util.Scratch.Fixture[String]("split_base")
 
   /** Winnowing-fingerprint near-dup (MOSS scheme, Schleimer et al.
     * SIGMOD'03 — the same `WinnowFingerprint` expression as

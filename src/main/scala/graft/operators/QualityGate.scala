@@ -155,7 +155,7 @@ object QualityGate {
       refIntegrity("o_custkey", Tables.customer(spark, dir), "c_custkey")))
   }
 
-  private val gatedFixtures = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val gatedFixtures = new graft.util.Scratch.Fixture[String]("gated_q")
 
   /** Registered `q_gated_publish` — gate-then-publish as a verified
     * round trip: the clean orders feed passes its expectations and
@@ -167,8 +167,8 @@ object QualityGate {
     * of the contract at once: the good feed published intact, and
     * the bad feed never became (or perturbed) the live version. */
   def gatedPublishResult(spark: SparkSession, dir: String): DataFrame = {
-    val table = gatedFixtures.computeIfAbsent(dir, _ => {
-      val t = graft.util.Scratch.dir("gated_q") + "/table"
+    val table = gatedFixtures(dir) { tmp =>
+      val t = s"$tmp/table"
       val good = Tables.orders(spark, dir).select(
         col("o_orderkey"),
         col("o_totalprice").cast("decimal(18,2)").as("price"),
@@ -183,7 +183,7 @@ object QualityGate {
         throw new IllegalStateException("red gate published a bad feed")
       } catch { case _: ExpectationsFailed => () }
       t
-    })
+    }
     graft.sources.Sinks.readSnapshot(spark, table)
       .withColumn("__h", Reconcile.xorHash60(col("o_orderkey").cast("string")))
       .groupBy(date_format(col("day"), "yyyy-MM").as("order_month"))

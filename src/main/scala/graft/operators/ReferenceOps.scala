@@ -843,7 +843,7 @@ object ReferenceOps {
 
   def bucketJoinRevenue(spark: SparkSession, dir: String): DataFrame = {
     val tag = bucketTag(dir)
-    val tmp = s"${sys.props("java.io.tmpdir")}/graft_buckets_$tag"
+    val tmp = graft.util.Scratch.dir(s"graft_buckets_$tag")
     Sinks.writeBucketedTable(
       Tables.orders(spark, dir).select(col("o_custkey"), col("o_totalprice")),
       s"graft_b_orders_$tag", s"$tmp/orders", "o_custkey", buckets = 8)

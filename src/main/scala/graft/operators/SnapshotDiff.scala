@@ -113,8 +113,7 @@ object SnapshotDiff {
     * additive (exact in both engines); the double cast happens once
     * at the edge. */
   def incrAggResult(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = graft.util.Scratch.dir("incr_agg_q")
-    val table = publishTimeline(spark, dir, tmp)
+    val table = timelines(dir)(buildTimeline(spark, dir, _))
     val v2 = Sinks.readSnapshotAt(spark, table, version = 2L)
     val v3 = Sinks.readSnapshotAt(spark, table, version = 3L)
     val feed = diffOf(v2, v3, key = "o_orderkey",
@@ -132,8 +131,7 @@ object SnapshotDiff {
     * diff. A feed subscriber that maintains a replica this way holds
     * the same state as a full re-read, at change-feed cost. */
   def cdfApplyResult(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = graft.util.Scratch.dir("cdf_apply_q")
-    val table = publishTimeline(spark, dir, tmp)
+    val table = timelines(dir)(buildTimeline(spark, dir, _))
     val v2 = Sinks.readSnapshotAt(spark, table, version = 2L)
     val v3 = Sinks.readSnapshotAt(spark, table, version = 3L)
     val feed = diffOf(v2, v3, key = "o_orderkey", compareCols = Seq("price", "is_deleted"))
@@ -151,11 +149,7 @@ object SnapshotDiff {
     * nine times over). The timed path is then what each query
     * actually claims: the version reads and the change-feed work,
     * not the shared fixture setup. */
-  private val timelines =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def publishTimeline(spark: SparkSession, dir: String, tmp: String): String =
-    timelines.computeIfAbsent(dir, _ => buildTimeline(spark, dir, tmp))
+  private val timelines = new graft.util.Scratch.Fixture[String]("timeline")
 
   /** Publish the three-version CDC timeline into a scratch table:
     * v1 = base snapshot, v2 = month-1 merge applied, v3 = month-2
@@ -190,8 +184,7 @@ object SnapshotDiff {
     * Pins that retention keeps committed history bit-exact and that
     * the version-pinned read path resolves the right directory. */
   def timeTravelResult(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = graft.util.Scratch.dir("time_travel_q")
-    val table = publishTimeline(spark, dir, tmp)
+    val table = timelines(dir)(buildTimeline(spark, dir, _))
     Sinks.readSnapshotAt(spark, table, version = 2L)
       .select(col("o_orderkey"), col("price").cast(DoubleType).as("price"),
         col("transaction_date"), col("is_deleted"))
@@ -210,18 +203,18 @@ object SnapshotDiff {
     // commit times, and the fixture rule is that mutators get a fresh
     // (here: private, built-once) copy — re-planting the shared
     // timeline on every invocation would race the other four queries
-    // reading it. Times are planted ONCE inside computeIfAbsent (in the
+    // reading it. Times are planted ONCE, in the fixture build (in the
     // PAST, so later real commits sort after them) and the read moment
     // derives from the planted values, not a fresh now().
-    val (table, readTs) = tsTimelines.computeIfAbsent(dir, _ => {
-      val t = buildTimeline(spark, dir, graft.util.Scratch.dir("time_travel_ts_q"))
+    val (table, readTs) = tsTimelines(dir) { tmp =>
+      val t = buildTimeline(spark, dir, tmp)
       val t0 = System.currentTimeMillis()
       // the timeline's default window retains v2 and v3 only (v1
       // pruned) — plant the two retained commit times a minute apart
       Seq(2L, 3L).foreach(v =>
         graft.sources.Sinks.plantCommitTime(spark, t, v, t0 - (4L - v) * 60000L))
       (t, t0 - 90000L) // strictly between the planted m2 and m3 moments
-    })
+    }
     spark.read.format("graft-table")
       .option("timestampAsOf", readTs.toString)
       .load(table)
@@ -230,8 +223,7 @@ object SnapshotDiff {
       .orderBy("o_orderkey")
   }
 
-  private val tsTimelines =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
+  private val tsTimelines = new graft.util.Scratch.Fixture[(String, Long)]("time_travel_ts_q")
 
   /** Registered `q_snapshot_diff`: the change feed v2 → v3, i.e.
     * exactly what month 2 did to the table — re-added keys surface as
@@ -240,8 +232,7 @@ object SnapshotDiff {
     * exists for tables that hard-delete). Hash-checked against a
     * DuckDB full-outer diff of the two chained replay states. */
   def snapshotDiffResult(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = graft.util.Scratch.dir("snapshot_diff_q")
-    val table = publishTimeline(spark, dir, tmp)
+    val table = timelines(dir)(buildTimeline(spark, dir, _))
     diffOf(
         Sinks.readSnapshotAt(spark, table, version = 2L),
         Sinks.readSnapshotAt(spark, table, version = 3L),
@@ -277,8 +268,7 @@ object SnapshotDiff {
       key, compare)
   }
 
-  private val evolvedDiffFixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val evolvedDiffFixtures = new graft.util.Scratch.Fixture[String]("snapshot_diff_evo_q")
 
   /** Registered `q_snapshot_diff_evolved`: the id-resolved change feed
     * across a version gap that contains BOTH a rename and a DV chain —
@@ -290,8 +280,8 @@ object SnapshotDiff {
     * `orders` directly, so one spurious rename-induced row breaks the
     * match. */
   def snapshotDiffEvolvedResult(spark: SparkSession, dir: String): DataFrame = {
-    val table = evolvedDiffFixtures.computeIfAbsent(dir, _ => {
-      val t = graft.util.Scratch.dir("snapshot_diff_evo_q") + "/table"
+    val table = evolvedDiffFixtures(dir) { tmp =>
+      val t = s"$tmp/table"
       val base = Tables.orders(spark, dir)
         .select(col("o_orderkey").as("k"),
           col("o_totalprice").cast("decimal(18,2)").as("price"),
@@ -314,7 +304,7 @@ object SnapshotDiff {
         renamedBumped.unionByName(inserts), "day", t,
         renamedFrom = Map("amount" -> "price"), retainVersions = 10)
       t
-    })
+    }
     diffVersionsAs(spark, table, fromVersion = 1L,
       toVersion = Sinks.currentVersion(spark, table).get, key = "k")
       .select(col("k"), col("change_type"),

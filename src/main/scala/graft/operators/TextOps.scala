@@ -1279,15 +1279,14 @@ object TextOps {
     * `t_bpe`'s own claimed (and timed) work; the encode query times
     * encoding, exactly as a production pipeline loads a shipped merge
     * table rather than retraining per batch. */
-  private val bpeMerges =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, String)]]()
+  private val bpeMerges = new graft.util.Scratch.Fixture[Seq[(String, String)]]("bpe_merges")
 
   /** Registered binding: train on the corpus (once per JVM), then
     * encode the corpus with its own merge table (the round-trip a
     * tokenizer pipeline runs end-to-end). */
   def bpeApply(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val merges = bpeMerges.computeIfAbsent(dir, _ =>
+    val merges = bpeMerges(dir)(_ =>
       bpeTrainOf(docs).collect().map(r => (r.getString(1), r.getString(2))).toSeq)
     bpeApplyOf(docs, merges)
   }

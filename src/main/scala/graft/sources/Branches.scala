@@ -607,8 +607,7 @@ object Branches {
         expr("bit_xor(h)").as("row_xor"))
       .select(lit(phase).as("phase"), col("bucket"), col("n_rows"),
         col("sum_price"), col("row_xor"))
-    val fixture = branchFixtures.computeIfAbsent(dir, _ => {
-      val f = graft.util.Scratch.dir("branch_fx")
+    val fixture = branchFixtures(dir) { f =>
       val tbl = s"$f/tbl"
       val base = Tables.orders(spark, dir).select(
         col("o_orderkey").cast("long").as("o_orderkey"),
@@ -673,15 +672,14 @@ object Branches {
       census(Sinks.readSnapshot(spark, tbl), "rebased")
         .coalesce(1).write.parquet(s"$f/rebased")
       f
-    })
+    }
     spark.read.parquet(s"$fixture/merged")
       .unionByName(spark.read.parquet(s"$fixture/ff"))
       .unionByName(spark.read.parquet(s"$fixture/rebased"))
       .orderBy("phase", "bucket")
   }
 
-  private val branchFixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val branchFixtures = new graft.util.Scratch.Fixture[String]("branch_fx")
 
   /** Registered `q_branch_mor` (hash-oracled): the O(changes) staging
     * workflow end-to-end against one closed-form `orders` oracle —
@@ -705,8 +703,7 @@ object Branches {
         expr("bit_xor(h)").as("row_xor"))
       .select(lit(phase).as("phase"), col("bucket"), col("n_rows"),
         col("sum_price"), col("row_xor"))
-    val fixture = morFixtures.computeIfAbsent(dir, _ => {
-      val f = graft.util.Scratch.dir("branch_mor_fx")
+    val fixture = morFixtures(dir) { f =>
       val tbl = s"$f/tbl"
       val base = Tables.orders(spark, dir).select(
         col("o_orderkey").cast("long").as("o_orderkey"),
@@ -736,12 +733,11 @@ object Branches {
         .unionByName(census(DeletionVectors.readMerged(spark, tbl), "live"))
         .coalesce(1).write.parquet(s"$f/census")
       f
-    })
+    }
     spark.read.parquet(s"$fixture/census").orderBy("phase", "bucket")
   }
 
-  private val morFixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val morFixtures = new graft.util.Scratch.Fixture[String]("branch_mor_fx")
 
   /** Delete the branch ref and garbage-collect its UNMERGED version
     * dirs: versions the branch marked that no `_manifests` marker ever

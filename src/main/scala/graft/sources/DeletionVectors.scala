@@ -404,7 +404,7 @@ object DeletionVectors {
   // fixture built once per JVM (the timeline idiom): the timed path
   // is the chain-resolved merged READ — the novel plan — not the
   // shared publish setup
-  private val fixtures = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val fixtures = new graft.util.Scratch.Fixture[String]("dv_q")
 
   private def buildFixture(spark: SparkSession, dir: String, tmp: String): String = {
     val table = s"$tmp/table"
@@ -427,8 +427,7 @@ object DeletionVectors {
     * merged — the broadcast-anti-join merge-on-read path, hash-checked
     * against the plain filtered table. */
   def dvMergedResult(spark: SparkSession, dir: String): DataFrame = {
-    val table = fixtures.computeIfAbsent(dir,
-      _ => buildFixture(spark, dir, graft.util.Scratch.dir("dv_q")))
+    val table = fixtures(dir)(buildFixture(spark, dir, _))
     // project away the txn_month partition dir column the store adds
     readMerged(spark, table)
       .select("o_orderkey", "o_custkey", "price", "transaction_date")
@@ -441,7 +440,7 @@ object DeletionVectors {
       |FROM orders WHERE o_orderkey % 7 <> 0 AND o_custkey % 5 <> 0
       |ORDER BY o_orderkey""".stripMargin
 
-  private val rtbfFixtures = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val rtbfFixtures = new graft.util.Scratch.Fixture[String]("rtbf_q")
 
   /** Registered `q_rtbf_purge` — the RIGHT-TO-BE-FORGOTTEN
     * composition as a query surface (DeletionVectorsSpec's
@@ -456,8 +455,8 @@ object DeletionVectors {
     * removed EXACTLY the subjects' rows and left every other row
     * byte-identical. */
   def rtbfPurgeResult(spark: SparkSession, dir: String): DataFrame = {
-    val table = rtbfFixtures.computeIfAbsent(dir, _ => {
-      val t = graft.util.Scratch.dir("rtbf_q") + "/table"
+    val table = rtbfFixtures(dir) { tmp =>
+      val t = s"$tmp/table"
       val ev = Tables.events(spark, dir)
         .select(col("event_id"), col("user_id"), col("event_type"),
           to_date(col("ts")).as("day"))
@@ -466,7 +465,7 @@ object DeletionVectors {
         .filter(col("user_id") % 97 === 0).select("event_id")
       publishDeletes(spark, t, subjects, "event_id")
       t
-    })
+    }
     readMerged(spark, table)
       .withColumn("__h",
         graft.operators.Reconcile.xorHash60(col("event_id").cast("string")))
@@ -482,7 +481,7 @@ object DeletionVectors {
       |FROM events WHERE user_id % 97 <> 0
       |GROUP BY 1 ORDER BY 1""".stripMargin
 
-  private val morFixtures = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val morFixtures = new graft.util.Scratch.Fixture[String]("mor_q")
 
   /** Two chained MoR upserts: commit A bumps every 9th key by 10,
     * inserts an offset twin of every 17th key at half price, and
@@ -513,8 +512,7 @@ object DeletionVectors {
     * — base never rewritten, later links superseding earlier images —
     * hash-checked against the directly-computed final state. */
   def morUpsertResult(spark: SparkSession, dir: String): DataFrame = {
-    val table = morFixtures.computeIfAbsent(dir,
-      _ => buildMorFixture(spark, dir, graft.util.Scratch.dir("mor_q")))
+    val table = morFixtures(dir)(buildMorFixture(spark, dir, _))
     readMerged(spark, table)
       .select("o_orderkey", "o_custkey", "price", "transaction_date")
       .orderBy("o_orderkey")

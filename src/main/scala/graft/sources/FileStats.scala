@@ -550,7 +550,7 @@ object FileStats {
     * driver's hash check against a plain filter oracle: skipping must
     * never change results. The PRUNING property (files actually
     * dropped from the scan) is spec-measured in ScaleSpec. */
-  private val aggFixtures = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val aggFixtures = new graft.util.Scratch.Fixture[String]("metaagg_q")
 
   /** Registered driver query (`q_meta_agg`): publish orders as a
     * snapshot version carrying per-file stats (incl. a deliberately
@@ -563,19 +563,7 @@ object FileStats {
     * change results. Fixture once per JVM; the query times the
     * metadata-only reads. */
   def metaAggregate(spark: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{expr, to_date}
-    val tmp = aggFixtures.computeIfAbsent(dir, _ => {
-      val t = graft.util.Scratch.dir("metaagg_q")
-      val df = Tables.orders(spark, dir)
-        .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
-          col("o_totalprice"), to_date(col("o_orderdate")).as("o_orderdate"),
-          expr("CASE WHEN o_orderkey % 7 = 0 THEN NULL ELSE o_orderpriority END")
-            .as("o_prio_n"))
-      Sinks.publishSnapshot(df, "o_orderdate", t,
-        statsCols = Seq("o_orderkey", "o_custkey", "o_orderstatus",
-          "o_totalprice", "o_orderdate", "o_prio_n"))
-      t
-    })
+    val tmp = aggTable(spark, dir)
     spark.sql(
       s"""SELECT count(*) AS n_rows,
          |       count(o_prio_n) AS n_prio,
@@ -587,6 +575,20 @@ object FileStats {
          |FROM graft.`$tmp`""".stripMargin)
   }
 
+  private def aggTable(spark: SparkSession, dir: String): String =
+    aggFixtures(dir) { t =>
+      import org.apache.spark.sql.functions.{expr, to_date}
+      val df = Tables.orders(spark, dir)
+        .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
+          col("o_totalprice"), to_date(col("o_orderdate")).as("o_orderdate"),
+          expr("CASE WHEN o_orderkey % 7 = 0 THEN NULL ELSE o_orderpriority END")
+            .as("o_prio_n"))
+      Sinks.publishSnapshot(df, "o_orderdate", t,
+        statsCols = Seq("o_orderkey", "o_custkey", "o_orderstatus",
+          "o_totalprice", "o_orderdate", "o_prio_n"))
+      t
+    }
+
   /** Registered driver query (`q_meta_agg_month`): the PARTITION-GRAIN
     * metadata aggregate — `GROUP BY txn_month` over the same published
     * store, read path-mode (the partition column is visible there),
@@ -596,8 +598,7 @@ object FileStats {
     * Hash-checked against DuckDB's plain month-grouped aggregate over
     * the source parquet. Shares [[metaAggregate]]'s fixture. */
   def metaAggregateMonthly(spark: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    metaAggregate(spark, dir) // ensure the fixture exists
-    val tmp = aggFixtures.get(dir)
+    val tmp = aggTable(spark, dir)
     spark.read.format("graft-table").load(tmp).createOrReplaceTempView("meta_agg_m")
     spark.sql(
       """SELECT txn_month, count(*) AS n_rows, count(o_prio_n) AS n_prio,
@@ -620,20 +621,19 @@ object FileStats {
     * nothing scales with data. */
   def partitionsCensus(spark: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.to_date
-    val tmp = partFixtures.computeIfAbsent(dir, _ => {
-      val t = graft.util.Scratch.dir("partcensus_q")
+    val tmp = partFixtures(dir) { t =>
       val df = Tables.orders(spark, dir)
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"),
           to_date(col("o_orderdate")).as("o_orderdate"))
       Sinks.publishSnapshot(df, "o_orderdate", t,
         colocateMonths = true, statsCols = Seq("o_orderkey"))
       t
-    })
+    }
     spark.sql(s"CALL graft.system.partitions(table => '$tmp')")
       .select("txn_month", "file_count", "row_count")
       .orderBy("txn_month")
   }
-  private val partFixtures = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val partFixtures = new graft.util.Scratch.Fixture[String]("partcensus_q")
 
   def statsSkipScan(spark: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.{to_date, lit => flit}

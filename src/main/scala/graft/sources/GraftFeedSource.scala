@@ -257,10 +257,8 @@ class GraftFeedSource(spark: SparkSession, params: Map[String, String])
 }
 
 object GraftFeedSource {
-  private val fixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val evolvedFixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val fixtures = new graft.util.Scratch.Fixture[String]("table_feed")
+  private val evolvedFixtures = new graft.util.Scratch.Fixture[String]("table_feed_evo")
 
   /** Registered `q_table_feed` (hash-oracled): tail a three-commit
     * history — class-0 baseline publish, one MoR upsert link (class-20
@@ -272,8 +270,8 @@ object GraftFeedSource {
     * however the trigger slices the range the hash is one truth. The
     * store builds once per JVM; the DRAIN is the timed surface. */
   def tableFeedResult(spark: SparkSession, dir: String): DataFrame = {
-    val t = fixtures.computeIfAbsent(dir, _ => {
-      val f = graft.util.Scratch.dir("table_feed") + "/t"
+    val t = fixtures(dir) { tmp =>
+      val f = s"$tmp/t"
       val base = Tables.orders(spark, dir).select(
         col("o_orderkey").cast("long").as("o_orderkey"),
         col("o_orderdate").cast("date").as("odate"),
@@ -289,7 +287,7 @@ object GraftFeedSource {
       DeletionVectors.publishDeletes(spark, f,
         base.filter(col("o_orderkey") % 30 === 0).select("o_orderkey"), "o_orderkey")
       f
-    })
+    }
     val out = graft.util.Scratch.dir("table_feed_out")
     spark.readStream.format("graft-table").option("startingVersion", "1").load(t)
       .writeStream.option("checkpointLocation", s"$out/ckpt")
@@ -311,8 +309,7 @@ object GraftFeedSource {
       .orderBy("commit_version", "change_type")
   }
 
-  private val batchFixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val batchFixtures = new graft.util.Scratch.Fixture[String]("table_changes")
 
   /** Registered `q_table_changes` (hash-oracled): the BATCH change-feed
     * read — Delta CDF's `spark.read.option("readChangeFeed", "true")`
@@ -329,8 +326,8 @@ object GraftFeedSource {
     * version. Fixture once per JVM; the query times the two range
     * reads. */
   def tableChangesResult(spark: SparkSession, dir: String): DataFrame = {
-    val t = batchFixtures.computeIfAbsent(dir, _ => {
-      val f = graft.util.Scratch.dir("table_changes") + "/t"
+    val t = batchFixtures(dir) { tmp =>
+      val f = s"$tmp/t"
       val base = Tables.orders(spark, dir).select(
         col("o_orderkey").cast("long").as("o_orderkey"),
         col("o_orderdate").cast("date").as("odate"),
@@ -346,7 +343,7 @@ object GraftFeedSource {
       DeletionVectors.publishDeletes(spark, f,
         base.filter(col("o_orderkey") % 30 === 0).select("o_orderkey"), "o_orderkey")
       f
-    })
+    }
     def census(phase: String, df: DataFrame): DataFrame =
       df.withColumn("h",
           graft.operators.Reconcile.xorHash60(col("o_orderkey").cast("string")))
@@ -381,8 +378,8 @@ object GraftFeedSource {
     * DuckDB oracle over `orders`; batching-independent like
     * `q_table_feed`. */
   def tableFeedEvolvedResult(spark: SparkSession, dir: String): DataFrame = {
-    val t = evolvedFixtures.computeIfAbsent(dir, _ => {
-      val f = graft.util.Scratch.dir("table_feed_evo") + "/t"
+    val t = evolvedFixtures(dir) { tmp =>
+      val f = s"$tmp/t"
       val base = Tables.orders(spark, dir).select(
         col("o_orderkey").cast("long").as("o_orderkey"),
         col("o_orderdate").cast("date").as("odate"),
@@ -405,7 +402,7 @@ object GraftFeedSource {
       SchemaEvolution.publishEvolved(merged, "odate", f,
         renamedFrom = Map("amount" -> "price"), retainVersions = 100)
       f
-    })
+    }
     val out = graft.util.Scratch.dir("table_feed_evo_out")
     // two drains of the same evolved history: plain change shapes, and
     // PREIMAGES mode (Delta-CDF shapes — update_preimage/postimage,

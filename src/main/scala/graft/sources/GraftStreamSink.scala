@@ -91,8 +91,7 @@ class GraftStreamSink(spark: SparkSession, params: Map[String, String],
 }
 
 object GraftStreamSink {
-  private val fixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val fixtures = new graft.util.Scratch.Fixture[String]("sink_in")
 
   /** Registered `q_stream_sink` (hash-oracled): continuous ingestion
     * through the native streaming sink — a three-file parquet drop of
@@ -104,8 +103,8 @@ object GraftStreamSink {
     * input fixture builds once per JVM; the STREAM is what each
     * invocation times. */
   def streamSinkResult(spark: SparkSession, dir: String): DataFrame = {
-    val in = fixtures.computeIfAbsent(dir, _ => {
-      val f = graft.util.Scratch.dir("sink_in") + "/files"
+    val in = fixtures(dir) { tmp =>
+      val f = s"$tmp/files"
       Tables.orders(spark, dir)
         .filter(col("o_orderkey") % 10 === 0)
         .select(col("o_orderkey").cast("long").as("o_orderkey"),
@@ -113,7 +112,7 @@ object GraftStreamSink {
           col("o_totalprice").cast("decimal(18,2)").as("price"))
         .repartition(3).write.parquet(f)
       f
-    })
+    }
     val scratch = graft.util.Scratch.dir("sink_q")
     val tbl = s"$scratch/t"
     val schema = spark.read.parquet(in).schema

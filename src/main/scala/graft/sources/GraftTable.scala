@@ -534,8 +534,7 @@ object GraftTable {
 
   // ——— registered surface ————————————————————————————————————————————
 
-  private val writeFixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val writeFixtures = new graft.util.Scratch.Fixture[String]("dsv2_write")
 
   /** Registered `q_dsv2_write` (hash-oracled): the WRITE lifecycle of
     * the connector + catalog, end to end against one closed-form
@@ -557,8 +556,7 @@ object GraftTable {
         .agg(org.apache.spark.sql.functions.count(lit(1)).as("n_rows"),
           expr("bit_xor(h)").as("key_xor"))
         .select(lit(phase).as("phase"), col("n_rows"), col("key_xor"))
-    val fixture = writeFixtures.computeIfAbsent(dir, _ => {
-      val f = graft.util.Scratch.dir("dsv2_write")
+    val fixture = writeFixtures(dir) { f =>
       val t = s"$f/t"
       val orders = Tables.orders(spark, dir)
         .select(col("o_orderkey").cast("long").as("o_orderkey"),
@@ -585,15 +583,14 @@ object GraftTable {
       census("overwritten", spark.read.format("graft-table").load(t))
         .coalesce(1).write.parquet(s"$f/c3")
       f
-    })
+    }
     spark.read.parquet(s"$fixture/c1")
       .unionByName(spark.read.parquet(s"$fixture/c2"))
       .unionByName(spark.read.parquet(s"$fixture/c3"))
       .orderBy("phase")
   }
 
-  private val ctasFixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val ctasFixtures = new graft.util.Scratch.Fixture[String]("ctas")
 
   /** Registered `q_ctas` (hash-oracled): the ATOMIC CTAS/RTAS DDL
     * surface ([[GraftCatalog]]'s StagingTableCatalog) — `CREATE TABLE
@@ -613,8 +610,7 @@ object GraftTable {
         .agg(count(lit(1)).as("n_rows"), expr("bit_xor(h)").as("key_xor"),
           sum(col("price")).cast("double").as("sum_price"))
         .select(lit(phase).as("phase"), col("n_rows"), col("key_xor"), col("sum_price"))
-    val fixture = ctasFixtures.computeIfAbsent(dir, _ => {
-      val f = graft.util.Scratch.dir("ctas")
+    val fixture = ctasFixtures(dir) { f =>
       val t = s"$f/t"
       Tables.orders(spark, dir)
         .select(col("o_orderkey").cast("long").as("o_orderkey"),
@@ -636,15 +632,14 @@ object GraftTable {
       census("history", spark.sql(s"SELECT * FROM graft.`$t` VERSION AS OF 1"))
         .coalesce(1).write.parquet(s"$f/c3")
       f
-    })
+    }
     spark.read.parquet(s"$fixture/c1")
       .unionByName(spark.read.parquet(s"$fixture/c2"))
       .unionByName(spark.read.parquet(s"$fixture/c3"))
       .orderBy("phase")
   }
 
-  private val replaceFixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val replaceFixtures = new graft.util.Scratch.Fixture[String]("replace_where")
 
   /** Registered `q_replace_where` (hash-oracled): the SCOPED overwrite
     * — Delta's `replaceWhere` — as the lakehouse spelling of the
@@ -670,8 +665,7 @@ object GraftTable {
         .agg(count(lit(1)).as("n_rows"), expr("bit_xor(h)").as("key_xor"),
           sum(col("price")).cast("double").as("sum_price"))
         .select(lit(phase).as("phase"), col("n_rows"), col("key_xor"), col("sum_price"))
-    val fixture = replaceFixtures.computeIfAbsent(dir, _ => {
-      val f = graft.util.Scratch.dir("replace_where")
+    val fixture = replaceFixtures(dir) { f =>
       val t = s"$f/t"
       val orders = Tables.orders(spark, dir)
         .select(col("o_orderkey").cast("long").as("o_orderkey"),
@@ -700,15 +694,14 @@ object GraftTable {
       census("sql_replaced", spark.sql(s"SELECT * FROM graft.`$t`"))
         .coalesce(1).write.parquet(s"$f/c3")
       f
-    })
+    }
     spark.read.parquet(s"$fixture/c1")
       .unionByName(spark.read.parquet(s"$fixture/c2"))
       .unionByName(spark.read.parquet(s"$fixture/c3"))
       .orderBy("phase")
   }
 
-  private val mergeFixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val mergeFixtures = new graft.util.Scratch.Fixture[String]("merge_sql")
 
   /** Registered `q_merge_sql` (hash-oracled): the reference's CDC
     * merge decision matrix as PLAIN SQL against the lakehouse —
@@ -727,8 +720,7 @@ object GraftTable {
     * the query times the chain-merged census. */
   def mergeSqlResult(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val fixture = mergeFixtures.computeIfAbsent(dir, _ => {
-      val f = graft.util.Scratch.dir("merge_sql")
+    val fixture = mergeFixtures(dir) { f =>
       val t = s"$f/t"
       val base = Tables.orders(spark, dir).select(
         col("o_orderkey").cast("long").as("o_orderkey"),
@@ -764,7 +756,7 @@ object GraftTable {
         "CAST(price + CAST('5.00' AS DECIMAL(3,2)) AS DECIMAL(18,2)) " +
         "WHERE o_orderkey % 10 = 1")
       f
-    })
+    }
     spark.sql(s"SELECT * FROM graft.`$fixture/t`")
       .select((col("o_orderkey") % 10).cast("long").as("bucket"), col("price"),
         graft.operators.Reconcile.xorHash60(

@@ -154,8 +154,8 @@ object GraftTableDataSource {
     val orders = Tables.orders(spark, dir)
       .select("o_orderkey", "o_orderdate", "o_totalprice")
     val evens = orders.filter(col("o_orderkey") % 2 === 0)
-    val table = fixtures.computeIfAbsent(dir, _ => {
-      val t = graft.util.Scratch.dir("tbl_dsv2") + "/t"
+    val table = fixtures(dir) { tmp =>
+      val t = s"$tmp/t"
       Sinks.publishSnapshot(evens, "o_orderdate", t)
       Sinks.publishSnapshot(evens.filter(col("o_orderkey") % 4 === 0),
         "o_orderdate", t)
@@ -164,7 +164,7 @@ object GraftTableDataSource {
         "o_orderdate", t, "staged")
       Tags.createTag(spark, t, "milestone", Some(1L))
       t
-    })
+    }
     def census(phase: String, df: DataFrame): DataFrame =
       df.select(graft.operators.Reconcile.xorHash60(
           col("o_orderkey").cast("string")).as("h"))
@@ -180,6 +180,5 @@ object GraftTableDataSource {
       .orderBy("phase")
   }
 
-  private val fixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val fixtures = new graft.util.Scratch.Fixture[String]("tbl_dsv2")
 }

@@ -391,9 +391,9 @@ object SchemaEvolution {
   }
 
   /** One evolved two-version table per source dir per JVM (same memo
-    * rationale as SnapshotDiff.publishTimeline: the fixture build is
+    * rationale as SnapshotDiff's timeline: the fixture build is
     * shared, the timed path is the evolved reads). */
-  private val evolved = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val evolved = new graft.util.Scratch.Fixture[String]("schema_evolution_q")
 
   /** v1: (o_orderkey, price, transaction_date). v2: price RENAMED to
     * amount (id preserved via `renamedFrom`), values bumped +5.25, and
@@ -424,15 +424,14 @@ object SchemaEvolution {
     * states, so the id mapping provably round-trips values, names and
     * null semantics. */
   def evolutionResult(spark: SparkSession, dir: String): DataFrame = {
-    val table = evolved.computeIfAbsent(dir,
-      _ => buildEvolved(spark, dir, graft.util.Scratch.dir("schema_evolution_q")))
+    val table = evolved(dir)(buildEvolved(spark, dir, _))
     def asOfLive(v: Long) = readSnapshotAs(spark, table, v)
       .select(lit(v).as("src_version"), col("o_orderkey"),
         col("amount").cast("double").as("amount"), col("category"))
     asOfLive(1L).unionByName(asOfLive(2L)).orderBy("src_version", "o_orderkey")
   }
 
-  private val evolvedSql = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val evolvedSql = new graft.util.Scratch.Fixture[String]("schema_evolution_sql_q")
 
   /** The SAME evolution driven through STANDARD SQL DDL instead of
     * the library calls: v1 publishes (o_orderkey, price,
@@ -477,8 +476,7 @@ object SchemaEvolution {
     * statement sequence provably lands the same id mapping the library
     * path produces. */
   def evolutionSqlResult(spark: SparkSession, dir: String): DataFrame = {
-    val table = evolvedSql.computeIfAbsent(dir,
-      _ => buildEvolvedSqlTable(spark, dir, graft.util.Scratch.dir("schema_evolution_sql_q")))
+    val table = evolvedSql(dir)(buildEvolvedSqlTable(spark, dir, _))
     val v1 = readSnapshotAs(spark, table, Tags.tagVersion(spark, table, "v1"))
       .select(lit("v1_as_live").as("phase"), col("o_orderkey"),
         col("amount").cast("double").as("amount"), col("category"))

@@ -1075,8 +1075,8 @@ object Sinks {
     * closed-form constant. */
   def vacuumResult(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val tbl = vacuumFixtures.computeIfAbsent(dir, _ => {
-      val t = graft.util.Scratch.dir("vacuum_fx") + "/t"
+    val (tbl, ledger) = vacuumFixtures(dir) { tmp =>
+      val t = s"$tmp/t"
       val base = Tables.orders(spark, dir)
         .select(col("o_orderkey"), col("o_orderdate"), col("o_totalprice"))
       publishSnapshot(base, "o_orderdate", t, retainVersions = 4)
@@ -1088,10 +1088,8 @@ object Sinks {
       plantAbandonedVersion(base.limit(100), "o_orderdate", t)
       plantAbandonedVersion(base.limit(100), "o_orderdate", t)
       plantOrphanClaim(spark, t)
-      t
-    })
-    val ledger = vacuumLedgers.computeIfAbsent(tbl, _ =>
-      vacuum(spark, tbl, olderThanMs = -1000L))
+      (t, vacuum(spark, t, olderThanMs = -1000L))
+    }
     val survivors =
       listVersions(spark, tbl).map(v => ("survivor_committed", v)) ++
       Branches.branchHead(spark, tbl, "side").map(v => ("survivor_branch", v))
@@ -1099,10 +1097,7 @@ object Sinks {
       .toDF("entry", "version").orderBy("entry", "version")
   }
 
-  private val vacuumFixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val vacuumLedgers =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Long, String)]]()
+  private val vacuumFixtures = new graft.util.Scratch.Fixture[(String, Seq[(Long, String)])]("vacuum_fx")
 
   /** Small-file compaction for the versioned snapshot store — the
     * maintenance pass every append-heavy table needs at scale: many
@@ -1495,8 +1490,7 @@ object Sinks {
         .agg(count(lit(1)).as("n_rows"), expr("bit_xor(h)").as("key_xor"))
         .select(lit(phase).as("phase"), lit(table).as("table_name"),
           col("n_rows"), col("key_xor"))
-    val fixture = groupFixtures.computeIfAbsent(dir, _ => {
-      val f = graft.util.Scratch.dir("group_fx")
+    val fixture = groupFixtures(dir) { f =>
       val grp = s"$f/grp"
       publishGroup(Seq((s"$grp/ta", a1, "o_orderdate"),
         (s"$grp/tb", b1, "o_orderdate")), grp)
@@ -1507,26 +1501,24 @@ object Sinks {
         (s"$grp/ta", a1.filter(col("o_orderkey") % 4 === 0), "o_orderdate"),
         (s"$grp/tb", b1.filter(col("o_orderkey") % 4 === 1), "o_orderdate")), grp)
       f
-    })
+    }
     spark.read.parquet(s"$fixture/torn")
       .unionByName(census(s"$fixture/grp", "committed", "a"))
       .unionByName(census(s"$fixture/grp", "committed", "b"))
       .orderBy("phase", "table_name")
   }
 
-  private val groupFixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val lifecycleFixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val groupFixtures = new graft.util.Scratch.Fixture[String]("group_fx")
+  private val lifecycleFixtures = new graft.util.Scratch.Fixture[String]("restore_fixture")
 
   /** Shared restore/history fixture: v1 class-0 data publish, v2 MoR
     * upsert link (class-20 bumps + class-7 inserts), v3 DV delete link
     * (class-30), v4 = RESTORE to version 1 — the rollback of both
     * links as a new auditable commit. Built once per JVM. */
   private def lifecycleFixture(spark: org.apache.spark.sql.SparkSession, dir: String): String =
-    lifecycleFixtures.computeIfAbsent(dir, _ => {
+    lifecycleFixtures(dir) { tmp =>
       import org.apache.spark.sql.functions._
-      val f = graft.util.Scratch.dir("restore_fixture") + "/t"
+      val f = s"$tmp/t"
       val base = Tables.orders(spark, dir).select(
         col("o_orderkey").cast("long").as("o_orderkey"),
         col("o_orderdate").cast("date").as("odate"),
@@ -1543,7 +1535,7 @@ object Sinks {
         base.filter(col("o_orderkey") % 30 === 0).select("o_orderkey"), "o_orderkey")
       restoreSnapshot(spark, f, 1L, "odate", retainVersions = 100)
       f
-    })
+    }
 
   /** Registered `q_clone` (hash-oracled): `CALL graft.system.clone` of
     * the lifecycle fixture's CHAIN-HEAD version (v3 = base + upsert
@@ -1684,16 +1676,15 @@ object JsonlDocs {
 
   // — registered round-trip ——————————————————————————————————————————
 
-  private val fixtures = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val fixtures = new graft.util.Scratch.Fixture[String]("jsonl")
 
   /** One JSONL export per data dir per JVM: the corpus written
     * through the REAL export writer (split-partitioned, shard-
     * distributed, gzipped) plus one planted corrupt line that the
     * PERMISSIVE read must quarantine. */
   private def jsonlFixture(spark: SparkSession, dir: String): String =
-    fixtures.computeIfAbsent(dir, _ => {
+    fixtures(dir) { out =>
       import org.apache.spark.sql.functions._
-      val out = graft.util.Scratch.dir("jsonl")
       val docs = Tables.documents(spark, dir)
         .select(col("doc_id"), col("text"), col("lang"), col("source"),
           when(col("doc_id") % 10 === 0, "val").otherwise("train").as("split"),
@@ -1702,7 +1693,7 @@ object JsonlDocs {
       val bad = new java.io.FileOutputStream(s"$out/split=train/zz_corrupt.json")
       bad.write("{\"doc_id\": this is not json\n".getBytes("UTF-8")); bad.close()
       out
-    })
+    }
 
   /** Registered `q_jsonl_roundtrip`: corpus → gzipped partitioned
     * JSONL → schema-first PERMISSIVE read → per-(lang, source)

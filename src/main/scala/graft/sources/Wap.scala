@@ -230,8 +230,8 @@ object Wap {
     * key|status XOR) — every cell modular arithmetic over `orders`. */
   def wapResult(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val fixture = fixtures.computeIfAbsent(dir, _ => {
-      val t = graft.util.Scratch.dir("wap_fx") + "/t"
+    val fixture = fixtures(dir) { tmp =>
+      val t = s"$tmp/t"
       val base = Tables.orders(spark, dir).select(
         col("o_orderkey").cast("long").as("o_orderkey"),
         col("o_orderdate").cast("date").as("odate"),
@@ -269,15 +269,13 @@ object Wap {
         .withColumn("detail", lit(0L))
         .unionByName(isolated)
         .unionByName(census("final"))
-      val f = graft.util.Scratch.dir("wap_fx_out")
-      ledger.coalesce(1).write.parquet(s"$f/ledger")
-      f
-    })
+      ledger.coalesce(1).write.parquet(s"$tmp/ledger")
+      tmp
+    }
     spark.read.parquet(s"$fixture/ledger").orderBy("entry")
   }
 
-  private val fixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val fixtures = new graft.util.Scratch.Fixture[String]("wap_fx")
 
   /** Registered `q_wap_stream` (hash-oracled): the CONTINUOUS cycle,
     * drained AvailableNow over two planted single-file drops — class-2
@@ -297,8 +295,7 @@ object Wap {
       col("o_orderdate").cast("date").as("odate"),
       col("o_orderstatus").cast("string").as("status"),
       col("o_totalprice").cast("decimal(18,2)").as("price"))
-    val in = streamFixtures.computeIfAbsent(dir, _ => {
-      val d = graft.util.Scratch.dir("wap_stream_in")
+    val in = streamFixtures(dir) { d =>
       base.filter(col("o_orderkey") % 10 === 2)
         .withColumn("status", lit("A"))
         .coalesce(1).write.parquet(s"$d/dropA")
@@ -314,9 +311,8 @@ object Wap {
             new org.apache.hadoop.fs.Path(s"$d/$sub.parquet")))
       }
       d
-    })
+    }
     val scratch = graft.util.Scratch.dir("wap_stream_q")
-    val tbl = s"$scratch/t"
     // colocated months: one file per month instead of tasks × months —
     // the final census and any merged fallback pay file-count (the
     // q_stream_cdc lesson). The base STORE builds once per JVM (the
@@ -324,17 +320,13 @@ object Wap {
     // tree: the stream mutates its table, so runs need fresh state,
     // but re-running the month-shuffle publish per run priced a whole
     // Spark job into a drain whose operator under test is the stream
-    val baseStore = baseStoreFixtures.computeIfAbsent(dir, _ => {
-      val b = graft.util.Scratch.dir("wap_stream_base") + "/t"
+    val baseStore = baseStoreFixtures(dir) { tmp =>
+      val b = s"$tmp/t"
       Sinks.publishSnapshot(base.filter(col("o_orderkey") % 10 === 0), "odate", b,
         retainVersions = 1000, colocateMonths = true)
       b
-    })
-    val conf = spark.sparkContext.hadoopConfiguration
-    val srcP = new org.apache.hadoop.fs.Path(baseStore)
-    val dstP = new org.apache.hadoop.fs.Path(tbl)
-    org.apache.hadoop.fs.FileUtil.copy(
-      srcP.getFileSystem(conf), srcP, dstP.getFileSystem(conf), dstP, false, conf)
+    }
+    val tbl = graft.util.Scratch.copy(spark, baseStore, scratch)
     val checks = Seq(QualityGate.notNull("status"), QualityGate.unique("o_orderkey"))
     runWapIngest(
       spark.readStream.schema(base.schema).option("maxFilesPerTrigger", "1")
@@ -357,8 +349,6 @@ object Wap {
     reports.unionByName(qrows).unionByName(fin).orderBy("entry")
   }
 
-  private val streamFixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val baseStoreFixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val streamFixtures = new graft.util.Scratch.Fixture[String]("wap_stream_in")
+  private val baseStoreFixtures = new graft.util.Scratch.Fixture[String]("wap_stream_base")
 }

@@ -154,14 +154,13 @@ object ZipSource {
 
   // — registered bindings ————————————————————————————————————————————
 
-  /** One fixture per data dir per JVM (Media.cachedFixture idiom):
+  /** One fixture per data dir per JVM:
     * monthly zips built from `orders` plus one planted corrupt
     * archive, so every read exercises the quarantine branch. */
-  private val fixtures = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val fixtures = new graft.util.Scratch.Fixture[String]("zips")
 
   private[graft] def monthlyZipFixture(spark: SparkSession, dir: String): String =
-    fixtures.computeIfAbsent(dir, _ => {
-      val out = graft.util.Scratch.dir("zips")
+    fixtures(dir) { out =>
       val lines = Tables.orders(spark, dir).select(
         date_format(col("o_orderdate"), "yyyy-MM").as("order_month"),
         concat_ws(",", col("o_orderkey").cast("string"),
@@ -199,7 +198,7 @@ object ZipSource {
       oe.setCrc(crc.getValue)
       oz.putNextEntry(oe); oz.write(big); oz.closeEntry(); oz.close()
       out
-    })
+    }
 
   /** The shared round-trip verification aggregate: select the target
     * monthly entries by name (past the decoy, the reference's

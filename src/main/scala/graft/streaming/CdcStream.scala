@@ -167,18 +167,16 @@ object CdcStream {
   // The DRAIN (+ the final manifest-resolved read) is the timed
   // surface — re-publishing the base per run priced two fixture Spark
   // jobs into a query whose operator under test is the stream.
-  private val fixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val fixtures = new graft.util.Scratch.Fixture[String]("cdc_stream_fx")
 
   /** Fixture root: `table` (published template), `changes4` (one-batch
     * multi-file drop), `changes2` (two month files, mod times pinned a
     * minute apart so the file source's mtime ordering is
     * deterministic). */
   private def fixtureRoot(spark: SparkSession, dir: String): String =
-    fixtures.computeIfAbsent(dir, _ => {
+    fixtures(dir) { fx =>
       import graft.operators.Cdc
       import graft.sources.Tables
-      val fx = graft.util.Scratch.dir("cdc_stream_fx")
       // the date dimension feeds the publish AND the change-file
       // builds — cache it across those fixture jobs, release after
       val dates = Tables.orders(spark, dir)
@@ -206,18 +204,7 @@ object CdcStream {
       drop(asChanges(Cdc.changeSet2(spark, dir)), "month2", t0 + 60000L)
       dates.unpersist()
       fx
-    })
-
-  /** Fresh mutable copy of the fixture's published table template. */
-  private def copyTable(spark: SparkSession, fx: String, scratch: String): String = {
-    val table = s"$scratch/table"
-    val conf = spark.sparkContext.hadoopConfiguration
-    val src = new org.apache.hadoop.fs.Path(s"$fx/table")
-    val dst = new org.apache.hadoop.fs.Path(table)
-    org.apache.hadoop.fs.FileUtil.copy(
-      src.getFileSystem(conf), src, dst.getFileSystem(conf), dst, false, conf)
-    table
-  }
+    }
 
   private def changesSchema(spark: SparkSession, path: String) =
     spark.read.parquet(path).schema
@@ -225,7 +212,7 @@ object CdcStream {
   def streamCdcBatch(spark: SparkSession, dir: String): DataFrame = {
     val fx = fixtureRoot(spark, dir)
     val tmp = graft.util.Scratch.dir("cdc_stream_q")
-    val table = copyTable(spark, fx, tmp)
+    val table = graft.util.Scratch.copy(spark, s"$fx/table", tmp)
     applyUpdates(
         spark.readStream.schema(changesSchema(spark, s"$fx/changes4"))
           .parquet(s"$fx/changes4"),
@@ -250,7 +237,7 @@ object CdcStream {
   def streamCdcReplayBatch(spark: SparkSession, dir: String): DataFrame = {
     val fx = fixtureRoot(spark, dir)
     val tmp = graft.util.Scratch.dir("cdc_stream_multi_q")
-    val table = copyTable(spark, fx, tmp)
+    val table = graft.util.Scratch.copy(spark, s"$fx/table", tmp)
     applyUpdates(
         spark.readStream.schema(changesSchema(spark, s"$fx/changes2"))
           .option("maxFilesPerTrigger", 1)
@@ -272,7 +259,7 @@ object CdcStream {
   def streamCdcMorBatch(spark: SparkSession, dir: String): DataFrame = {
     val fx = fixtureRoot(spark, dir)
     val tmp = graft.util.Scratch.dir("cdc_stream_mor_q")
-    val table = copyTable(spark, fx, tmp)
+    val table = graft.util.Scratch.copy(spark, s"$fx/table", tmp)
     applyUpdatesMoR(
         spark.readStream.schema(changesSchema(spark, s"$fx/changes2"))
           .option("maxFilesPerTrigger", 1)

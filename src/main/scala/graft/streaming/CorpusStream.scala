@@ -392,8 +392,7 @@ object CorpusStream {
     // once per JVM and every invocation drains them through a FRESH
     // stream (own checkpoint, own corpus sink) — the timed surface is
     // the two-micro-batch near-dedup drain, not fixture republishing
-    val inDir = nearDropFixtures.computeIfAbsent(dir, _ => {
-      val fx = graft.util.Scratch.dir("corpus_stream_near_fixture")
+    val inDir = nearDropFixtures(dir) { fx =>
       val docs = graft.sources.Tables.documentsNarrow(spark, dir)
         .select("doc_id", "text", "lang", "source")
       val off = graft.operators.NearDedup.plantedOffset(docs, "doc_id")
@@ -426,7 +425,7 @@ object CorpusStream {
       drop(docs, "b0", t0)
       drop(nearCopies.unionByName(shortExact), "b1", t0 + 60000L)
       s"$fx/in"
-    })
+    }
     runNearDedup(spark, inDir, s"$tmp/corpus", s"$tmp/ckpt",
       threshold = 0.5, availableNow = true, maxFilesPerTrigger = 1)
       .awaitTermination()
@@ -453,8 +452,8 @@ object CorpusStream {
     // index partitions and the probe appends batch=2, so each
     // invocation mutates a fresh scratch COPY of that state (a small
     // parquet tree; the copy is cheap next to a signature pass)
-    val fixture = bandFixtures.computeIfAbsent(dir, _ => {
-      val base = graft.util.Scratch.dir("band_compact_fixture") + "/corpus"
+    val fixture = bandFixtures(dir) { tmp =>
+      val base = s"$tmp/corpus"
       // half the corpus is plenty for a maintenance-lifecycle ledger —
       // the minhash signature pass dominates admission cost
       val d = graft.sources.Tables.documents(spark, dir)
@@ -463,15 +462,9 @@ object CorpusStream {
       admitNearBatch(d.filter(col("doc_id") % 4 === 0), base, 0L, 0.5)
       admitNearBatch(d.filter(col("doc_id") % 4 === 2), base, 1L, 0.5)
       base
-    })
-    val tmp = graft.util.Scratch.dir("band_compact_q")
-    val corpus = s"$tmp/corpus"
-    val conf = spark.sparkContext.hadoopConfiguration
-    val srcP = new org.apache.hadoop.fs.Path(fixture)
-    val dstP = new org.apache.hadoop.fs.Path(corpus)
-    org.apache.hadoop.fs.FileUtil.copy(
-      srcP.getFileSystem(conf), srcP, dstP.getFileSystem(conf), dstP,
-      false, conf)
+    }
+    val corpus = graft.util.Scratch.copy(spark, fixture,
+      graft.util.Scratch.dir("band_compact_q"))
     val docs = graft.sources.Tables.documents(spark, dir)
       .filter(col("doc_id") % 2 === 0)
       .select("doc_id", "text", "lang", "source")
@@ -517,11 +510,9 @@ object CorpusStream {
       .toDF("metric", "value").orderBy("metric")
   }
 
-  private val bandFixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val bandFixtures = new graft.util.Scratch.Fixture[String]("band_compact_fixture")
 
-  private val nearDropFixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val nearDropFixtures = new graft.util.Scratch.Fixture[String]("corpus_stream_near_fixture")
 
   // ——— streaming gated ingest ————————————————————————————————————————
 

@@ -315,16 +315,15 @@ object FeedView {
      else writer).start()
   }
 
-  private val fixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val fixtures = new graft.util.Scratch.Fixture[String]("feed_view_src")
 
   /** The shared three-commit source store (class-0 baseline snapshot,
     * class-20/class-7 upsert link, class-30 delete link) — built once
     * per JVM and read-only thereafter; `q_incr_agg_stream` and
     * `q_mv_rewrite` both maintain views FROM it into fresh state. */
   private def sourceFixture(spark: SparkSession, dir: String): String =
-    fixtures.computeIfAbsent(dir, _ => {
-      val f = graft.util.Scratch.dir("feed_view_src") + "/t"
+    fixtures(dir) { tmp =>
+      val f = s"$tmp/t"
       val base = Tables.orders(spark, dir).select(
         col("o_orderkey").cast("long").as("o_orderkey"),
         col("o_orderdate").cast("date").as("odate"),
@@ -340,7 +339,7 @@ object FeedView {
       DeletionVectors.publishDeletes(spark, f,
         base.filter(col("o_orderkey") % 30 === 0).select("o_orderkey"), "o_orderkey")
       f
-    })
+    }
 
   /** Registered `q_mv_rewrite` (hash-oracled): the full
     * maintain-register-rewrite composition. The feed view folds the

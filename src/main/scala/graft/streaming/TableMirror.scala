@@ -65,8 +65,7 @@ object TableMirror {
      else writer).start()
   }
 
-  private val fixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val fixtures = new graft.util.Scratch.Fixture[String]("mirror_src")
 
   /** Registered `q_table_mirror` (hash-oracled): replicate the
     * three-commit lifecycle (class-0 baseline → class-20/class-7
@@ -76,8 +75,8 @@ object TableMirror {
     * `orders`. The source builds once per JVM; each invocation mirrors
     * into a fresh destination (the drain is the timed surface). */
   def tableMirrorResult(spark: SparkSession, dir: String): DataFrame = {
-    val src = fixtures.computeIfAbsent(dir, _ => {
-      val f = graft.util.Scratch.dir("mirror_src") + "/t"
+    val src = fixtures(dir) { tmp =>
+      val f = s"$tmp/t"
       val base = Tables.orders(spark, dir).select(
         col("o_orderkey").cast("long").as("o_orderkey"),
         col("o_orderdate").cast("date").as("odate"),
@@ -93,7 +92,7 @@ object TableMirror {
       DeletionVectors.publishDeletes(spark, f,
         base.filter(col("o_orderkey") % 30 === 0).select("o_orderkey"), "o_orderkey")
       f
-    })
+    }
     val scratch = graft.util.Scratch.dir("mirror_q")
     val dst = s"$scratch/mirror"
     runTableMirror(spark, src, dst, s"$scratch/ckpt", "o_orderkey", "odate",

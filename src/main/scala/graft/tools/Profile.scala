@@ -71,17 +71,21 @@ object Profile {
         // same-JVM A/B of one SQL conf: args(3) = key, args(4) = comma
         // list of values, args(5..) = query names. The values run in
         // order, then reversed, so drift hits every value alike; the
-        // key's value from before the run is restored afterwards.
+        // key's value from before the run is restored afterwards. One
+        // untimed pass per query runs first, so no value carries the
+        // query's cold pass.
         val key = args(3)
         val values = args(4).split(",").toSeq
         val before = spark.conf.getOption(key)
         args.drop(5).foreach { n =>
           val fn = graft.SparkEntry.queries(n)
+          def run(): Unit = fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          run()
           (values ++ values.reverse).foreach { v =>
             spark.conf.set(key, v)
             val times = (0 until passes).map { _ =>
               val t0 = System.nanoTime()
-              fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+              run()
               (System.nanoTime() - t0) / 1e9
             }
             println(f"CONF $n%-24s $key=$v%-6s min=${times.min}%7.3f all=${times.map(t => f"$t%.2f").mkString(",")}")

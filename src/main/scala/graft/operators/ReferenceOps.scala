@@ -841,9 +841,13 @@ object ReferenceOps {
     java.lang.Integer.toHexString(
       scala.util.hashing.MurmurHash3.stringHash(dir) & 0x7fffffff)
 
+  /** One scratch dir per tag, which every call overwrites: the query
+    * still times the bucketed write, and a sweep keeps one copy. */
+  private val bucketDirs = new graft.util.Scratch.Fixture[String]("graft_buckets")
+
   def bucketJoinRevenue(spark: SparkSession, dir: String): DataFrame = {
     val tag = bucketTag(dir)
-    val tmp = graft.util.Scratch.dir(s"graft_buckets_$tag")
+    val tmp = bucketDirs(tag)(identity)
     Sinks.writeBucketedTable(
       Tables.orders(spark, dir).select(col("o_custkey"), col("o_totalprice")),
       s"graft_b_orders_$tag", s"$tmp/orders", "o_custkey", buckets = 8)

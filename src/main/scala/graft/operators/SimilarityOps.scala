@@ -206,9 +206,6 @@ object SimilarityOps {
     v0.withColumn("bucket",
       element_at(graft.functions.native.hyperplane_buckets(col("embedding"), 1, nPlanes), 1))
 
-  def lshBuckets(spark: SparkSession, dir: String, nPlanes: Int = 8): DataFrame =
-    lshBucketsOf(vecs(spark, dir), nPlanes)
-
   /** Banded hyperplane signatures: `nBands` INDEPENDENT hash tables of
     * `nPlanes` sign bits each, one output row per (vec, band). Two
     * vectors are candidates if they share a bucket in ANY band —
@@ -311,18 +308,6 @@ object SimilarityOps {
       .join(TextOps.qualityScoreOf(docs)
         .filter(col("n_tokens") >= minTokens).select("doc_id"), "doc_id")
     hybridSearchOf(vecs(spark, dir), keep, nQueries, k)
-  }
-
-  /** IVF cell assignment: `kCells` coarse centroids (deterministic
-    * seed vectors — the first kCells corpus vectors; see
-    * ivfRefinedCentroidsOf for the k-means build), every vector
-    * assigned to its nearest centroid by cosine in one shuffle-free
-    * corpus pass. */
-  def ivfAssignOf(v0: DataFrame, kCells: Int): DataFrame = {
-    val v = v0.withColumn("nrm", norm(col("embedding")))
-    val cents = v.filter(col("vec_id") < kCells)
-      .select(col("vec_id").as("cell"), col("embedding").as("c_emb"), col("nrm").as("c_nrm"))
-    nearestCell(v, cents)
   }
 
   /** Spherical k-means refinement of the IVF coarse centroids (Lloyd

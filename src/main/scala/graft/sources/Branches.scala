@@ -55,9 +55,6 @@ class BranchMergeConflict(msg: String) extends java.io.IOException(msg)
   */
 object Branches {
 
-  private val markerRe = "m(\\d{8})".r
-  private val versionDirRe = "v(\\d{8})".r
-
   private def branchesRoot(tablePath: String) = s"$tablePath/_branches"
 
   private def branchPath(tablePath: String, name: String): org.apache.hadoop.fs.Path = {
@@ -82,21 +79,15 @@ object Branches {
     val root = new org.apache.hadoop.fs.Path(branchesRoot(tablePath))
     val fs = Sinks.hadoopFs(spark, root)
     if (!fs.exists(root)) Set.empty
-    else fs.listStatus(root).toSeq.filter(_.isDirectory).flatMap { b =>
-      fs.listStatus(b.getPath).toSeq.flatMap(_.getPath.getName match {
-        case markerRe(n) => Some(n.toLong)
-        case _           => None
-      })
-    }.toSet
+    else fs.listStatus(root).toSeq.filter(_.isDirectory)
+      .flatMap(b => Sinks.markersIn(fs, b.getPath).map(_._1)).toSet
   }
 
   /** Create `name` at the current main head and return the base
     * version. The `base` file is a conditional create, so creating an
     * existing branch fails (atomically) instead of re-pointing it. */
   def createBranch(spark: SparkSession, tablePath: String, name: String): Long = {
-    val base = Sinks.currentVersion(spark, tablePath).getOrElse(
-      throw new java.io.FileNotFoundException(
-        s"cannot branch $tablePath: no published snapshot to branch from"))
+    val base = Sinks.requireHead(spark, tablePath, "to branch from")
     val bdir = branchPath(tablePath, name)
     val fs = Sinks.hadoopFs(spark, bdir)
     fs.mkdirs(bdir)
@@ -115,7 +106,7 @@ object Branches {
     if (!created) throw new java.io.IOException(
       s"branch '$name' already exists at $tablePath")
     // head starts at base: a marker for the base version
-    fs.create(new org.apache.hadoop.fs.Path(bdir, f"m$base%08d"), false).close()
+    fs.create(Sinks.markerIn(bdir, base), false).close()
     base
   }
 
@@ -145,10 +136,7 @@ object Branches {
     val bdir = branchPath(tablePath, name)
     val fs = Sinks.hadoopFs(spark, bdir)
     if (!fs.exists(bdir)) None
-    else fs.listStatus(bdir).toSeq.flatMap(_.getPath.getName match {
-      case markerRe(n) => Some(n.toLong)
-      case _           => None
-    }).maxOption.orElse {
+    else Sinks.markersIn(fs, bdir).map(_._1).maxOption.orElse {
       val baseFile = new org.apache.hadoop.fs.Path(bdir, "base")
       if (fs.exists(baseFile)) Some(branchBase(spark, tablePath, name)) else None
     }
@@ -159,18 +147,8 @@ object Branches {
     * walk-up every branch-side publish uses (single-writer-per-ref,
     * so no OCC abort). */
   private[sources] def claimBranchVersion(spark: SparkSession,
-                                          tablePath: String): Long = {
-    val root = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = Sinks.hadoopFs(spark, root)
-    val existing: Seq[Long] = fs.listStatus(root).toSeq.collect {
-      case s if s.isDirectory => s.getPath.getName match {
-        case versionDirRe(n) => Some(n.toLong)
-        case _               => None
-      }
-    }.flatten
-    Sinks.claimNumber(fs, new org.apache.hadoop.fs.Path(root, "_claims"),
-      (existing :+ 0L).max + 1, "c")
-  }
+                                          tablePath: String): Long =
+    Sinks.claimNext(Sinks.hadoopFs(spark, new org.apache.hadoop.fs.Path(tablePath)), tablePath)
 
   /** Advance `name`'s head to `v` (a marker create in the ref's own
     * namespace — invisible to main readers). */
@@ -180,7 +158,7 @@ object Branches {
     val fs = Sinks.hadoopFs(spark, bdir)
     if (!fs.exists(new org.apache.hadoop.fs.Path(bdir, "base")))
       throw new java.io.FileNotFoundException(s"no branch '$name' at $tablePath")
-    fs.create(new org.apache.hadoop.fs.Path(bdir, f"m$v%08d"), false).close()
+    fs.create(Sinks.markerIn(bdir, v), false).close()
   }
 
   /** Read the branch head state, DV/MoR chain resolved — a head may be
@@ -233,7 +211,7 @@ object Branches {
         "cannot change schema; evolve on main, then rebase")
     }
     val next = claimBranchVersion(spark, tablePath)
-    val vdir = s"$tablePath/${Sinks.versionDirName(next)}"
+    val vdir = Sinks.versionDir(tablePath, next)
     // branch full-frame publishes enforce the TABLE's CHECK
     // constraints like every other write path (in-flight, one pass —
     // [[Constraints.guard]]): a branch is merge-bound for main
@@ -290,8 +268,7 @@ object Branches {
     val base = branchBase(spark, tablePath, name)
     val bHead = branchHead(spark, tablePath, name).getOrElse(
       throw new java.io.FileNotFoundException(s"no branch '$name' at $tablePath"))
-    val mHead = Sinks.currentVersion(spark, tablePath).getOrElse(
-      throw new java.io.FileNotFoundException(s"no published snapshot at $tablePath"))
+    val mHead = Sinks.requireHead(spark, tablePath)
     val target = SchemaEvolution.schemaOf(spark, tablePath, mHead)
     val baseDf = mergeState(spark, tablePath, base, target)
     val theirs = SnapshotDiff.diffOf(baseDf, mergeState(spark, tablePath, bHead, target),
@@ -375,11 +352,8 @@ object Branches {
       s"dateCol '$dateCol' must be the key or a compare column to survive the merge")
     val base = branchBase(spark, tablePath, name)
     val bHead = branchHead(spark, tablePath, name).get
-    val mHead = Sinks.currentVersion(spark, tablePath).getOrElse(
-      throw new java.io.FileNotFoundException(s"no published snapshot at $tablePath"))
+    val mHead = Sinks.requireHead(spark, tablePath)
     if (bHead == base) return mHead // branch never moved: nothing to merge
-    val root = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = Sinks.hadoopFs(spark, root)
     if (mHead == base) {
       // fast-forward: the branch head becomes live via marker creates.
       // A branch-staged MoR head chains over branch-only parent links —
@@ -392,8 +366,8 @@ object Branches {
       val chainLinks = DeletionVectors.chainVersions(spark, tablePath, bHead)
         .filter(v => v > base && v < bHead).sorted
       (chainLinks :+ bHead).foreach { v =>
-        if (!Sinks.tryClaim(fs, new org.apache.hadoop.fs.Path(root, "_manifests"),
-            v, "m"))
+        if (!Sinks.tryMark(Sinks.hadoopFs(spark, new org.apache.hadoop.fs.Path(tablePath)),
+            tablePath, v))
           throw new ConcurrentSnapshotUpdate(
             s"fast-forward of '$name' onto $tablePath: marker m$v already exists")
       }
@@ -407,12 +381,7 @@ object Branches {
       // [[Sinks.claimExpectedVersion]]'s post-claim / pre-marker
       // re-checks (whichever commitment act lands second, that side's
       // re-list sees the other's marker).
-      val allMarkers = fs.listStatus(
-        new org.apache.hadoop.fs.Path(root, "_manifests")).toSeq.flatMap(
-        _.getPath.getName match {
-          case markerRe(n) => Some(n.toLong)
-          case _           => None
-        })
+      val allMarkers = Sinks.committed(spark, tablePath).map(_._1)
       val interleaved = allMarkers
         .filter(v => v > base && v < bHead && !chainLinks.contains(v))
       if (interleaved.nonEmpty)
@@ -523,15 +492,14 @@ object Branches {
       s"dateCol '$dateCol' must be the key or a compare column to survive the rebase")
     val base = branchBase(spark, tablePath, name)
     val bHead = branchHead(spark, tablePath, name).get
-    val mHead = Sinks.currentVersion(spark, tablePath).getOrElse(
-      throw new java.io.FileNotFoundException(s"no published snapshot at $tablePath"))
+    val mHead = Sinks.requireHead(spark, tablePath)
     if (mHead == base) return bHead // already based on main's head
     val bdir = branchPath(tablePath, name)
     val fs = Sinks.hadoopFs(spark, bdir)
     if (bHead == base) {
       // no branch commits to replay: just advance the ref. mHead is a
       // committed main version, so deleteBranch can never GC it.
-      fs.create(new org.apache.hadoop.fs.Path(bdir, f"m$mHead%08d"), false).close()
+      fs.create(Sinks.markerIn(bdir, mHead), false).close()
       overwriteBase(fs, bdir, mHead)
       return mHead
     }
@@ -749,24 +717,9 @@ object Branches {
     val bdir = branchPath(tablePath, name)
     val fs = Sinks.hadoopFs(spark, bdir)
     if (!fs.exists(bdir)) return
-    val branchVersions = fs.listStatus(bdir).toSeq.flatMap(_.getPath.getName match {
-      case markerRe(n) => Some(n.toLong)
-      case _           => None
-    })
-    val root = new org.apache.hadoop.fs.Path(
-      bdir.getParent.getParent.toString) // tablePath
-    val mainMarked: Set[Long] = {
-      val mdir = new org.apache.hadoop.fs.Path(root, "_manifests")
-      if (!fs.exists(mdir)) Set.empty
-      else fs.listStatus(mdir).toSeq.flatMap(_.getPath.getName match {
-        case markerRe(n) => Some(n.toLong)
-        case _           => None
-      }).toSet
-    }
+    val branchVersions = Sinks.markersIn(fs, bdir).map(_._1)
+    val mainMarked = Sinks.mainMarkedVersions(spark, tablePath)
     fs.delete(bdir, true)
-    branchVersions.filterNot(mainMarked).foreach { v =>
-      fs.delete(new org.apache.hadoop.fs.Path(root, Sinks.versionDirName(v)), true)
-      fs.delete(new org.apache.hadoop.fs.Path(root, f"_claims/c$v%08d"), false)
-    }
+    branchVersions.filterNot(mainMarked).foreach(Sinks.dropUnmarked(fs, tablePath, _))
   }
 }

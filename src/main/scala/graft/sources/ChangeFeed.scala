@@ -139,7 +139,7 @@ private[sources] object ChangeFeed {
         }
       case None =>
         stamp(projectTo(spark, pin,
-          Sinks.cachedParquetRead(spark, s"${pin.root}/${Sinks.versionDirName(v)}")
+          Sinks.cachedParquetRead(spark, Sinks.versionDir(pin.root, v))
             .drop("txn_month"), v), "snapshot", v)
     }
 
@@ -155,16 +155,20 @@ private[sources] object ChangeFeed {
   def rangeFrame(spark: SparkSession, pin: Pin, from: Long, to: Long): DataFrame = {
     val range = (from + 1L) to to
     require(range.nonEmpty, s"empty change range ($from, $to]")
-    val readable = Sinks.listVersions(spark, pin.root).toSet
-    val lost = range.filterNot(readable)
+    requireRetained(spark, pin.root, range)
+    range.map(changeOf(spark, pin, _)).reduce(_ unionByName _)
+      .select(feedSchema(pin).fieldNames.map(col).toSeq: _*)
+  }
+
+  /** Refuse unless every version of `range` is still main-readable. */
+  def requireRetained(spark: SparkSession, root: String, range: Seq[Long]): Unit = {
+    val lost = range.filterNot(Sinks.listVersions(spark, root).toSet)
     if (lost.nonEmpty)
       throw new java.io.FileNotFoundException(
-        s"change feed on ${pin.root} needs version(s) ${lost.mkString(",")} but " +
+        s"change feed on $root needs version(s) ${lost.mkString(",")} but " +
         "retention pruned them — the consumer fell behind the retainVersions " +
         "window; restart from a retained startingVersion (or a fresh snapshot) " +
         "and size retention to cover consumer lag")
-    range.map(changeOf(spark, pin, _)).reduce(_ unionByName _)
-      .select(feedSchema(pin).fieldNames.map(col).toSeq: _*)
   }
 }
 
@@ -224,13 +228,12 @@ private[sources] class ChangeFeedTable(spark: SparkSession, root: String,
   private val pin = ChangeFeed.pinAtHead(spark, root,
     params.get("preimages").exists(_.trim.equalsIgnoreCase("true")))
 
-  private val head: Long = Sinks.currentVersion(spark, root).getOrElse(
-    throw new java.io.FileNotFoundException(
-      s"no published snapshot at $root — a change feed needs a first commit"))
+  private val head: Long =
+    Sinks.requireHead(spark, root, "— a change feed needs a first commit")
 
   private val startingVersion: Long = params.get("startingversion").map(_.toLong)
     .orElse(params.get("startingtimestamp").map(s =>
-      Sinks.firstVersionAtOrAfter(spark, root, GraftTable.parseTsMillis(s))))
+      Sinks.firstVersionAtOrAfter(spark, root, Sinks.parseTsMillis(s))))
     .getOrElse(throw new IllegalArgumentException(
       s"readChangeFeed on $root needs a starting point: pass startingVersion " +
       "or startingTimestamp (an unbounded feed read over a large history is " +
@@ -238,7 +241,7 @@ private[sources] class ChangeFeedTable(spark: SparkSession, root: String,
 
   private val endingVersion: Long = params.get("endingversion").map(_.toLong)
     .orElse(params.get("endingtimestamp").map(s =>
-      Sinks.versionAsOfTimestamp(spark, root, GraftTable.parseTsMillis(s))))
+      Sinks.versionAsOfTimestamp(spark, root, Sinks.parseTsMillis(s))))
     .getOrElse(head)
 
   require(startingVersion >= 1,
@@ -255,16 +258,7 @@ private[sources] class ChangeFeedTable(spark: SparkSession, root: String,
   // must not make a feed over partially-pruned history look healthy —
   // the refusal belongs to the range the user NAMED, not the subset a
   // particular query happened to touch.
-  locally {
-    val readable = Sinks.listVersions(spark, root).toSet
-    val lost = (startingVersion to endingVersion).filterNot(readable)
-    if (lost.nonEmpty)
-      throw new java.io.FileNotFoundException(
-        s"change feed on $root needs version(s) ${lost.mkString(",")} but " +
-        "retention pruned them — the consumer fell behind the retainVersions " +
-        "window; restart from a retained startingVersion (or a fresh snapshot) " +
-        "and size retention to cover consumer lag")
-  }
+  ChangeFeed.requireRetained(spark, root, startingVersion to endingVersion)
 
   override def name(): String =
     s"graft-table-changes:$root@v$startingVersion..v$endingVersion"

@@ -171,12 +171,8 @@ object Constraints {
     try write
     catch {
       case scala.util.control.NonFatal(e) =>
-        val root = new org.apache.hadoop.fs.Path(tablePath)
-        val fs = Sinks.hadoopFs(spark, root)
-        fs.delete(new org.apache.hadoop.fs.Path(
-          s"$tablePath/${Sinks.versionDirName(claimedVersion)}"), true)
-        fs.delete(new org.apache.hadoop.fs.Path(root,
-          f"_claims/c$claimedVersion%08d"), false)
+        Sinks.dropUnmarked(Sinks.hadoopFs(spark, new org.apache.hadoop.fs.Path(tablePath)),
+          tablePath, claimedVersion)
         violationMessage(e) match {
           case Some(msg) => throw new ConstraintViolation(msg)
           case None      => throw e

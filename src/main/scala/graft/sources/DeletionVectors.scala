@@ -57,9 +57,7 @@ object DeletionVectors {
                      extraMeta: Map[String, String] = Map.empty): Long = {
     require(deleteKeys.columns.toSeq == Seq(keyCol),
       s"deleteKeys must be exactly ($keyCol), got ${deleteKeys.columns.mkString(",")}")
-    val parent = Sinks.currentVersion(spark, tablePath).getOrElse(
-      throw new java.io.FileNotFoundException(
-        s"no published snapshot at $tablePath to delete from"))
+    val parent = Sinks.requireHead(spark, tablePath, "to delete from")
     expectedParent.foreach { e =>
       if (parent != e) throw new ConcurrentSnapshotUpdate(
         s"delete-publish of $tablePath was decided against version $e but the " +
@@ -70,8 +68,6 @@ object DeletionVectors {
     versionDvMeta(spark, tablePath, parent).foreach { case (_, k) =>
       require(k == keyCol, s"existing deletion chain keys on '$k', not '$keyCol'")
     }
-    val root = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = Sinks.hadoopFs(spark, root)
     // parent+1 OCC, but the predicate is "no MAIN commit since parent":
     // settled BRANCH versions consumed numbers from the shared claim
     // space without ever being main commits, so walk past them — but
@@ -99,7 +95,7 @@ object DeletionVectors {
         s"delete-publish of $tablePath expected to commit as version ${parent + 1} " +
         s"but main commit(s) ${landed.toSeq.sorted.mkString(",")} landed while the " +
         "link was being written; nothing was committed — retry against the new head")
-    Sinks.createCommitMarker(fs, new org.apache.hadoop.fs.Path(root, f"_manifests/m$next%08d"))
+    Sinks.createCommitMarker(spark, tablePath, next)
     next
   }
 
@@ -110,7 +106,7 @@ object DeletionVectors {
                         parent: Long, deleteKeys: DataFrame, keyCol: String,
                         deltaRows: Option[DataFrame],
                         extraMeta: Map[String, String] = Map.empty): Unit = {
-    val vdir = s"$tablePath/${Sinks.versionDirName(next)}"
+    val vdir = Sinks.versionDir(tablePath, next)
     val fs = Sinks.hadoopFs(spark, new org.apache.hadoop.fs.Path(vdir))
     Sinks.writeSingleParquetFile(deleteKeys.distinct(),
       s"$vdir/_staging_dv", s"$vdir/$dvSubdir/keys.parquet", ordered = false)
@@ -235,14 +231,25 @@ object DeletionVectors {
   private[sources] def linkOf(spark: SparkSession, tablePath: String,
                               version: Long): Option[(String, Long, DataFrame, Option[DataFrame])] =
     versionDvMeta(spark, tablePath, version).map { case (parent, key) =>
-      val vdir = s"$tablePath/${Sinks.versionDirName(version)}"
-      val fs = Sinks.hadoopFs(spark, new org.apache.hadoop.fs.Path(vdir))
-      val delta =
-        if (fs.exists(new org.apache.hadoop.fs.Path(s"$vdir/$deltaSubdir")))
-          Some(Sinks.cachedParquetRead(spark, s"$vdir/$deltaSubdir/rows.parquet"))
-        else None
-      (key, parent, Sinks.cachedParquetRead(spark, s"$vdir/$dvSubdir/keys.parquet"), delta)
+      val (dv, delta) = linkFiles(spark, tablePath, version)
+      (key, parent, dv, delta)
     }
+
+  /** A link's vector and optional delta, read as the exact single files
+    * the publish wrote: passing the underscore-prefixed DIRS would make
+    * Spark's file index warn "all paths were ignored" on every chain
+    * link (underscore paths are ignorable by convention; explicit files
+    * are not). */
+  private def linkFiles(spark: SparkSession, tablePath: String,
+                        version: Long): (DataFrame, Option[DataFrame]) = {
+    val vdir = Sinks.versionDir(tablePath, version)
+    val fs = Sinks.hadoopFs(spark, new org.apache.hadoop.fs.Path(vdir))
+    val delta =
+      if (fs.exists(new org.apache.hadoop.fs.Path(s"$vdir/$deltaSubdir")))
+        Some(Sinks.cachedParquetRead(spark, s"$vdir/$deltaSubdir/rows.parquet"))
+      else None
+    (Sinks.cachedParquetRead(spark, s"$vdir/$dvSubdir/keys.parquet"), delta)
+  }
 
   /** The chain's base DATA version: `version` itself when it carries
     * data, else where its parent pointers bottom out. DV/MoR commits
@@ -294,11 +301,7 @@ object DeletionVectors {
     * the chain was pruned (never serves a base missing its deletes or
     * deletes missing their base). */
   def readMergedAt(spark: SparkSession, tablePath: String, version: Long): DataFrame = {
-    // readable = marked by ANY ref: main's `_manifests` or a branch
-    // namespace (branch MoR links chain over the shared version space;
-    // a GC'd branch's numbers drop out of this set and refuse again)
-    val readable = Sinks.listVersions(spark, tablePath).toSet ++
-      Branches.branchMarkedVersions(spark, tablePath)
+    val readable = Sinks.refReadableVersions(spark, tablePath)
     var v = version
     var key: Option[String] = None
     // (version, vector, delta-if-any), newest link first
@@ -312,24 +315,15 @@ object DeletionVectors {
       val (parent, k) = meta.get
       key.foreach(k0 => require(k0 == k, s"mixed delete keys in chain: $k0 vs $k"))
       key = Some(k)
-      val vdir = s"$tablePath/${Sinks.versionDirName(v)}"
-      val fs = Sinks.hadoopFs(spark, new org.apache.hadoop.fs.Path(vdir))
-      // read the exact single files the publish wrote: passing the
-      // underscore-prefixed DIRS would make Spark's file index warn
-      // "all paths were ignored" on every chain link (underscore paths
-      // are ignorable by convention; explicit files are not)
-      val delta =
-        if (fs.exists(new org.apache.hadoop.fs.Path(s"$vdir/$deltaSubdir")))
-          Some(Sinks.cachedParquetRead(spark, s"$vdir/$deltaSubdir/rows.parquet"))
-        else None
-      links = (v, Sinks.cachedParquetRead(spark, s"$vdir/$dvSubdir/keys.parquet"), delta) :: links
+      val (dv, delta) = linkFiles(spark, tablePath, v)
+      links = (v, dv, delta) :: links
       if (!readable(parent)) throw new java.io.FileNotFoundException(
         s"deletion-vector version $v of $tablePath points at parent $parent, " +
         "which is not readable (pruned?) — materialize before pruning")
       v = parent
       meta = versionDvMeta(spark, tablePath, v)
     }
-    val baseRaw = Sinks.cachedParquetRead(spark, s"$tablePath/${Sinks.versionDirName(v)}")
+    val baseRaw = Sinks.cachedParquetRead(spark, Sinks.versionDir(tablePath, v))
     key match {
       case None => baseRaw
       case Some(k) =>
@@ -367,9 +361,7 @@ object DeletionVectors {
 
   /** Read the LIVE state merged with its deletion chain. */
   def readMerged(spark: SparkSession, tablePath: String): DataFrame =
-    readMergedAt(spark, tablePath,
-      Sinks.currentVersion(spark, tablePath).getOrElse(
-        throw new java.io.FileNotFoundException(s"no published snapshot at $tablePath")))
+    readMergedAt(spark, tablePath, Sinks.requireHead(spark, tablePath))
 
   /** Fold the live deletion chain into a plain data version (the
     * `OPTIMIZE`-style maintenance pass): publishes the merged state
@@ -388,8 +380,7 @@ object DeletionVectors {
     // as-of read (caught by the cross-feature lakehouse walk). The
     // file-stats manifest describes the old files, so it is recomputed
     // for the new layout rather than carried.
-    val live = Sinks.currentVersion(spark, tablePath).getOrElse(
-      throw new java.io.FileNotFoundException(s"no published snapshot at $tablePath"))
+    val live = Sinks.requireHead(spark, tablePath)
     val carried = Sinks.versionMeta(spark, tablePath,
       baseDataVersion(spark, tablePath, live))
     Sinks.publishSnapshot(readMerged(spark, tablePath), dateCol, tablePath,

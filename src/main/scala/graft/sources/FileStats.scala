@@ -78,13 +78,8 @@ object FileStats {
     * instead of a serial driver loop. */
   def collect(spark: SparkSession, versionDir: String, cols: Seq[String]): String = {
     require(cols.nonEmpty, "statsCols must name at least one column")
-    val root = new Path(versionDir)
-    val fs = Sinks.hadoopFs(spark, root)
-    val files: Seq[(String, String)] = fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("txn_month="))
-      .flatMap(d => fs.listStatus(d.getPath).toSeq)
-      .collect { case s if s.isFile && s.getPath.getName.endsWith(".parquet") =>
-        (s.getPath.toString, s"${s.getPath.getParent.getName}/${s.getPath.getName}") }
+    val files: Seq[(String, String)] = Sinks.versionFiles(spark, versionDir)
+      .filter(_.partition.startsWith("txn_month=")).map(f => (f.path.toString, f.rel))
     if (files.isEmpty) return render(cols, Nil)
     val sc = spark.sparkContext
     // Configuration is a Writable, not Serializable — ship it wrapped
@@ -367,7 +362,7 @@ object FileStats {
   // ---- whole-manifest aggregate facts (plan side) -----------------------
 
   private def manifestPath(tablePath: String, version: Long) =
-    new Path(s"$tablePath/${Sinks.versionDirName(version)}/${Sinks.metaPrefix}$metaName")
+    new Path(s"${Sinks.versionDir(tablePath, version)}/${Sinks.metaPrefix}$metaName")
 
   /** (mtime, length) of the version's stats manifest FILE — the cheap
     * identity probe [[graft.plans.MetaAggregate]] keys its facts cache

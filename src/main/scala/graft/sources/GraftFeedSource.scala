@@ -98,11 +98,9 @@ class GraftFeedSource(spark: SparkSession, params: Map[String, String])
     // version at or after the instant, resolved against RECORDED
     // commit times; refuse-don't-guess when everything predates it
     .orElse(params.get("startingtimestamp").map(s =>
-      Sinks.firstVersionAtOrAfter(spark, root, GraftTable.parseTsMillis(s))))
-    .getOrElse(Sinks.currentVersion(spark, root).getOrElse(
-      throw new java.io.FileNotFoundException(
-        s"no published snapshot at $root — a change feed needs a first commit " +
-        "(or pass startingVersion to begin at a known number)")))
+      Sinks.firstVersionAtOrAfter(spark, root, Sinks.parseTsMillis(s))))
+    .getOrElse(Sinks.requireHead(spark, root, "— a change feed needs a first commit " +
+      "(or pass startingVersion to begin at a known number)"))
   require(startingVersion >= 1, "startingVersion must be a committed version number (>= 1)")
   // refuse-don't-guess at construction: a startingVersion beyond the
   // live head would make latestOffset filter every head forever — a
@@ -147,7 +145,7 @@ class GraftFeedSource(spark: SparkSession, params: Map[String, String])
 
   private def bytesOf(v: Long): Long =
     versionBytes.computeIfAbsent(v, { _ =>
-      val p = new org.apache.hadoop.fs.Path(s"$root/${Sinks.versionDirName(v)}")
+      val p = new org.apache.hadoop.fs.Path(Sinks.versionDir(root, v))
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       try java.lang.Long.valueOf(fs.getContentSummary(p).getLength)
       catch {

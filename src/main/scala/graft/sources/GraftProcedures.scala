@@ -229,20 +229,6 @@ object GraftProcedures {
       StructField("files_after", LongType, nullable = false),
       StructField("bytes_after", LongType, nullable = false)))
 
-    /** Data files under one version dir (recursing into the month
-      * partition dirs) — ledger metadata, O(files) listing. */
-    private def dataFiles(table: String, v: Long): Seq[Long] = {
-      val dir = new org.apache.hadoop.fs.Path(s"$table/${Sinks.versionDirName(v)}")
-      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def walk(p: org.apache.hadoop.fs.Path): Seq[Long] =
-        fs.listStatus(p).toSeq.flatMap { s =>
-          if (s.isDirectory) walk(s.getPath)
-          else if (s.getPath.getName.endsWith(".parquet")) Seq(s.getLen)
-          else Seq.empty
-        }
-      walk(dir)
-    }
-
     override def call(input: InternalRow): java.util.Iterator[Scan] = {
       val table = resolve(input.getUTF8String(0).toString, rootOpt)
       val dateCol = input.getUTF8String(1).toString
@@ -250,15 +236,15 @@ object GraftProcedures {
       val zorder = input.getUTF8String(3).toString
         .split(",").map(_.trim).filter(_.nonEmpty).toSeq
       val hilbert = input.getBoolean(4)
-      val before = Sinks.currentVersion(spark, table).getOrElse(
-        throw new java.io.FileNotFoundException(
-          s"no published snapshot at $table (no commit marker in _manifests)"))
-      val filesBefore = dataFiles(table, before).size.toLong
+      val before = Sinks.requireHead(spark, table)
+      // ledger metadata: every parquet file of a version (O(files) listing)
+      def files(v: Long) = Sinks.versionFiles(spark, Sinks.versionDir(table, v))
+      val filesBefore = files(before).size.toLong
       val committed = Sinks.compactSnapshot(spark, table, dateCol,
         targetFileBytes = target, zorderCols = zorder, hilbertCurve = hilbert)
-      val after = dataFiles(table, committed)
+      val after = files(committed)
       result(out, Array(new GenericInternalRow(Array[Any](
-        before, committed, filesBefore, after.size.toLong, after.sum))))
+        before, committed, filesBefore, after.size.toLong, after.map(_.len).sum))))
     }
   }
 
@@ -398,36 +384,22 @@ object GraftProcedures {
 
     override def call(input: InternalRow): java.util.Iterator[Scan] = {
       val table = resolve(input.getUTF8String(0).toString, rootOpt)
-      // ledger-sized collects throughout: history() is O(versions)
-      // driver-side metadata, everything else is a directory listing
-      val hist = Sinks.history(spark, table).collect()
-      val head = hist.find(_.getBoolean(4)).getOrElse(
-        throw new java.io.FileNotFoundException(
-          s"no published snapshot at $table (no commit marker in _manifests)"))
-      val parentOf: Map[Long, Option[Long]] = hist.map(r =>
-        r.getLong(0) -> (if (r.isNullAt(3)) None else Some(r.getLong(3)))).toMap
+      // O(versions) driver-side metadata and directory listings
+      val head = Sinks.requireHead(spark, table)
       // the live chain closure: head → … → base data version
-      val chain = Iterator.iterate(Option(head.getLong(0)))(
-        _.flatMap(parentOf.getOrElse(_, None)))
-        .takeWhile(_.isDefined).flatten.toSeq
+      val chain = DeletionVectors.chainVersions(spark, table, head)
+      // every parquet file of the chain, DV/MoR link files included
+      val sizes = chain.flatMap(v => Sinks.versionFiles(spark, Sinks.versionDir(table, v)))
+        .map(_.len)
+      val key = DeletionVectors.chainKeyOf(spark, table, head)
       val fs = Sinks.hadoopFs(spark, new org.apache.hadoop.fs.Path(table))
-      def walk(p: org.apache.hadoop.fs.Path): Seq[Long] =
-        if (!fs.exists(p)) Seq.empty
-        else fs.listStatus(p).toSeq.flatMap { s =>
-          if (s.isDirectory) walk(s.getPath)
-          else if (s.getPath.getName.endsWith(".parquet")) Seq(s.getLen)
-          else Seq.empty
-        }
-      val sizes = chain.flatMap(v => walk(new org.apache.hadoop.fs.Path(
-        s"$table/${Sinks.versionDirName(v)}")))
-      val key = DeletionVectors.chainKeyOf(spark, table, head.getLong(0))
       val branches = {
         val bp = new org.apache.hadoop.fs.Path(table, "_branches")
         if (fs.exists(bp)) fs.listStatus(bp).count(_.isDirectory).toLong else 0L
       }
       result(out, Array(new GenericInternalRow(Array[Any](
-        utf8(table), head.getLong(0), utf8(head.getString(2)),
-        hist.length.toLong, chain.size.toLong,
+        utf8(table), head, utf8(Sinks.versionKind(spark, table, head)._1),
+        Sinks.listVersions(spark, table).size.toLong, chain.size.toLong,
         sizes.size.toLong, sizes.sum,
         key.map(utf8).orNull,
         Constraints.constraintsOf(spark, table).size.toLong,
@@ -638,31 +610,19 @@ object GraftProcedures {
 
     override def call(input: InternalRow): java.util.Iterator[Scan] = {
       val table = resolve(input.getUTF8String(0).toString, rootOpt)
-      val version = Some(input.getLong(1)).filter(_ >= 0L).getOrElse {
-        val hist = Sinks.history(spark, table).collect()
-        hist.find(_.getBoolean(4)).getOrElse(throw new java.io.FileNotFoundException(
-          s"no published snapshot at $table (no commit marker in _manifests)"))
-          .getLong(0)
-      }
-      val fs = Sinks.hadoopFs(spark, new org.apache.hadoop.fs.Path(table))
-      val vDir = new org.apache.hadoop.fs.Path(s"$table/${Sinks.versionDirName(version)}")
-      if (!fs.exists(vDir)) throw new java.io.FileNotFoundException(
-        s"no version dir for v$version at $table")
-      // (month, count, bytes) from the listing — months-sized result
-      val perMonth = fs.listStatus(vDir).toSeq.flatMap { s =>
-        val month: Option[String] = s.getPath.getName match {
-          case n if n.startsWith("txn_month=") =>
-            Some(n.substring("txn_month=".length))
-              .filterNot(_ == "__HIVE_DEFAULT_PARTITION__")
-          case _ => None
-        }
-        if (s.isDirectory)
-          fs.listStatus(s.getPath).toSeq
-            .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-            .map(f => (month, f.getLen))
-        else if (s.getPath.getName.endsWith(".parquet")) Seq((month, s.getLen))
-        else Seq.empty
-      }.groupBy(_._1).map { case (m, fsz) => m -> (fsz.size.toLong, fsz.map(_._2).sum) }
+      val version = Some(input.getLong(1)).filter(_ >= 0L)
+        .getOrElse(Sinks.requireHead(spark, table))
+      val vDir = Sinks.versionDir(table, version)
+      if (!Sinks.hadoopFs(spark, new org.apache.hadoop.fs.Path(vDir))
+          .exists(new org.apache.hadoop.fs.Path(vDir)))
+        throw new java.io.FileNotFoundException(s"no version dir for v$version at $table")
+      // (month, count, bytes) from the listing — months-sized result;
+      // files outside a month dir (a link's `_dv`/`_delta`) count as NULL
+      val perMonth = Sinks.versionFiles(spark, vDir).groupBy(f =>
+        Some(f.partition).filter(_.startsWith("txn_month="))
+          .map(_.stripPrefix("txn_month="))
+          .filterNot(_ == "__HIVE_DEFAULT_PARTITION__"))
+        .map { case (m, fsz) => m -> (fsz.size.toLong, fsz.map(_.len).sum) }
       val rowsByMonth: Map[Option[String], Long] =
         Sinks.versionMeta(spark, table, version).get(FileStats.metaName)
           .flatMap(FileStats.aggFactsByMonth)

@@ -212,8 +212,7 @@ class GraftTable private (
   // ——— read side ————————————————————————————————————————————————————
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    val v = resolvedVersion.getOrElse(throw new java.io.FileNotFoundException(
-      s"no published snapshot at $root (no commit marker in _manifests)"))
+    val v = resolvedVersion.getOrElse(throw Sinks.noSnapshot(root))
     parquetDelegate match {
       case Some(pt) => pt.newScanBuilder(options)
       case None if monthVisible =>
@@ -434,9 +433,8 @@ class GraftTable private (
           val key = mergeKey
           val idSchema = info.rowIdSchema().orElse(
             StructType(schema.fields.filter(_.name == key)))
-          new GraftDeltaWrite(spark, root, resolvedVersion.getOrElse(
-            throw new java.io.FileNotFoundException(
-              s"no published snapshot at $root to modify")),
+          new GraftDeltaWrite(spark, root,
+            resolvedVersion.getOrElse(throw Sinks.noSnapshot(root, "to modify")),
             key, info.schema(), idSchema)
         }
       }
@@ -479,7 +477,7 @@ object GraftTable {
     val root = Option(options.get("path")).getOrElse(throw new IllegalArgumentException(
       "graft-table needs a path: the snapshot store root (the directory holding v…/ and _manifests/)"))
     val opts = lowered(options)
-    resolvePoint(spark, root, opts) match {
+    Sinks.resolvePoint(spark, root, opts) match {
       case Some(v) =>
         // chain heads: NO parquet delegate — provider-mode scans refuse
         // (refuse-don't-guess, see newScanBuilder) while WRITES remain
@@ -488,9 +486,8 @@ object GraftTable {
           parquetDelegate(spark, root, v, Some(options)))
       case None =>
         if (!opts.contains("datecol"))
-          throw new java.io.FileNotFoundException(
-            s"no published snapshot at $root (no commit marker in _manifests); " +
-            "to bootstrap the store with a first write, pass .option(\"dateCol\", …)")
+          throw Sinks.noSnapshot(root, "— to bootstrap the store with a first " +
+            "write, pass .option(\"dateCol\", …)")
         new GraftTable(spark, root, opts, monthVisible = true, None, None)
     }
   }
@@ -501,9 +498,8 @@ object GraftTable {
     * the catalog translates emptiness to NoSuchTableException. */
   def forCatalog(spark: SparkSession, root: String,
                  opts: Map[String, String]): GraftTable =
-    forCatalog(spark, root, opts, resolvePoint(spark, root, opts).getOrElse(
-      throw new java.io.FileNotFoundException(
-        s"no published snapshot at $root (no commit marker in _manifests)")))
+    forCatalog(spark, root, opts,
+      Sinks.resolvePoint(spark, root, opts).getOrElse(throw Sinks.noSnapshot(root)))
 
   /** Catalog-mode construction at an already resolved version `v`. */
   private[sources] def forCatalog(spark: SparkSession, root: String,
@@ -522,7 +518,7 @@ object GraftTable {
                               options: Option[CaseInsensitiveStringMap]): Option[ParquetTable] =
     if (DeletionVectors.baseDataVersion(spark, root, v) != v) None
     else {
-      val dir = s"$root/${Sinks.versionDirName(v)}"
+      val dir = Sinks.versionDir(root, v)
       val opts = options.getOrElse(new CaseInsensitiveStringMap(Map("path" -> dir).asJava))
       val schema =
         if (inferenceOptions.exists(opts.containsKey)) None
@@ -772,52 +768,6 @@ object GraftTable {
     options.asCaseSensitiveMap().asScala.map {
       case (k, v) => k.toLowerCase(java.util.Locale.ROOT) -> v
     }.toMap
-
-  /** Resolve which committed version this table binds to (None =
-    * empty store): live head, or exactly one of `branch` /
-    * `versionAsOf` / `tag`. The refuse-don't-guess contracts are
-    * [[Sinks.readSnapshotAt]]'s. */
-  private def resolvePoint(spark: SparkSession, root: String,
-                           opts: Map[String, String]): Option[Long] = {
-    val branchOpt = opts.get("branch")
-    val asOfOpt = opts.get("versionasof")
-    val tagOpt = opts.get("tag")
-    val tsOpt = opts.get("timestampasof")
-    require(Seq(branchOpt, asOfOpt, tagOpt, tsOpt).count(_.isDefined) <= 1,
-      "graft-table: 'branch', 'versionAsOf', 'tag' and 'timestampAsOf' are mutually " +
-      "exclusive — each names one point to read; pick one")
-    (branchOpt, asOfOpt, tagOpt, tsOpt) match {
-      case (Some(b), _, _, _) =>
-        Some(Branches.branchHead(spark, root, b).getOrElse(
-          throw new java.io.FileNotFoundException(s"no branch '$b' at $root")))
-      case (_, Some(vs), _, _) =>
-        val v = vs.toLong
-        val available = Sinks.listVersions(spark, root)
-        if (!available.contains(v))
-          throw new java.io.FileNotFoundException(
-            s"snapshot version $v of $root is not readable " +
-            s"(committed + retained: ${available.mkString("[", ", ", "]")}) — " +
-            "it was never committed, or retention pruned it")
-        Some(v)
-      case (_, _, Some(t), _) =>
-        Some(Tags.tagVersion(spark, root, t))
-      case (_, _, _, Some(ts)) =>
-        Some(Sinks.versionAsOfTimestamp(spark, root, parseTsMillis(ts)))
-      case _ =>
-        Sinks.currentVersion(spark, root)
-    }
-  }
-
-  /** `timestampAsOf` accepts epoch millis, `yyyy-MM-dd` or a full
-    * `yyyy-MM-dd HH:mm:ss[.f…]` timestamp (interpreted in the JVM
-    * default zone, matching java.sql parsing elsewhere). */
-  private[sources] def parseTsMillis(s: String): Long =
-    scala.util.Try(s.toLong)
-      .orElse(scala.util.Try(java.sql.Timestamp.valueOf(s).getTime))
-      .orElse(scala.util.Try(java.sql.Date.valueOf(s).getTime))
-      .getOrElse(throw new IllegalArgumentException(
-        s"timestampAsOf '$s' is neither epoch millis, 'yyyy-MM-dd', nor " +
-        "'yyyy-MM-dd HH:mm:ss[.f]'"))
 }
 
 /** Column-pruning AND filter-pushing ScanBuilder over the chain-merged

@@ -4,8 +4,8 @@ import java.net.URI
 import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermission
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsConstants,
-  FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FSDataInputStream, FileStatus,
+  FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.io.nativeio.NativeIO
@@ -55,9 +55,17 @@ class GraftRawLocalFs(uri: URI, conf: Configuration)
 
 /** The checksummed `FileContext` binding
   * (`fs.AbstractFileSystem.file.impl`), as Hadoop's `LocalFs` — what
-  * Spark's streaming checkpoint manager writes through. The URI is
-  * ignored like the stock class does: there is one local root. */
-class GraftLocalFs(uri: URI, conf: Configuration) extends ChecksumFs(new GraftRawLocalFs(conf))
+  * Spark's streaming checkpoint manager reads and writes through. The
+  * URI is ignored like the stock class does: there is one local root.
+  *
+  * `open(f)` goes through the checked `open(f, bufferSize)`: that is
+  * the only `open` `ChecksumFs` overrides, and the `FilterFs.open(f)`
+  * it inherits returns the wrapped filesystem's raw stream, so a
+  * `FileContext.open` would read a flipped byte without a
+  * `ChecksumException` (the stock `LocalFs` does). */
+class GraftLocalFs(uri: URI, conf: Configuration) extends ChecksumFs(new GraftRawLocalFs(conf)) {
+  override def open(f: Path): FSDataInputStream = open(f, getServerDefaults(f).getFileBufferSize)
+}
 
 object LocalFs {
   private val forkFree = !NativeIO.isAvailable && !Shell.WINDOWS

@@ -180,8 +180,7 @@ object SchemaEvolution {
                    changes: Seq[org.apache.spark.sql.connector.catalog.TableChange],
                    retainVersions: Option[Int] = None): Long = {
     import org.apache.spark.sql.connector.catalog.TableChange
-    val live = Sinks.currentVersion(spark, tablePath).getOrElse(
-      throw new java.io.FileNotFoundException(s"no published snapshot at $tablePath"))
+    val live = Sinks.requireHead(spark, tablePath)
     // live LOGICAL state: merged through any DV/MoR chain; projected
     // by id when a mapping exists (a first ALTER on a store published
     // without one simply mints the whole mapping fresh)
@@ -348,8 +347,7 @@ object SchemaEvolution {
 
   private def projectAs(spark: SparkSession, tablePath: String, version: Long,
                         asOfVersion: Option[Long], phys: DataFrame): DataFrame = {
-    val asOf = asOfVersion.orElse(Sinks.currentVersion(spark, tablePath)).getOrElse(
-      throw new java.io.FileNotFoundException(s"no published snapshot at $tablePath"))
+    val asOf = asOfVersion.getOrElse(Sinks.requireHead(spark, tablePath))
     val target = schemaOf(spark, tablePath, asOf).getOrElse(
       throw new java.io.FileNotFoundException(
         s"version $asOf of $tablePath has no schema mapping " +

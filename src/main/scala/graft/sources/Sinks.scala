@@ -1,6 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** A snapshot publish lost an optimistic-concurrency race: the version
@@ -82,11 +83,205 @@ object Sinks {
   // scan an immutable version directory: a swap mid-scan is invisible,
   // and `retainVersions` previous versions stay on disk as the grace
   // window for scans that resolved before the swap.
+  //
+  // This section is the one resolver of that layout: nothing outside it
+  // and the publish/prune code below spells a version dir, a marker name
+  // or a `_manifests` listing (`versionDirName` is private, so the
+  // compiler holds the rule). Every other module resolves through:
+  //
+  //   versionDir, marker      the only spellings of vNNNNNNNN/ and
+  //                           _manifests/mNNNNNNNN
+  //   committed               the one `_manifests` listing: committed
+  //                           versions with their marker paths
+  //   listVersions            main-readable: committed ∩ version dirs
+  //   refReadableVersions     readable from any ref: marked by main or a
+  //                           branch, dir present
+  //   requireHead, noSnapshot the live head, or the one "no published
+  //                           snapshot" FileNotFoundException
+  //   requireReadable         one version, or the refusal naming the
+  //                           readable range (readSnapshotAt's check)
+  //   resolvePoint            head, or one of versionAsOf,
+  //                           timestampAsOf, tag or branch
+  //   versionFiles            the one walk of a version's parquet files
 
   private val versionRe = "v(\\d{8})".r
-  private val manifestRe = "m(\\d{8})".r
+  private val markerRe = "m(\\d{8})".r
   private val claimRe = "c(\\d{8})".r
-  private[sources] def versionDirName(v: Long): String = f"v$v%08d"
+  private def versionDirName(v: Long): String = f"v$v%08d"
+  private val noMarker = "(no commit marker in _manifests)"
+
+  /** The directory of version `v`. */
+  private[graft] def versionDir(tablePath: String, v: Long): String =
+    s"$tablePath/${versionDirName(v)}"
+
+  private def manifestsDir(tablePath: String): Path = new Path(tablePath, "_manifests")
+
+  /** The marker of version `v` in a marker dir: `_manifests` (main) or
+    * a branch's ref dir ([[Branches]]). */
+  private[graft] def markerIn(dir: Path, v: Long): Path = new Path(dir, f"m$v%08d")
+
+  /** The main commit marker of version `v`. */
+  private def marker(tablePath: String, v: Long): Path =
+    markerIn(manifestsDir(tablePath), v)
+
+  private def listOrEmpty(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    try fs.listStatus(dir).toSeq
+    catch { case _: java.io.FileNotFoundException => Seq.empty }
+
+  /** The versions marked in one marker dir, with their marker paths —
+    * one listing; empty when the dir does not exist. */
+  private[graft] def markersIn(fs: FileSystem, dir: Path): Seq[(Long, Path)] =
+    listOrEmpty(fs, dir).flatMap(s => s.getPath.getName match {
+      case markerRe(n) => Some(n.toLong -> s.getPath)
+      case _           => None
+    })
+
+  /** The one `_manifests` listing: every committed main version with
+    * its marker path. */
+  private[graft] def committed(spark: SparkSession, tablePath: String): Seq[(Long, Path)] =
+    markersIn(hadoopFs(spark, manifestsDir(tablePath)), manifestsDir(tablePath))
+
+  /** Numbers of the version dirs under the table root: committed,
+    * branch-only, in flight or abandoned. */
+  private def versionDirs(fs: FileSystem, tablePath: String): Set[Long] =
+    listOrEmpty(fs, new Path(tablePath)).flatMap(s =>
+      if (!s.isDirectory) None
+      else s.getPath.getName match {
+        case versionRe(n) => Some(n.toLong)
+        case _            => None
+      }).toSet
+
+  /** Main-readable commits, ascending: `marks` whose version dir
+    * survived retention pruning (a marker whose dir a concurrent
+    * pruner has deleted is mid-removal debris, not readable history). */
+  private def readable(spark: SparkSession, tablePath: String,
+                       marks: Seq[(Long, Path)]): Seq[(Long, Path)] =
+    if (marks.isEmpty) marks
+    else {
+      val dirs = versionDirs(hadoopFs(spark, new Path(tablePath)), tablePath)
+      marks.filter(m => dirs(m._1)).sortBy(_._1)
+    }
+
+  /** Readable from ANY ref: versions marked by main or by a branch
+    * whose dir exists (branch MoR links chain over the shared version
+    * space; a GC'd branch's numbers drop out and refuse again). */
+  private[graft] def refReadableVersions(spark: SparkSession, tablePath: String): Set[Long] = {
+    val marked = mainMarkedVersions(spark, tablePath) ++
+      Branches.branchMarkedVersions(spark, tablePath)
+    if (marked.isEmpty) marked
+    else marked.intersect(versionDirs(hadoopFs(spark, new Path(tablePath)), tablePath))
+  }
+
+  /** The one "no published snapshot" refusal; `what` says what the
+    * caller needed a head for. */
+  private[graft] def noSnapshot(tablePath: String,
+                                what: String = noMarker): java.io.FileNotFoundException =
+    new java.io.FileNotFoundException(s"no published snapshot at $tablePath $what")
+
+  /** The live head, or [[noSnapshot]]. */
+  private[graft] def requireHead(spark: SparkSession, tablePath: String,
+                                 what: String = noMarker): Long =
+    currentVersion(spark, tablePath).getOrElse(throw noSnapshot(tablePath, what))
+
+  /** `version` when it is main-readable, else the refusal naming the
+    * readable range ([[readSnapshotAt]]'s contract). Checks the one
+    * version — its marker and its dir — and lists the rest only to
+    * build the message. */
+  private def requireReadable(spark: SparkSession, tablePath: String,
+                              version: Long): Long = {
+    val fs = hadoopFs(spark, new Path(tablePath))
+    if (!fs.exists(marker(tablePath, version)) ||
+        !fs.exists(new Path(versionDir(tablePath, version))))
+      throw new java.io.FileNotFoundException(
+        s"snapshot version $version of $tablePath is not readable " +
+        s"(committed + retained: ${listVersions(spark, tablePath).mkString("[", ", ", "]")}) — " +
+        "it was never committed, or retention pruned it")
+    version
+  }
+
+  /** Resolve which committed version a read binds to (None = empty
+    * store): the live head, or exactly one of `branch`, `versionAsOf`,
+    * `tag` or `timestampAsOf` (keys lower-cased). The refuse-don't-guess
+    * contracts are [[readSnapshotAt]]'s. */
+  private[graft] def resolvePoint(spark: SparkSession, root: String,
+                                  opts: Map[String, String]): Option[Long] = {
+    val points = Seq("branch", "versionasof", "tag", "timestampasof").flatMap(k =>
+      opts.get(k).map(k -> _))
+    require(points.size <= 1,
+      "graft-table: 'branch', 'versionAsOf', 'tag' and 'timestampAsOf' are mutually " +
+      "exclusive — each names one point to read; pick one")
+    points.headOption match {
+      case Some(("branch", b)) =>
+        Some(Branches.branchHead(spark, root, b).getOrElse(
+          throw new java.io.FileNotFoundException(s"no branch '$b' at $root")))
+      case Some(("versionasof", v)) => Some(requireReadable(spark, root, v.toLong))
+      case Some(("tag", t))         => Some(Tags.tagVersion(spark, root, t))
+      case Some((_, ts)) => // timestampasof
+        Some(versionAsOfTimestamp(spark, root, parseTsMillis(ts)))
+      case None => currentVersion(spark, root)
+    }
+  }
+
+  /** `timestampAsOf` accepts epoch millis, `yyyy-MM-dd` or a full
+    * `yyyy-MM-dd HH:mm:ss[.f…]` timestamp (interpreted in the JVM
+    * default zone, matching java.sql parsing elsewhere). */
+  private[sources] def parseTsMillis(s: String): Long =
+    scala.util.Try(s.toLong)
+      .orElse(scala.util.Try(java.sql.Timestamp.valueOf(s).getTime))
+      .orElse(scala.util.Try(java.sql.Date.valueOf(s).getTime))
+      .getOrElse(throw new IllegalArgumentException(
+        s"timestampAsOf '$s' is neither epoch millis, 'yyyy-MM-dd', nor " +
+        "'yyyy-MM-dd HH:mm:ss[.f]'"))
+
+  /** A parquet file under a version dir: its path relative to the dir
+    * (`txn_month=2024-06/part-….parquet`, `_dv/keys.parquet`), its full
+    * path and its length. */
+  private[graft] case class VersionFile(rel: String, path: Path, len: Long) {
+    /** The first-level dir the file sits in (`txn_month=…`, `_dv`,
+      * `_delta`); "" for a file at the version dir's root. */
+    def partition: String =
+      if (rel.indexOf('/') < 0) "" else rel.substring(0, rel.indexOf('/'))
+  }
+
+  /** The one walk of a version dir's parquet files, at every depth —
+    * O(files) listing; empty when the dir is gone. */
+  private[graft] def versionFiles(spark: SparkSession, vdir: String): Seq[VersionFile] = {
+    val root = new Path(vdir)
+    val fs = hadoopFs(spark, root)
+    def walk(p: Path, rel: String): Seq[VersionFile] = listOrEmpty(fs, p).flatMap { s =>
+      val r = rel + s.getPath.getName
+      if (s.isDirectory) walk(s.getPath, r + "/")
+      else if (r.endsWith(".parquet")) Seq(VersionFile(r, s.getPath, s.getLen))
+      else Nil
+    }
+    walk(root, "")
+  }
+
+  /** Claim the first free number past every version dir — committed,
+    * branch-only or abandoned — by walking [[claimNumber]] up. */
+  private[sources] def claimNext(fs: FileSystem, tablePath: String): Long =
+    claimNumber(fs, new Path(tablePath, "_claims"), (versionDirs(fs, tablePath) + 0L).max + 1, "c")
+
+  /** Delete an UNMARKED version's dir and its claim: a refused stage, a
+    * deleted branch's own versions, vacuumed crash debris. */
+  private[sources] def dropUnmarked(fs: FileSystem, tablePath: String, v: Long): Unit = {
+    fs.delete(new Path(versionDir(tablePath, v)), true)
+    fs.delete(new Path(tablePath, f"_claims/c$v%08d"), false)
+  }
+
+  /** Prune a COMMITTED version, marker FIRST: readers stop resolving it
+    * before its data disappears, and a crash in between leaves an
+    * unmarked dir, which readers already ignore. */
+  private def dropCommitted(fs: FileSystem, tablePath: String, v: Long): Unit = {
+    fs.delete(marker(tablePath, v), false)
+    fs.delete(new Path(versionDir(tablePath, v)), true)
+  }
+
+  /** Create main's marker of `v` by the bare conditional create — the
+    * fast-forward merge's commit act ([[Branches.mergeBranch]]); true
+    * iff this caller created it. */
+  private[sources] def tryMark(fs: FileSystem, tablePath: String, v: Long): Boolean =
+    tryClaim(fs, manifestsDir(tablePath), v, "m")
 
   /** Filename prefix of publish-supplied version metadata (the
     * `extraMeta` files of [[publishSnapshot]]). */
@@ -98,7 +293,7 @@ object Sinks {
     * must carry metadata forward through a content rewrite. */
   def versionMeta(spark: org.apache.spark.sql.SparkSession, tablePath: String,
                   version: Long): Map[String, String] = {
-    val vdir = new org.apache.hadoop.fs.Path(s"$tablePath/${versionDirName(version)}")
+    val vdir = new Path(versionDir(tablePath, version))
     val fs = hadoopFs(spark, vdir)
     val st =
       try Some(fs.getFileStatus(vdir))
@@ -163,9 +358,10 @@ object Sinks {
     * what commits the version (its creation is the atomic act — a
     * reader listing the name before the few content bytes land falls
     * back to mtime, which at that instant IS the commit time). */
-  private[sources] def createCommitMarker(fs: org.apache.hadoop.fs.FileSystem,
-                                          marker: org.apache.hadoop.fs.Path): Unit = {
-    val out = fs.create(marker, false)
+  private[sources] def createCommitMarker(spark: SparkSession, tablePath: String,
+                                          v: Long): Unit = {
+    val m = marker(tablePath, v)
+    val out = hadoopFs(spark, m).create(m, false)
     try out.write(System.currentTimeMillis().toString
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
@@ -178,8 +374,8 @@ object Sinks {
     * those through the bare conditional create). */
   def commitTimeMs(spark: org.apache.spark.sql.SparkSession, tablePath: String,
                    version: Long): Long = {
-    val marker = new org.apache.hadoop.fs.Path(tablePath, f"_manifests/m$version%08d")
-    commitTimeOf(hadoopFs(spark, marker), marker)
+    val m = marker(tablePath, version)
+    commitTimeOf(hadoopFs(spark, m), m)
   }
 
   private[sources] def commitTimeOf(fs: org.apache.hadoop.fs.FileSystem,
@@ -203,9 +399,8 @@ object Sinks {
   private[graft] def plantCommitTime(spark: org.apache.spark.sql.SparkSession,
                                      tablePath: String, version: Long,
                                      tsMillis: Long): Unit = {
-    val marker = new org.apache.hadoop.fs.Path(tablePath, f"_manifests/m$version%08d")
-    val fs = hadoopFs(spark, marker)
-    val out = fs.create(marker, true)
+    val m = marker(tablePath, version)
+    val out = hadoopFs(spark, m).create(m, true)
     try out.write(tsMillis.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
   }
@@ -254,15 +449,8 @@ object Sinks {
     * no dir-existence intersection — see [[listVersions]] for the
     * readable subset). */
   private[sources] def mainMarkedVersions(spark: org.apache.spark.sql.SparkSession,
-                                          tablePath: String): Set[Long] = {
-    val mdir = new org.apache.hadoop.fs.Path(tablePath, "_manifests")
-    val fs = hadoopFs(spark, mdir)
-    if (!fs.exists(mdir)) Set.empty
-    else fs.listStatus(mdir).toSeq.flatMap(_.getPath.getName match {
-      case manifestRe(n) => Some(n.toLong)
-      case _             => None
-    }).toSet
-  }
+                                          tablePath: String): Set[Long] =
+    committed(spark, tablePath).map(_._1).toSet
 
   /** One ATOMIC exact-version claim for an OCC publisher expecting to
     * commit as `expected` (built on main state `expected - 1`): skips
@@ -310,25 +498,12 @@ object Sinks {
   }
 
   /** The live (committed) version number: the newest commit marker. */
-  def currentVersion(spark: org.apache.spark.sql.SparkSession, tablePath: String): Option[Long] = {
-    val mdir = new org.apache.hadoop.fs.Path(tablePath, "_manifests")
-    val fs = hadoopFs(spark, mdir)
-    if (!fs.exists(mdir)) None
-    else fs.listStatus(mdir).toSeq.collect {
-      case s => s.getPath.getName match {
-        case manifestRe(n) => Some(n.toLong)
-        case _             => None
-      }
-    }.flatten.maxOption
-  }
+  def currentVersion(spark: org.apache.spark.sql.SparkSession, tablePath: String): Option[Long] =
+    committed(spark, tablePath).map(_._1).maxOption
 
   /** Resolved directory of the live snapshot version. */
-  def currentVersionDir(spark: org.apache.spark.sql.SparkSession, tablePath: String): String = {
-    val v = currentVersion(spark, tablePath).getOrElse(
-      throw new java.io.FileNotFoundException(
-        s"no published snapshot at $tablePath (no commit marker in _manifests)"))
-    s"$tablePath/${versionDirName(v)}"
-  }
+  def currentVersionDir(spark: org.apache.spark.sql.SparkSession, tablePath: String): String =
+    versionDir(tablePath, requireHead(spark, tablePath))
 
   // ---- Version-dir read cache -----------------------------------------
   //
@@ -440,10 +615,8 @@ object Sinks {
   def readSnapshotSkipping(spark: org.apache.spark.sql.SparkSession, tablePath: String,
                            ranges: Seq[FileStats.ColRange]): DataFrame = {
     require(ranges.nonEmpty, "skipping read needs at least one column range")
-    val v = currentVersion(spark, tablePath).getOrElse(
-      throw new java.io.FileNotFoundException(
-        s"no published snapshot at $tablePath (no commit marker in _manifests)"))
-    val vdir = s"$tablePath/${versionDirName(v)}"
+    val v = requireHead(spark, tablePath)
+    val vdir = versionDir(tablePath, v)
     val residual = FileStats.rangeFilter(ranges)
     val whole = cachedParquetRead(spark, vdir)
     versionMeta(spark, tablePath, v).get(FileStats.metaName) match {
@@ -463,21 +636,11 @@ object Sinks {
     }
   }
 
-  /** Every COMMITTED version still resolvable, ascending — the
-    * manifest numbers intersected with the version dirs that survived
-    * retention pruning. (A marker whose dir a concurrent pruner has
-    * deleted is mid-removal debris, not readable history.) */
-  def listVersions(spark: org.apache.spark.sql.SparkSession, tablePath: String): Seq[Long] = {
-    val root = new org.apache.hadoop.fs.Path(tablePath)
-    val mdir = new org.apache.hadoop.fs.Path(root, "_manifests")
-    val fs = hadoopFs(spark, mdir)
-    if (!fs.exists(mdir)) Seq.empty
-    else fs.listStatus(mdir).toSeq.flatMap(_.getPath.getName match {
-      case manifestRe(n) => Some(n.toLong)
-      case _             => None
-    }).filter(v => fs.exists(new org.apache.hadoop.fs.Path(root, versionDirName(v))))
-      .sorted
-  }
+  /** Every COMMITTED version still resolvable (main-readable),
+    * ascending — the manifest numbers intersected with the version dirs
+    * that survived retention pruning. */
+  def listVersions(spark: org.apache.spark.sql.SparkSession, tablePath: String): Seq[Long] =
+    readable(spark, tablePath, committed(spark, tablePath)).map(_._1)
 
   /** TIME TRAVEL: read a specific committed snapshot version — the
     * versioned store's historical-read half (`VERSION AS OF` in a
@@ -488,15 +651,8 @@ object Sinks {
     * reading debris — an uncommitted version DIRECTORY may be a
     * concurrent publisher mid-write and must never be served. */
   def readSnapshotAt(spark: org.apache.spark.sql.SparkSession, tablePath: String,
-                     version: Long): DataFrame = {
-    val available = listVersions(spark, tablePath)
-    if (!available.contains(version))
-      throw new java.io.FileNotFoundException(
-        s"snapshot version $version of $tablePath is not readable " +
-        s"(committed + retained: ${available.mkString("[", ", ", "]")}) — " +
-        "it was never committed, or retention pruned it")
-    cachedParquetRead(spark, s"$tablePath/${versionDirName(version)}")
-  }
+                     version: Long): DataFrame =
+    cachedParquetRead(spark, versionDir(tablePath, requireReadable(spark, tablePath, version)))
 
   /** RESTORE (Delta `RESTORE TABLE … TO VERSION AS OF` / Iceberg
     * rollback): make a retained historical version the LIVE state
@@ -539,9 +695,7 @@ object Sinks {
     require(new org.apache.hadoop.fs.Path(source).toUri !=
       new org.apache.hadoop.fs.Path(target).toUri,
       s"clone source and target are the same path ($source)")
-    val srcV = version.getOrElse(currentVersion(spark, source).getOrElse(
-      throw new java.io.FileNotFoundException(
-        s"no published snapshot at $source to clone")))
+    val srcV = version.getOrElse(requireHead(spark, source, "to clone"))
     require(currentVersion(spark, target).isEmpty,
       s"clone target $target already has committed history — clone bootstraps a " +
       "NEW table; pick an empty path (or CALL graft.system.drop_table first)")
@@ -562,7 +716,7 @@ object Sinks {
           scala.util.Try(Constraints.dropConstraint(spark, target, n)))
         throw e
     }
-    val dir = new org.apache.hadoop.fs.Path(s"$target/${versionDirName(1L)}")
+    val dir = new Path(versionDir(target, 1L))
     val sum = hadoopFs(spark, dir).getContentSummary(dir)
     (srcV, sum.getFileCount, sum.getLength)
   }
@@ -570,9 +724,7 @@ object Sinks {
   def restoreSnapshot(spark: org.apache.spark.sql.SparkSession, tablePath: String,
                       version: Long, dateCol: String,
                       retainVersions: Int = 2): Long = {
-    val head = currentVersion(spark, tablePath).getOrElse(
-      throw new java.io.FileNotFoundException(
-        s"no published snapshot at $tablePath to restore"))
+    val head = requireHead(spark, tablePath, "to restore")
     if (version == head) return head // restoring the live state is a no-op
     val state = DeletionVectors.readMergedAt(spark, tablePath, version)
     val df = if (state.columns.contains("txn_month")) state.drop("txn_month") else state
@@ -590,31 +742,30 @@ object Sinks {
     * reads, bounded by the retention window exactly as [[vacuum]] is —
     * never a data scan. */
   def history(spark: org.apache.spark.sql.SparkSession, tablePath: String): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(tablePath)
-    val mdir = new org.apache.hadoop.fs.Path(root, "_manifests")
-    val fs = hadoopFs(spark, mdir)
-    if (!fs.exists(mdir))
-      throw new java.io.FileNotFoundException(
-        s"no published snapshot at $tablePath (no commit marker in _manifests)")
-    val head = currentVersion(spark, tablePath)
-    val rows = listVersions(spark, tablePath).map { v =>
-      val ts = commitTimeMs(spark, tablePath, v)
-      val dv = versionMeta(spark, tablePath, v).get(DeletionVectors.metaName).map {
-        content =>
-          content.linesIterator.map(_.split("=", 2))
-            .collect { case Array(k, x) => k -> x }.toMap
-      }
-      val kind = dv match {
-        case None                                   => "data"
-        case Some(m) if m.get("delta").contains("true") => "upsert-link"
-        case Some(_)                                => "delete-link"
-      }
-      (v, new java.sql.Timestamp(ts), kind,
-        dv.flatMap(_.get("parent").map(_.toLong)), head.contains(v))
+    val marks = committed(spark, tablePath)
+    if (marks.isEmpty) throw noSnapshot(tablePath)
+    val head = marks.map(_._1).max
+    val fs = hadoopFs(spark, new Path(tablePath))
+    val rows = readable(spark, tablePath, marks).map { case (v, m) =>
+      val (kind, parent) = versionKind(spark, tablePath, v)
+      (v, new java.sql.Timestamp(commitTimeOf(fs, m)), kind, parent, v == head)
     }
     import spark.implicits._
     rows.toDF("version", "commit_time", "kind", "parent", "is_current")
   }
+
+  /** A version's kind — `data`, `upsert-link` or `delete-link` — and
+    * a link's chain parent. */
+  private[sources] def versionKind(spark: SparkSession, tablePath: String,
+                                   v: Long): (String, Option[Long]) =
+    versionMeta(spark, tablePath, v).get(DeletionVectors.metaName) match {
+      case None => ("data", None)
+      case Some(content) =>
+        val m = content.linesIterator.map(_.split("=", 2))
+          .collect { case Array(k, x) => k -> x }.toMap
+        (if (m.get("delta").contains("true")) "upsert-link" else "delete-link",
+          m.get("parent").map(_.toLong))
+    }
 
   /** AGE-BASED snapshot expiration (Iceberg `expireSnapshots` /
     * Delta's retention horizon — the count-based `retainVersions`
@@ -640,20 +791,19 @@ object Sinks {
                       olderThanMs: Long, keepLast: Int = 1,
                       nowMs: Long = System.currentTimeMillis()): Seq[(Long, String)] = {
     require(keepLast >= 1, "keepLast must keep at least the live version")
-    val root = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = hadoopFs(spark, root)
-    val committed = listVersions(spark, tablePath).sorted
-    if (committed.isEmpty) return Seq.empty
+    val fs = hadoopFs(spark, new Path(tablePath))
+    val commits = readable(spark, tablePath, committed(spark, tablePath))
+    if (commits.isEmpty) return Seq.empty
     val horizon = nowMs - olderThanMs
-    val last = committed.reverse.take(keepLast).toSet
-    val recent = committed.filter(commitTimeMs(spark, tablePath, _) > horizon).toSet
+    val last = commits.map(_._1).reverse.take(keepLast).toSet
+    val recent = commits.collect { case (v, m) if commitTimeOf(fs, m) > horizon => v }.toSet
     val pinned = Tags.pinnedVersions(spark, tablePath)
     // chain-close every kept version: a link's parents live as long as
     // the link does
     val roots = last ++ recent ++ pinned
     val kept = roots.flatMap(v =>
       DeletionVectors.chainVersions(spark, tablePath, v))
-    val ledger = committed.map { v =>
+    val ledger = commits.map { case (v, _) =>
       val status =
         if (recent(v)) "kept:recent"
         else if (last(v)) "kept:last"
@@ -662,10 +812,7 @@ object Sinks {
         else "expired"
       (v, status)
     }
-    ledger.collect { case (v, "expired") => v }.foreach { v =>
-      fs.delete(new org.apache.hadoop.fs.Path(root, f"_manifests/m$v%08d"), false)
-      fs.delete(new org.apache.hadoop.fs.Path(root, versionDirName(v)), true)
-    }
+    ledger.collect { case (v, "expired") => v }.foreach(dropCommitted(fs, tablePath, _))
     ledger
   }
 
@@ -687,21 +834,7 @@ object Sinks {
     * order and recorded-time order agree beyond that. */
   def versionAsOfTimestamp(spark: org.apache.spark.sql.SparkSession, tablePath: String,
                            tsMillis: Long): Long = {
-    val root = new org.apache.hadoop.fs.Path(tablePath)
-    val mdir = new org.apache.hadoop.fs.Path(root, "_manifests")
-    val fs = hadoopFs(spark, mdir)
-    if (!fs.exists(mdir))
-      throw new java.io.FileNotFoundException(
-        s"no published snapshot at $tablePath (no commit marker in _manifests)")
-    val commits = fs.listStatus(mdir).toSeq.flatMap(s => s.getPath.getName match {
-      case manifestRe(n) => Some((n.toLong, commitTimeOf(fs, s.getPath)))
-      case _             => None
-    }).filter { case (v, _) =>
-      fs.exists(new org.apache.hadoop.fs.Path(root, versionDirName(v)))
-    }
-    if (commits.isEmpty)
-      throw new java.io.FileNotFoundException(
-        s"no published snapshot at $tablePath (no commit marker in _manifests)")
+    val commits = commitTimes(spark, tablePath)
     val eligible = commits.filter(_._2 <= tsMillis)
     if (eligible.isEmpty)
       throw new java.io.FileNotFoundException(
@@ -720,26 +853,25 @@ object Sinks {
     * commits" is spelled `startingVersion = head + 1`). */
   def firstVersionAtOrAfter(spark: org.apache.spark.sql.SparkSession,
                             tablePath: String, tsMillis: Long): Long = {
-    val root = new org.apache.hadoop.fs.Path(tablePath)
-    val mdir = new org.apache.hadoop.fs.Path(root, "_manifests")
-    val fs = hadoopFs(spark, mdir)
-    if (!fs.exists(mdir))
-      throw new java.io.FileNotFoundException(
-        s"no published snapshot at $tablePath (no commit marker in _manifests)")
-    val commits = fs.listStatus(mdir).toSeq.flatMap(s => s.getPath.getName match {
-      case manifestRe(n) => Some((n.toLong, commitTimeOf(fs, s.getPath)))
-      case _             => None
-    }).filter { case (v, _) =>
-      fs.exists(new org.apache.hadoop.fs.Path(root, versionDirName(v)))
-    }
+    val commits = commitTimes(spark, tablePath)
     val eligible = commits.filter(_._2 >= tsMillis)
     if (eligible.isEmpty)
       throw new java.io.FileNotFoundException(
         s"no committed version of $tablePath at or after timestamp $tsMillis — the " +
-        s"newest commit is ${if (commits.isEmpty) "absent" else
-          s"version ${commits.maxBy(c => (c._2, c._1))._1} at ${commits.map(_._2).max}"}; " +
-        "to tail only future commits pass startingVersion = head + 1")
+        s"newest commit is version ${commits.maxBy(c => (c._2, c._1))._1} at " +
+        s"${commits.map(_._2).max}; to tail only future commits pass " +
+        "startingVersion = head + 1")
     eligible.minBy(c => (c._2, c._1))._1
+  }
+
+  /** (version, recorded commit time) of every main-readable commit;
+    * [[noSnapshot]] when there is none. */
+  private def commitTimes(spark: SparkSession, tablePath: String): Seq[(Long, Long)] = {
+    val fs = hadoopFs(spark, new Path(tablePath))
+    val commits = readable(spark, tablePath, committed(spark, tablePath))
+      .map { case (v, m) => (v, commitTimeOf(fs, m)) }
+    if (commits.isEmpty) throw noSnapshot(tablePath)
+    commits
   }
 
   /** Writer options enabling a parquet BLOOM FILTER on each given
@@ -803,18 +935,9 @@ object Sinks {
     val spark = df.sparkSession
     val root = new org.apache.hadoop.fs.Path(tablePath)
     val fs = hadoopFs(spark, root)
-    val existing: Seq[Long] =
-      if (!fs.exists(root)) Seq.empty
-      else fs.listStatus(root).toSeq.collect {
-        case s if s.isDirectory => s.getPath.getName match {
-          case versionRe(n) => Some(n.toLong)
-          case _            => None
-        }
-      }.flatten
     // own the number before writing a byte of data: a concurrent
     // publisher that guessed the same max+1 loses the conditional
     // create and moves on to the next number
-    val claimsDir = new org.apache.hadoop.fs.Path(root, "_claims")
     val next = expectedVersion match {
       // exact-version publish: ONE conditional create of that claim —
       // an abort burns nothing (no walk-up claim, no data). The OCC
@@ -827,7 +950,7 @@ object Sinks {
       // has not yet marked still aborts this publish — spurious but
       // safe; retry after it settles.)
       case Some(e) => claimExpectedVersion(spark, tablePath, e, "publish")
-      case None => claimNumber(fs, claimsDir, (existing :+ 0L).max + 1, "c")
+      case None => claimNext(fs, tablePath)
     }
     // CHECK constraints ride IN-FLIGHT: the frame is wrapped with one
     // row-level check projection ([[Constraints.guard]]) evaluated
@@ -836,7 +959,7 @@ object Sinks {
     // never created ([[Constraints.stagedWrite]])
     Constraints.stagedWrite(spark, tablePath, next) {
       writeMonthlySnapshot(Constraints.guard(df, tablePath, "publish"), dateCol,
-        s"$tablePath/${versionDirName(next)}", writerOptions, colocateMonths)
+        versionDir(tablePath, next), writerOptions, colocateMonths)
     }
     // version-scoped metadata (e.g. the evolved-schema mapping) lands
     // INSIDE the version dir, before the marker: a committed version is
@@ -853,10 +976,9 @@ object Sinks {
     val statsMeta: Map[String, String] =
       if (statsCols.isEmpty) Map.empty
       else Map(FileStats.metaName ->
-        FileStats.collect(spark, s"$tablePath/${versionDirName(next)}", statsCols))
+        FileStats.collect(spark, versionDir(tablePath, next), statsCols))
     (extraMeta ++ statsMeta).foreach { case (name, content) =>
-      val out = fs.create(
-        new org.apache.hadoop.fs.Path(root, s"${versionDirName(next)}/$metaPrefix$name"), true)
+      val out = fs.create(new Path(s"${versionDir(tablePath, next)}/$metaPrefix$name"), true)
       try out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       finally out.close()
     }
@@ -876,36 +998,24 @@ object Sinks {
     }
     // commit marker: a NEW file name under _manifests — version encoded
     // in the name (the atomic act), commit time in the content
-    val marker = new org.apache.hadoop.fs.Path(root, f"_manifests/m$next%08d")
-    createCommitMarker(fs, marker)
+    createCommitMarker(spark, tablePath, next)
     // grace-window prune over COMMITTED versions only (those with a
     // marker): a bare version dir may be a concurrent publisher still
     // writing, and its number gives no way to tell — so unmarked dirs
     // are never touched here (see the crash-safety note above)
-    val mdir = new org.apache.hadoop.fs.Path(root, "_manifests")
-    val committed: Seq[Long] = fs.listStatus(mdir).toSeq.flatMap(
-      _.getPath.getName match {
-        case manifestRe(n) => Some(n.toLong)
-        case _             => None
-      })
+    val commits = committed(spark, tablePath).map(_._1).sorted.reverse
     // tag pins survive the window: a tagged version (and its full
     // DV/MoR chain) keeps marker AND dir — reproducibility must not
     // depend on sizing the window for the oldest consumer
     val pinned = Tags.pinnedVersions(spark, tablePath)
-    committed.sorted.reverse.drop(retainVersions).filterNot(pinned).foreach { v =>
-      // marker FIRST: readers must stop resolving v before its data
-      // disappears; a crash in between leaves an unmarked dir, which
-      // readers already ignore
-      fs.delete(new org.apache.hadoop.fs.Path(root, f"_manifests/m$v%08d"), false)
-      fs.delete(new org.apache.hadoop.fs.Path(root, versionDirName(v)), true)
-    }
+    commits.drop(retainVersions).filterNot(pinned).foreach(dropCommitted(fs, tablePath, _))
     // claim sweep: every claim strictly below the oldest RETAINED
     // committed version is unreachable debris — the claims of pruned
     // versions, plus abandoned claims from crashed or expectedVersion-
     // aborted publishers. No live writer can re-claim one (the claim
     // scan starts past the retained version dirs), so inode growth
     // stays bounded by the retain window, not by publish count.
-    val keepFloor = committed.sorted.reverse.take(retainVersions).lastOption.getOrElse(0L)
+    val keepFloor = commits.take(retainVersions).lastOption.getOrElse(0L)
     val cdir = new org.apache.hadoop.fs.Path(root, "_claims")
     if (fs.exists(cdir)) fs.listStatus(cdir).foreach { s =>
       s.getPath.getName match {
@@ -981,35 +1091,19 @@ object Sinks {
     val fs = hadoopFs(spark, root)
     if (!fs.exists(root)) return Seq.empty
     val cutoff = System.currentTimeMillis() - olderThanMs
-    val marked: Set[Long] = {
-      val mdir = new org.apache.hadoop.fs.Path(root, "_manifests")
-      val main = if (!fs.exists(mdir)) Set.empty[Long]
-        else fs.listStatus(mdir).flatMap(_.getPath.getName match {
-          case manifestRe(n) => Some(n.toLong)
-          case _             => None
-        }).toSet
-      main ++ Branches.branchMarkedVersions(spark, tablePath)
-    }
+    val marked = mainMarkedVersions(spark, tablePath) ++
+      Branches.branchMarkedVersions(spark, tablePath)
     def newestMtime(p: org.apache.hadoop.fs.Path): Long = {
       val st = fs.getFileStatus(p)
       if (!st.isDirectory) st.getModificationTime
       else (st.getModificationTime +:
         fs.listStatus(p).map(s => newestMtime(s.getPath)).toSeq).max
     }
-    val dirs: Seq[Long] = fs.listStatus(root).toSeq.collect {
-      case s if s.isDirectory => s.getPath.getName match {
-        case versionRe(n) => Some(n.toLong)
-        case _            => None
-      }
-    }.flatten
-    val vacuumedDirs = dirs.filterNot(marked)
-      .filter(v => newestMtime(new org.apache.hadoop.fs.Path(root, versionDirName(v))) < cutoff)
-      .sorted.map { v =>
-        fs.delete(new org.apache.hadoop.fs.Path(root, versionDirName(v)), true)
-        fs.delete(new org.apache.hadoop.fs.Path(root, f"_claims/c$v%08d"), false)
-        v -> "abandoned_dir"
-      }
-    val dirSet = dirs.toSet -- vacuumedDirs.map(_._1)
+    val dirs = versionDirs(fs, tablePath)
+    val vacuumedDirs = dirs.toSeq.filterNot(marked)
+      .filter(v => newestMtime(new Path(versionDir(tablePath, v))) < cutoff)
+      .sorted.map { v => dropUnmarked(fs, tablePath, v); v -> "abandoned_dir" }
+    val dirSet = dirs -- vacuumedDirs.map(_._1)
     val cdir = new org.apache.hadoop.fs.Path(root, "_claims")
     val vacuumedClaims = (if (!fs.exists(cdir)) Seq.empty[(Long, String)]
       else fs.listStatus(cdir).toSeq.flatMap { s =>
@@ -1031,18 +1125,8 @@ object Sinks {
     * abandoned version number. */
   private[graft] def plantAbandonedVersion(df: DataFrame, dateCol: String,
                                            tablePath: String): Long = {
-    val spark = df.sparkSession
-    val root = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = hadoopFs(spark, root)
-    val existing: Seq[Long] = fs.listStatus(root).toSeq.collect {
-      case s if s.isDirectory => s.getPath.getName match {
-        case versionRe(n) => Some(n.toLong)
-        case _            => None
-      }
-    }.flatten
-    val v = claimNumber(fs, new org.apache.hadoop.fs.Path(root, "_claims"),
-      (existing :+ 0L).max + 1, "c")
-    writeMonthlySnapshot(df, dateCol, s"$tablePath/${versionDirName(v)}", Map.empty)
+    val v = claimNext(hadoopFs(df.sparkSession, new Path(tablePath)), tablePath)
+    writeMonthlySnapshot(df, dateCol, versionDir(tablePath, v), Map.empty)
     v
   }
 
@@ -1050,18 +1134,8 @@ object Sinks {
     * publisher that died between claim and first byte, or an
     * `expectedVersion` abort above the keep-floor sweep). */
   private[graft] def plantOrphanClaim(spark: org.apache.spark.sql.SparkSession,
-                                      tablePath: String): Long = {
-    val root = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = hadoopFs(spark, root)
-    val existing: Seq[Long] = fs.listStatus(root).toSeq.collect {
-      case s if s.isDirectory => s.getPath.getName match {
-        case versionRe(n) => Some(n.toLong)
-        case _            => None
-      }
-    }.flatten
-    claimNumber(fs, new org.apache.hadoop.fs.Path(root, "_claims"),
-      (existing :+ 0L).max + 1, "c")
-  }
+                                      tablePath: String): Long =
+    claimNext(hadoopFs(spark, new Path(tablePath)), tablePath)
 
   /** Registered `q_vacuum` (hash-oracled): the full crash-debris
     * lifecycle against a constant oracle. The fixture (once per JVM)
@@ -1151,9 +1225,7 @@ object Sinks {
     require(maxAttempts >= 1, "maxAttempts must be positive")
     var lastRace: ConcurrentSnapshotUpdate = null
     (1 to maxAttempts).foreach { _ =>
-      val compacting0 = currentVersion(spark, tablePath).getOrElse(
-        throw new java.io.FileNotFoundException(
-          s"no published snapshot at $tablePath (no commit marker in _manifests)"))
+      val compacting0 = requireHead(spark, tablePath)
       // a deletion-vector / MoR commit has no data files of its own —
       // its version dir holds only the vector and delta. Maintenance
       // must FOLD THE CHAIN first (the Delta/Hudi "compaction is
@@ -1171,12 +1243,10 @@ object Sinks {
           }
         } else compacting0
       if (compacting >= 0) {
-      val vdir = new org.apache.hadoop.fs.Path(s"$tablePath/${versionDirName(compacting)}")
-      val fs = hadoopFs(spark, vdir)
-      val monthDirs = fs.listStatus(vdir).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("txn_month="))
-      val totalBytes = monthDirs.map(d => fs.listStatus(d.getPath).map(_.getLen).sum).sum
-      val df = spark.read.parquet(vdir.toString).drop("txn_month")
+      val vdir = versionDir(tablePath, compacting)
+      val totalBytes = versionFiles(spark, vdir)
+        .filter(_.partition.startsWith("txn_month=")).map(_.len).sum
+      val df = spark.read.parquet(vdir).drop("txn_month")
       val totalRows = df.count() // parquet footer counts — no data read
       val bytesPerRow = math.max(1L, totalBytes / math.max(1L, totalRows))
       val rowsPerFile = math.max(1L, targetFileBytes / bytesPerRow)

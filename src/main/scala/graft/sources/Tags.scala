@@ -47,9 +47,7 @@ object Tags {
     * still writing. */
   def createTag(spark: SparkSession, tablePath: String, name: String,
                 version: Option[Long] = None): Long = {
-    val v = version.orElse(Sinks.currentVersion(spark, tablePath)).getOrElse(
-      throw new java.io.FileNotFoundException(
-        s"cannot tag $tablePath: no published snapshot"))
+    val v = version.getOrElse(Sinks.requireHead(spark, tablePath, "to tag"))
     val committed = Sinks.listVersions(spark, tablePath)
     require(committed.contains(v),
       s"cannot tag version $v of $tablePath: not a committed, retained version " +

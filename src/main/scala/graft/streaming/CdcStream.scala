@@ -71,9 +71,6 @@ object CdcStream {
         }
       }
 
-  /** Daily cadence, like the reference's CRON trigger. */
-  def dailyTrigger: Trigger = Trigger.ProcessingTime("24 hours")
-
   /** The micro-batch's resolved source files — driver-side metadata
     * (the file source already listed them), so admission/sizing
     * decisions cost no Spark job. Falls back to a limit-1 probe for

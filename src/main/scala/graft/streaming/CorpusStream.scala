@@ -119,27 +119,15 @@ object CorpusStream {
       .toDF("doc_id", "content_sha", "text", "lang", "source")
   }
 
-  /** value-bytes → typed document rows; shared by the Kafka entry and
-    * its broker-less spec. Malformed payloads parse to null doc_id and
-    * are dropped — same corrupt-tolerance as the file reader. */
+  /** value-bytes → typed document rows of a Kafka topic's records.
+    * Malformed payloads parse to null doc_id and are dropped — same
+    * corrupt-tolerance as the file reader. */
   def parseKafkaDocs(kafkaRows: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.StringType
     kafkaRows
       .select(from_json(col("value").cast(StringType), JsonlDocs.schema).as("d"))
       .select("d.*")
       .filter(col("doc_id").isNotNull && col("text").isNotNull)
-  }
-
-  /** Production ingest entry: documents arriving as JSON values on a
-    * Kafka topic (the crawl-output bus) instead of file drops — same
-    * options contract as the events binding (EventsPipeline), same
-    * downstream dedup. No broker in the sandbox: the spec pins the
-    * options and the parse transform. */
-  def ingestKafka(spark: SparkSession, bootstrap: String, topic: String): DataFrame = {
-    val raw = spark.readStream.format("kafka")
-      .options(EventsPipeline.kafkaOptions(bootstrap, topic))
-      .load()
-    streamingIngestDedup(parseKafkaDocs(raw))
   }
 
   /** End-to-end: watched JSONL directory → content dedup → append-only

@@ -261,6 +261,17 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("SelectedBucketsCount") || p.contains("Bucketed: true"), p)
   }
 
+  test("bucket-join revenue rewrites both bucketed tables at one location per data dir") {
+    def locations(): Set[String] = {
+      operators.ReferenceOps.bucketJoinRevenue(spark, sf).collect()
+      operators.ReferenceOps.bucketedJoin(spark, sf).inputFiles
+        .map(f => new org.apache.hadoop.fs.Path(f).getParent.toString).toSet
+    }
+    val first = locations()
+    assert(first.size === 2, first)
+    assert(locations() === first)
+  }
+
   test("domain filter and boilerplate removal join through broadcasts only") {
     // the blocklist and the frequent-line set are both small-by-
     // construction: a SortMergeJoin would shuffle every host suffix /
